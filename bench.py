@@ -216,7 +216,9 @@ def bench_merge_upsert(spark, sf_dir: str) -> float:
     """
     from pyspark.sql import functions as F
 
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet").withColumn(
+    from etl_mudah_spark.tables import load
+
+    orders = load(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate")
     )
     max_year, max_key = orders.agg(
@@ -951,12 +953,13 @@ def run_duckdb(sf_dir: str, names: list[str], threads: int) -> dict[str, float]:
     skipped, matching the baseline table."""
     import duckdb
 
+    from etl_mudah_spark.operators.manifest import manifest_resolve
     from etl_mudah_spark.tables import TABLES
 
     con = duckdb.connect()
     con.execute(f"SET threads TO {threads}")
     for t in TABLES:
-        p = os.path.join(sf_dir, f"{t}.parquet")
+        p = manifest_resolve(os.path.join(sf_dir, f"{t}.parquet"))
         if not os.path.exists(p):
             continue  # partial stagings (x100 subset) carry only the
             # tables their query subset reads

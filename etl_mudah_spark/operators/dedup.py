@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from etl_mudah_spark.operators.ckpt import materialize_once as _checkpoint
+from etl_mudah_spark.operators.manifest import manifest_resolve
 from etl_mudah_spark.operators.text import WHITESPACE_RE
 
 
@@ -309,11 +310,11 @@ def minhash_index_append(
         batch, id_col, text_col, num_hashes, bands, shingle_n
     )
     buckets.write.mode("append").partitionBy("band_id").parquet(
-        f"{path}/bands"
+        manifest_resolve(f"{path}/bands")
     )
     batch.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    ).write.mode("append").parquet(f"{path}/shingles")
+    ).write.mode("append").parquet(manifest_resolve(f"{path}/shingles"))
 
 
 def minhash_index_compact(
@@ -327,26 +328,21 @@ def minhash_index_compact(
     ``minhash_index_append`` writes a few files per micro-batch, and a
     year of 12-h triggers turns each band partition into ~10^3 tiny
     files whose listing + footer reads dominate the incremental-dedup
-    probe's planning time. Runs ``layout.compact_files`` (staged
-    rewrite, rename swap, crash-recoverable) on every ``band_id=``
-    partition INDIVIDUALLY — the hive layout carries band_id in the
-    directory name, so per-partition rewrites preserve the
-    planning-time band pruning the index exists for — then on the
-    shingles dir. Quiesce the ingest stream for the swap (same
-    contract as compact_files). Returns the new total file count.
+    probe's planning time. Runs ``layout.compact_files`` on the bands
+    and shingles sub-tables, one manifest publish each; the bands table
+    keeps its ``band_id=`` hive layout (each band partition sized on
+    its own bytes), so the planning-time band pruning the index exists
+    for survives. No ``minhash_index_append`` may run until it returns
+    (same contract as compact_files). Returns the new total file count.
 
     Dedup results are EXACTLY unchanged (same rows, relocated) —
     pinned in tests/test_dedup.py.
     """
-    import glob as _glob
-
     from etl_mudah_spark.operators.layout import compact_files
 
-    n = 0
-    for band_dir in sorted(_glob.glob(f"{path}/bands/band_id=*")):
-        n += compact_files(
-            spark, band_dir, target_file_bytes, max_files=max_files
-        )
+    n = compact_files(
+        spark, f"{path}/bands", target_file_bytes, max_files=max_files
+    )
     n += compact_files(
         spark, f"{path}/shingles", target_file_bytes, max_files=max_files
     )
@@ -381,7 +377,7 @@ def minhash_dedup_incremental(
     verification reads only the candidate ids' shingle rows.
     """
     nb = minhash_band_buckets(batch, id_col, text_col, num_hashes, bands, shingle_n)
-    corpus = spark.read.parquet(f"{index_path}/bands")
+    corpus = spark.read.parquet(manifest_resolve(f"{index_path}/bands"))
     cands = (
         corpus.alias("c")
         .join(
@@ -395,9 +391,9 @@ def minhash_dedup_incremental(
         )
         .distinct()
     )
-    corpus_sh = spark.read.parquet(f"{index_path}/shingles").select(
-        F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a")
-    )
+    corpus_sh = spark.read.parquet(
+        manifest_resolve(f"{index_path}/shingles")
+    ).select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
     batch_sh = batch.select(
         F.col(id_col).alias("doc_b"),
         word_shingles(F.col(text_col), shingle_n).alias("sh_b"),

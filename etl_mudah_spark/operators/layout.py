@@ -268,11 +268,10 @@ def compact_files(
     sort_within_by: Sequence[str] | None = None,
     max_files: int | None = None,
     zorder_by: Sequence[str] | None = None,
-    swap: str = "rename",
     row_group_bytes: int | None = None,
 ) -> int:
-    """Compact a parquet directory's small files into ~target-size
-    files, returning the new file count.
+    """Compact a parquet table's small files into ~target-size files,
+    returning the new file count.
 
     The small-files problem is the dominant operational failure of
     long-running ingest at scale: a 12-h micro-batch cadence writing a
@@ -284,16 +283,18 @@ def compact_files(
     selective again (the layout-level substitute for the reference's
     btree index on listing_date, SURVEY.md §4).
 
-    Safe rewrite discipline: write to a sibling staging dir, then swap
-    by renames — the original moves aside intact before the staging dir
-    takes its place, so a crash anywhere leaves a complete copy under
-    a well-known name and the dataset-missing window is one rename, not
-    a full delete. Callers MUST quiesce readers for the swap: a reader
-    opening the path between the two renames sees it missing. A crash
-    in that window is self-healing — :func:`recover_compaction` runs
-    first on every call (and can be invoked standalone at startup) and
-    renames the intact ``._precompact`` copy back if the dataset is
-    absent.
+    Hive-partitioned tables (``k=v/`` dirs, worked out from the layout)
+    compact as ONE table: every partition dir is rewritten with its
+    own bytes/target file count, so the partition columns and the
+    planning-time pruning they buy survive the rewrite.
+
+    The rewrite publishes through operators/manifest.py: it lands in a
+    fresh versioned directory under ``path`` and one atomic
+    ``_current`` pointer write makes it live — readers resolve the
+    pointer (``manifest_resolve``) and never see a partial table; a
+    crash before the flip leaves an orphan the next publish prunes.
+    The first compaction migrates a plain parquet directory in place.
+    No appender may write to ``path`` while the compaction runs.
 
     ``row_group_bytes`` caps the parquet row-group size of the
     rewritten files (default: parquet's 128 MB). Row groups are the
@@ -306,40 +307,12 @@ def compact_files(
     while staying far above the footer-overhead floor. (Measured here:
     the x100 bench point's 14 x 106 MB single-row-group lineitem
     pinned scans to 14 of 32 cores.)
-
-    ``swap="manifest"`` selects the object-store-safe strategy
-    (operators/manifest.py): the compacted layout lands in a fresh
-    versioned directory under ``path`` and a single atomic ``_current``
-    pointer write publishes it — no rename of data objects, no
-    dataset-missing window, no reader quiescing (readers resolve the
-    pointer via ``manifest_resolve``). The first manifest compaction
-    migrates a plain parquet directory in place.
     """
     import math
     import os
-    import shutil
 
-    if swap not in ("rename", "manifest"):
-        raise ValueError(f"swap must be 'rename' or 'manifest', got {swap!r}")
-    if swap == "manifest":
-        from etl_mudah_spark.operators.manifest import manifest_resolve
+    from etl_mudah_spark.operators.manifest import manifest_publish, manifest_resolve
 
-        data_path = manifest_resolve(path)
-    else:
-        recover_compaction(path)
-        data_path = path
-    size = sum(
-        os.path.getsize(os.path.join(dp, f))
-        for dp, _, fs in os.walk(data_path)
-        for f in fs
-        if not f.startswith(("_", "."))
-    )
-    n_files = max(1, math.ceil(size / target_file_bytes))
-    if max_files is not None:
-        # Optional fan-out ceiling: files always track BYTES (a fixed
-        # split makes tiny tables slower — measured in bench.py), the
-        # cap only bounds the count for pathologically small targets.
-        n_files = min(n_files, max_files)
     if zorder_by and sort_within_by:
         raise ValueError(
             "pass either zorder_by or sort_within_by, not both — the "
@@ -347,73 +320,67 @@ def compact_files(
             "dropping the requested sort would silently drop its "
             "pruning downstream"
         )
-    df = spark.read.parquet(data_path)
-    if zorder_by:
-        # GLOBAL clustering: range-partition on the Morton key so each
-        # output file owns a contiguous z-range (a hyper-rectangle-ish
-        # region of the clustered dims), then sort within — footer
-        # min/max stats become selective on every zorder column.
-        key = zorder_key(df, zorder_by)
-        out = (
-            df.withColumn("_zkey", key)
-            .repartitionByRange(n_files, "_zkey")
-            .sortWithinPartitions("_zkey")
-            .drop("_zkey")
-        )
-    else:
-        out = df.repartition(n_files)
-        if sort_within_by:
-            out = out.sortWithinPartitions(*sort_within_by)
-    writer = out.write.mode("overwrite")
-    if row_group_bytes is not None:
-        writer = writer.option("parquet.block.size", str(row_group_bytes))
-    if swap == "manifest":
-        from etl_mudah_spark.operators.manifest import manifest_publish
+    data_path = manifest_resolve(path)
 
-        new_dir = manifest_publish(path, lambda d: writer.parquet(d))
-        final = new_dir
-    else:
-        staging = path.rstrip("/") + "._compacting"
-        retired = path.rstrip("/") + "._precompact"
-        writer.parquet(staging)
-        shutil.rmtree(retired, ignore_errors=True)
-        os.rename(path, retired)
-        os.rename(staging, path)
-        shutil.rmtree(retired)
-        final = path
-    return len(
-        [
-            f
-            for f in os.listdir(final)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
+    def data_files(d: str) -> list[str]:
+        return [
+            os.path.join(d, f)
+            for f in os.listdir(d)
+            if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(d, f))
         ]
+
+    def rewrite(src: str, dst: str) -> None:
+        size = sum(os.path.getsize(f) for f in data_files(src))
+        n_files = max(1, math.ceil(size / target_file_bytes))
+        if max_files is not None:
+            # Optional fan-out ceiling: files always track BYTES (a fixed
+            # split makes tiny tables slower — measured in bench.py), the
+            # cap only bounds the count for pathologically small targets.
+            n_files = min(n_files, max_files)
+        df = spark.read.parquet(src)
+        if zorder_by:
+            # GLOBAL clustering: range-partition on the Morton key so each
+            # output file owns a contiguous z-range (a hyper-rectangle-ish
+            # region of the clustered dims), then sort within — footer
+            # min/max stats become selective on every zorder column.
+            key = zorder_key(df, zorder_by)
+            out = (
+                df.withColumn("_zkey", key)
+                .repartitionByRange(n_files, "_zkey")
+                .sortWithinPartitions("_zkey")
+                .drop("_zkey")
+            )
+        else:
+            out = df.repartition(n_files)
+            if sort_within_by:
+                out = out.sortWithinPartitions(*sort_within_by)
+        writer = out.write.mode("overwrite")
+        if row_group_bytes is not None:
+            writer = writer.option("parquet.block.size", str(row_group_bytes))
+        writer.parquet(dst)
+
+    def write(new_dir: str) -> None:
+        # leaf dirs holding data: "." for a flat table, "k=v[/k2=v2]"
+        # per partition of a hive-partitioned one (listed here, after
+        # the publish pruned any orphan version dir of a crashed run)
+        parts = []
+        for dp, dirs, _ in os.walk(data_path):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            if data_files(dp):
+                parts.append(os.path.relpath(dp, data_path))
+        for rel in parts or ["."]:
+            rewrite(
+                os.path.join(data_path, rel),
+                os.path.normpath(os.path.join(new_dir, rel)),
+            )
+
+    new_dir = manifest_publish(path, write)
+    return sum(
+        1
+        for _, _, fs in os.walk(new_dir)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
     )
-
-
-def recover_compaction(path: str) -> bool:
-    """Heal an interrupted :func:`compact_files` swap; True if healed.
-
-    Crash matrix: (a) dataset present — any leftover ``._compacting`` /
-    ``._precompact`` dirs are incomplete or already-superseded garbage,
-    delete them; (b) dataset MISSING with ``._precompact`` present —
-    the crash hit between the two swap renames; the retired copy is the
-    complete original, rename it back. Run at startup (or rely on the
-    call at the top of every compact_files) so a crashed compaction
-    never needs manual surgery.
-    """
-    import os
-    import shutil
-
-    staging = path.rstrip("/") + "._compacting"
-    retired = path.rstrip("/") + "._precompact"
-    healed = False
-    if not os.path.exists(path) and os.path.exists(retired):
-        os.rename(retired, path)
-        healed = True
-    if os.path.exists(path):
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(retired, ignore_errors=True)
-    return healed
 
 
 def filtered_scan_bytes_bound(path: str, col: str, gt: float) -> int | None:
@@ -512,7 +479,6 @@ def compact_maintain(
     target_file_bytes: int = 256 * 1024 * 1024,
     sort_within_by: Sequence[str] | None = None,
     zorder_by: Sequence[str] | None = None,
-    swap: str = "manifest",
 ) -> int | None:
     """Measure-then-act compaction policy (the layout twin of
     ``similarity.ivf_maintain``): count the table's data files and
@@ -524,9 +490,8 @@ def compact_maintain(
     This is the piece a streaming ingest loop schedules after every
     N batches: the merge/append writers create files at trigger
     cadence, and WHETHER that has become a problem is a property of
-    the file count, not of time. Default ``swap="manifest"`` because a
-    maintenance loop must not require reader quiescing (the rename
-    strategy's documented caveat).
+    the file count, not of time. The rewrite is a manifest publish
+    (:func:`compact_files`), so readers never need quiescing.
     """
     n = count_data_files(path)
     if n <= max_small_files:
@@ -537,5 +502,4 @@ def compact_maintain(
         target_file_bytes=target_file_bytes,
         sort_within_by=sort_within_by,
         zorder_by=zorder_by,
-        swap=swap,
     )

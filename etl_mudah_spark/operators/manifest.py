@@ -1,32 +1,32 @@
-"""Manifest-pointer table swaps — the object-store-safe alternative to
-rename-based directory replacement (VERDICT r6 item 5).
+"""Manifest-pointer table publication — the ONE way a table is
+replaced in this engine (compaction, SCD2 history rebuilds, IVF/IVF-PQ
+index builds and re-fits, IVM aggregate refreshes).
 
-The rename swap in :func:`etl_mudah_spark.operators.layout.compact_files`
-and the SCD2 history writer relies on POSIX rename atomicity and
-constant-time directory moves. On S3-style object stores neither holds:
-"rename" is a copy+delete over every object (O(bytes), non-atomic, and
-a crash mid-copy leaves a half table under the live name). The
-standard fix — what Delta/Iceberg/Hive-ACID all reduce to — is to
-never move data at all:
+Directory renames are not a portable swap primitive: on S3-style object
+stores "rename" is a copy+delete over every object (O(bytes),
+non-atomic, and a crash mid-copy leaves a half table under the live
+name). The standard fix — what Delta/Iceberg/Hive-ACID all reduce to —
+is to never move data at all:
 
 - each rewrite lands in a fresh, immutable, versioned directory
   (``<base>/v=00000042/``), fully written before anyone can see it;
 - a single tiny pointer object (``<base>/_current``) names the live
   version; publishing = writing the pointer, which is one atomic
   single-object PUT (``os.replace`` locally — the same primitive);
-- readers resolve the pointer, then read only that directory. A reader
-  mid-scan of the old version keeps a consistent snapshot because old
-  versions are immutable and pruned only past a retention count.
+- readers AND appenders resolve the pointer once at their entry point
+  (:func:`manifest_resolve`), then touch only that directory. Reading
+  ``<base>`` itself would make Spark's partition discovery see ``v`` as
+  a column; appending there would land beside the version dirs. A
+  reader mid-scan of the old version keeps a consistent snapshot
+  because superseded versions are pruned only past a retention count.
 
-Crash matrix (strictly simpler than the rename dance): a crash during
-or after a version write but before the pointer flip leaves an
-UNREFERENCED directory — garbage, pruned on the next publish or
-:func:`manifest_recover`; the live table was never touched. There is
-no dataset-missing window and no reader quiescing requirement.
-
-Layout/SCD2 keep the rename strategy as the local-FS default (one
-directory, ``spark.read.parquet(path)`` just works); ``swap="manifest"``
-selects this module behind the same API.
+Crash matrix: a crash during or after a version write but before the
+pointer flip leaves an UNREFERENCED directory — garbage, pruned on the
+next publish or :func:`manifest_recover`; the live table was never
+touched. There is no dataset-missing window and no reader quiescing.
+The one contract left to callers: no appender may write into the live
+version while a compaction or rebuild of the same table runs (its rows
+would land in the superseded version and vanish from the new one).
 """
 
 from __future__ import annotations
@@ -70,18 +70,18 @@ def manifest_publish(
     base: str,
     write: Callable[[str], None],
     keep: int = 1,
-    clean_loose: bool = True,
 ) -> str:
     """Publish a new table version: ``write(new_dir)`` materializes the
     data (e.g. ``df.write.parquet(new_dir)``), then the ``_current``
     pointer flips to it atomically. Returns the new version dir.
 
     ``keep`` retains that many SUPERSEDED versions for in-flight
-    readers (0 = prune immediately after flip). ``clean_loose`` removes
-    pre-migration loose parquet files from ``base`` after the first
-    publish so the directory doesn't double-count in size scans.
-    Unreferenced version dirs from crashed publishes are pruned here
-    too — publish is self-healing, like recover_compaction.
+    readers (0 = prune immediately after flip). Every other entry of
+    ``base`` — the loose files, ``k=v/`` partition dirs and sidecars of
+    a plain directory being migrated, or of a migration a crash cut
+    short — is removed after the flip, so ``base`` holds only the
+    pointer and version dirs. Unreferenced version dirs from crashed
+    publishes are pruned before the write: publish is self-healing.
     """
     os.makedirs(base, exist_ok=True)
     manifest_recover(base)
@@ -94,7 +94,6 @@ def manifest_publish(
         raise RuntimeError(
             f"manifest_publish: writer produced no directory at {new_dir}"
         )
-    prev = manifest_current(base)
     # the atomic pointer flip: single-object replace (a PUT on an
     # object store); readers see either the old name or the new one
     tmp = os.path.join(base, CURRENT + ".tmp")
@@ -107,11 +106,14 @@ def manifest_publish(
     ]
     for d in superseded[: max(0, len(superseded) - keep)]:
         shutil.rmtree(os.path.join(base, d), ignore_errors=True)
-    if clean_loose and prev is None:
-        for f in os.listdir(base):
-            p = os.path.join(base, f)
-            if os.path.isfile(p) and not f.startswith(("_", ".")):
-                os.remove(p)
+    for f in os.listdir(base):
+        p = os.path.join(base, f)
+        if f == CURRENT or f.startswith(_VPREFIX):
+            continue
+        if os.path.isdir(p):
+            shutil.rmtree(p, ignore_errors=True)
+        else:
+            os.remove(p)
     return new_dir
 
 

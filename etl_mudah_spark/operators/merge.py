@@ -11,8 +11,8 @@ Vanilla-Spark implementation (no Delta in this environment — with
 Delta this is a one-statement MERGE INTO, noted per SURVEY §2 S7):
 read target ∪ staged with a source marker, keep-one-per-key by
 (priority, order), preserve created_at from the target row while
-taking volatile columns from the staged row, rewrite atomically
-(write tmp → swap). Scale design:
+taking volatile columns from the staged row, stage the result, then
+overwrite the table from the stage through the committer. Scale design:
 
 - the union+window is ONE shuffle on the key — the same cost class as
   Delta's merge join;
@@ -30,6 +30,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+
+from etl_mudah_spark.operators.manifest import manifest_current
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -129,8 +131,23 @@ def merge_upsert(
     The merged frame is staged to a scratch dir first because Spark
     (correctly) refuses to overwrite a path its own plan is reading;
     the final write replaces ONLY the partitions present in the batch
-    via the committer, not a hand-rolled directory swap.
+    via the committer, not a hand-rolled directory swap. The stage is
+    deleted only once that write succeeds: Spark's overwrite clears
+    ``table_path`` before its job runs, so on failure the stage is the
+    only complete copy and the raised error names it.
+
+    A table that :func:`~etl_mudah_spark.operators.layout.compact_files`
+    published as a manifest table is read through its live version and
+    rewritten as a plain directory. With ``partition_col`` that would
+    be a dynamic overwrite beside the version dirs, so it raises.
     """
+    live = manifest_current(table_path)
+    if live is not None and partition_col:
+        raise ValueError(
+            f"merge_upsert: {table_path!r} is a manifest-published table; "
+            "a dynamic partition overwrite would land beside its version "
+            "dirs — merge without partition_col or rewrite it plain first"
+        )
     fs, table_jpath = _hadoop_fs(spark, table_path)
     exists = fs.exists(table_jpath)
     if exists and partition_col:
@@ -139,7 +156,7 @@ def merge_upsert(
             F.col(partition_col).isin(parts)
         )
     elif exists:
-        target = spark.read.parquet(table_path)
+        target = spark.read.parquet(live or table_path)
     else:
         target = None
 
@@ -167,17 +184,21 @@ def merge_upsert(
         stage_writer = stage_writer.partitionBy(partition_col)
     stage_writer.parquet(tmp)
 
+    final = spark.read.parquet(tmp)
+    writer = final.write.mode("overwrite")
+    if partition_col:
+        # Dynamic overwrite: only partitions present in `final`
+        # (exactly the batch's partitions) are replaced; untouched
+        # partitions keep their files.
+        writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
+            partition_col
+        )
     try:
-        final = spark.read.parquet(tmp)
-        writer = final.write.mode("overwrite")
-        if partition_col:
-            # Dynamic overwrite: only partitions present in `final`
-            # (exactly the batch's partitions) are replaced; untouched
-            # partitions keep their files.
-            writer = writer.option("partitionOverwriteMode", "dynamic").partitionBy(
-                partition_col
-            )
         writer.parquet(table_path)
-    finally:
-        tmp_fs, tmp_jpath = _hadoop_fs(spark, tmp)
-        tmp_fs.delete(tmp_jpath, True)
+    except Exception as exc:
+        raise RuntimeError(
+            f"merge_upsert: writing {table_path!r} failed; the merged "
+            f"table is intact at {tmp!r}"
+        ) from exc
+    tmp_fs, tmp_jpath = _hadoop_fs(spark, tmp)
+    tmp_fs.delete(tmp_jpath, True)

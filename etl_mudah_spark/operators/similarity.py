@@ -26,6 +26,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_mudah_spark.operators.manifest import (
+    manifest_publish,
+    manifest_recover,
+    manifest_resolve,
+)
+
 
 def as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
@@ -710,7 +716,10 @@ def ivf_build_index(
 
     Centroids (n_cells × dim doubles — tiny) are written under
     ``_centroids``; the underscore prefix keeps the dir invisible to
-    the partitioned table scan.
+    the partitioned table scan. The build is a manifest publish
+    (operators/manifest.py; version 1 on a fresh path), so a rebuild
+    over a live index is atomic; every reader and appender of the index
+    resolves the live version first.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -719,13 +728,16 @@ def ivf_build_index(
     km = KMeans(k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="cell")
     model = km.fit(feats.select("_feat"))
     assigned = model.transform(feats).drop("_feat")
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    spark = df.sparkSession
-    centroids = spark.createDataFrame(
+    centroids = df.sparkSession.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, centroid array<double>",
     )
-    centroids.coalesce(1).write.mode("overwrite").parquet(f"{index_path}/_centroids")
+
+    def write(d: str) -> None:
+        assigned.write.partitionBy("cell").parquet(d)
+        centroids.coalesce(1).write.parquet(f"{d}/_centroids")
+
+    manifest_publish(index_path, write)
 
 
 def ivf_index_append(
@@ -748,8 +760,9 @@ def ivf_index_append(
     periodic :func:`ivf_build_index` re-balance, the standard
     IVF-serving tradeoff.
     """
+    live = manifest_resolve(index_path)
     cents = sorted(
-        spark.read.parquet(f"{index_path}/_centroids").collect(),
+        spark.read.parquet(f"{live}/_centroids").collect(),
         key=lambda r: r["cell"],
     )
     v = as_double(F.col(vec_col))
@@ -769,7 +782,7 @@ def ivf_index_append(
     cell = (F.array_position(arr, F.array_min(arr)) - 1).cast("int")
     batch.withColumn("cell", cell).write.mode("append").partitionBy(
         "cell"
-    ).parquet(index_path)
+    ).parquet(live)
 
 
 def ivf_query_index(
@@ -788,13 +801,14 @@ def ivf_query_index(
     predicate Spark resolves at planning time, so unmatched partitions
     are never listed, opened, or scheduled.
     """
-    centroids = spark.read.parquet(f"{index_path}/_centroids").collect()
+    live = manifest_resolve(index_path)
+    centroids = spark.read.parquet(f"{live}/_centroids").collect()
     dists = [
         (r["cell"], sum((c - q) ** 2 for c, q in zip(r["centroid"], query_vec)))
         for r in centroids
     ]
     probe = [cell for cell, _ in sorted(dists, key=lambda t: t[1])[:n_probe]]
-    cand = spark.read.parquet(index_path).where(F.col("cell").isin(probe))
+    cand = spark.read.parquet(live).where(F.col("cell").isin(probe))
     return brute_force_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -824,7 +838,8 @@ def ivf_query_index_df(
     not post-filter, so a selective predicate cannot starve the top-k
     the way post-filtering a global shortlist can.
     """
-    cents = spark.read.parquet(f"{index_path}/_centroids")
+    live = manifest_resolve(index_path)
+    cents = spark.read.parquet(f"{live}/_centroids")
     d2 = F.aggregate(
         F.zip_with(F.col("centroid"), F.col("_pv"), lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
@@ -838,7 +853,7 @@ def ivf_query_index_df(
         .limit(n_probe)
         .collect()
     ]
-    scan = spark.read.parquet(index_path).where(F.col("cell").isin(cells))
+    scan = spark.read.parquet(live).where(F.col("cell").isin(cells))
     if where is not None:
         scan = scan.where(where)
     return brute_force_topk_df(scan, probe, k=k, id_col=id_col, vec_col=vec_col)
@@ -1120,11 +1135,11 @@ def srp_index_append(
     buckets = srp_buckets_udf(dim, n_planes, n_tables)
     batch.select(
         F.col(id_col), buckets(F.col(vec_col)).alias("bkts")
-    ).write.mode("append").parquet(f"{path}/buckets")
+    ).write.mode("append").parquet(manifest_resolve(f"{path}/buckets"))
     batch.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("v")
     ).withColumn("norm", l2_norm(F.col("v"))).write.mode("append").parquet(
-        f"{path}/vectors"
+        manifest_resolve(f"{path}/vectors")
     )
 
 
@@ -1138,9 +1153,9 @@ def srp_index_compact(
     twin of ``dedup.minhash_index_compact``: per-trigger
     ``srp_index_append`` writes accumulate until listing + footer
     reads dominate the per-batch probe's planning time. Runs
-    ``layout.compact_files`` (staged rewrite, rename swap,
-    crash-recoverable) on the buckets and vectors dirs; quiesce the
-    ingest stream for the swap. Returns the new total file count.
+    ``layout.compact_files`` (a manifest publish per sub-table) on the
+    buckets and vectors dirs; no ``srp_index_append`` may run until it
+    returns. Returns the new total file count.
     Dedup results are exactly unchanged — pinned in
     tests/test_similarity_batch.py.
     """
@@ -1197,7 +1212,7 @@ def srp_dedup_incremental(
         "_bid", "_bbkts", F.posexplode("_bbkts").alias("_tbl", "_bkt")
     )
     cx = (
-        spark.read.parquet(f"{index_path}/buckets")
+        spark.read.parquet(manifest_resolve(f"{index_path}/buckets"))
         .select(F.col(id_col).alias("_cid"), F.col("bkts").alias("_cbkts"))
         .select("_cid", "_cbkts", F.posexplode("_cbkts").alias("_tbl", "_bkt"))
     )
@@ -1225,7 +1240,7 @@ def srp_dedup_incremental(
         .where(F.col("_cid") != F.col("_bid"))
         .select("_cid", "_bid")
     )
-    vc = spark.read.parquet(f"{index_path}/vectors").select(
+    vc = spark.read.parquet(manifest_resolve(f"{index_path}/vectors")).select(
         F.col(id_col).alias("_cid"),
         F.col("v").alias("_va"),
         F.col("norm").alias("_na"),
@@ -1520,14 +1535,9 @@ def pq_query_index_df(
     data filter; raw vectors are touched only for the ``shortlist``
     re-rank rows. The codebook read is bounded (m·k rows) by
     construction — the PQ twin of the IVF centroid fetch."""
-    cb = spark.read.parquet(f"{index_path}/_codebooks").collect()
-    mm = 1 + max(r["subspace"] for r in cb)
-    kk = 1 + max(r["code"] for r in cb)
-    sub = len(cb[0]["centroid"])
-    books = np.empty((mm, kk, sub))
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    encoded = spark.read.parquet(index_path)
+    live = manifest_resolve(index_path)
+    books = _read_codebooks(spark, live)
+    encoded = spark.read.parquet(live)
     short = _pq_adc_shortlist_df(
         encoded, books, probe, shortlist, id_col, where=where
     )
@@ -1537,17 +1547,17 @@ def pq_query_index_df(
 
 def _write_strata(
     df: DataFrame,
-    index_path: str,
+    live: str,
     keep_cols: list[str] | None,
     mode: str = "overwrite",
 ) -> None:
     """Persist per-``keep_cols``-combination row counts under
-    ``{index_path}/_strata`` (underscore-invisible to the data scan,
-    like ``_codebooks``). One bounded aggregate at build/append time
-    buys every FILTERED query its stratum cardinality from metadata —
-    no corpus-scan ``.count()`` during plan construction (VERDICT r11
-    item 7). Appends add rows; readers SUM, so batch strata never need
-    read-modify-write."""
+    ``{live}/_strata`` of a resolved index version dir
+    (underscore-invisible to the data scan, like ``_codebooks``). One
+    bounded aggregate at build/append time buys every FILTERED query
+    its stratum cardinality from metadata — no corpus-scan ``.count()``
+    during plan construction (VERDICT r11 item 7). Appends add rows;
+    readers SUM, so batch strata never need read-modify-write."""
     if not keep_cols:
         return
     (
@@ -1555,13 +1565,11 @@ def _write_strata(
         .agg(F.count("*").alias("n"))
         .coalesce(1)
         .write.mode(mode)
-        .parquet(f"{index_path}/_strata")
+        .parquet(f"{live}/_strata")
     )
 
 
-def _check_strata_keep_cols(
-    index_path: str, keep_cols: list[str] | None
-) -> None:
+def _check_strata_keep_cols(live: str, keep_cols: list[str] | None) -> None:
     """Fail an index APPEND whose ``keep_cols`` disagrees with the
     build's persisted ``_strata`` layout (ADVICE r12: omitting
     keep_cols on an append to a strata-backed index silently skipped
@@ -1571,7 +1579,7 @@ def _check_strata_keep_cols(
 
     import pyarrow.dataset as ds
 
-    strata_dir = f"{index_path}/_strata"
+    strata_dir = f"{live}/_strata"
     built_with = None
     if os.path.exists(strata_dir):
         built_with = sorted(
@@ -1582,7 +1590,7 @@ def _check_strata_keep_cols(
     appending_with = sorted(keep_cols) if keep_cols else None
     if built_with != appending_with:
         raise ValueError(
-            f"index at {index_path!r} was built with strata over "
+            f"index at {live!r} was built with strata over "
             f"{built_with} but the append passes keep_cols="
             f"{appending_with}; pass the build's keep_cols so the "
             "_strata counts stay true (index_stratum_count reads them)"
@@ -1598,7 +1606,9 @@ def index_stratum_count(index_path: str, where: dict) -> int:
     import pyarrow.compute as pc
     import pyarrow.dataset as ds
 
-    data = ds.dataset(f"{index_path}/_strata", format="parquet")
+    data = ds.dataset(
+        f"{manifest_resolve(index_path)}/_strata", format="parquet"
+    )
     expr = None
     for c, v in where.items():
         e = pc.field(c) == v
@@ -1626,25 +1636,20 @@ def pq_build_index(
     the data scan like IVF's ``_centroids``. ``keep_cols`` stores
     metadata columns alongside the codes so filtered queries
     (:func:`pq_query_index_df` ``where=``) pre-filter INSIDE the
-    compressed scan.
+    compressed scan. Published like :func:`ivf_build_index`.
     """
     books = pq_train_codebooks(
         df, m=m, k=k, id_col=id_col, vec_col=vec_col, sample_mod=sample_mod
     )
-    pq_encode(
-        df, books, id_col=id_col, vec_col=vec_col, keep_cols=keep_cols
-    ).write.mode("overwrite").parquet(index_path)
-    spark = df.sparkSession
-    mm, kk, sub = books.shape
-    rows = [
-        (i, j, [float(x) for x in books[i, j]])
-        for i in range(mm)
-        for j in range(kk)
-    ]
-    spark.createDataFrame(
-        rows, "subspace int, code int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/_codebooks")
-    _write_strata(df, index_path, keep_cols)
+
+    def write(d: str) -> None:
+        pq_encode(
+            df, books, id_col=id_col, vec_col=vec_col, keep_cols=keep_cols
+        ).write.parquet(d)
+        _write_codebooks(df.sparkSession, books, d)
+        _write_strata(df, d, keep_cols)
+
+    manifest_publish(index_path, write)
 
 
 def pq_query_index(
@@ -1665,14 +1670,9 @@ def pq_query_index(
     point of PQ: the per-query scan is the compressed index, not the
     corpus.
     """
-    cb = spark.read.parquet(f"{index_path}/_codebooks").collect()
-    mm = 1 + max(r["subspace"] for r in cb)
-    kk = 1 + max(r["code"] for r in cb)
-    sub = len(cb[0]["centroid"])
-    books = np.empty((mm, kk, sub))
-    for r in cb:
-        books[r["subspace"], r["code"]] = r["centroid"]
-    encoded = spark.read.parquet(index_path)
+    live = manifest_resolve(index_path)
+    books = _read_codebooks(spark, live)
+    encoded = spark.read.parquet(live)
     short = _pq_adc_shortlist(encoded, books, query_vec, shortlist, id_col)
     cand = source_df.join(F.broadcast(short.select(id_col)), id_col)
     return brute_force_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
@@ -1742,7 +1742,7 @@ def ivf_index_balance(spark: SparkSession, index_path: str) -> DataFrame:
     :func:`ivf_build_index` re-fit is due. One partition-pruned
     aggregate over the index — O(cells) output."""
     counts = (
-        spark.read.parquet(index_path)
+        spark.read.parquet(manifest_resolve(index_path))
         .groupBy("cell")
         .agg(F.count("*").alias("n_vectors"))
     )
@@ -1781,32 +1781,21 @@ def ivf_maintain(
     centroids, drift concentrates new vectors in few cells, and past
     the bound probe pruning degrades toward brute force. The ratio
     check is one partition-pruned aggregate (O(cells) driver read);
-    the rebuild is the same one-pass + one-shuffle-on-cell build as
-    :func:`ivf_build_index`, staged to a sibling dir and rename-swapped
-    in (the compact_files discipline — writing over a path Spark is
-    reading from is not allowed, and the stage+swap leaves a complete
-    index under a well-known name at every instant; on an object store
-    publish via operators/manifest.py instead).
+    the rebuild IS :func:`ivf_build_index` over the live version's
+    vectors, published as the next version — readers keep the old one
+    until the pointer flips. The call first prunes orphan versions of
+    crashed publishes (their count is ``"recovered"``), so the periodic
+    maintenance call is also the repair hook. No appender may run
+    until it returns.
 
     ``n_cells`` defaults to the current centroid count — maintenance
     preserves the index's resolution unless told otherwise.
     """
-    import shutil
-
-    recovered = _recover_rebuild(spark, index_path)
-    stats = (
-        spark.read.parquet(index_path)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("avg"),
-            F.sum("n").alias("total"),
-        )
-        .first()
-    )
+    recovered = manifest_recover(index_path)
+    live = manifest_resolve(index_path)
+    stats = _cell_stats(spark, live)
     ratio = float(stats["mx"]) / float(stats["avg"])
-    cur_cells = spark.read.parquet(f"{index_path}/_centroids").count()
+    cur_cells = spark.read.parquet(f"{live}/_centroids").count()
     report = {
         "rebuilt": False,
         "recovered": recovered,
@@ -1816,89 +1805,33 @@ def ivf_maintain(
     }
     if ratio <= max_imbalance:
         return report
-    vectors = spark.read.parquet(index_path).drop("cell")
-    staging = index_path.rstrip("/") + "._rebuilding"
-    retired = index_path.rstrip("/") + "._preindex"
-    shutil.rmtree(staging, ignore_errors=True)
     ivf_build_index(
-        vectors,
-        staging,
+        spark.read.parquet(live).drop("cell"),
+        index_path,
         n_cells=n_cells or cur_cells,
         id_col=id_col,
         vec_col=vec_col,
         seed=seed,
     )
-    _publish_rebuild(spark, index_path, staging, retired)
     report["rebuilt"] = True
     return report
 
 
-def _recover_rebuild(
-    spark: SparkSession,
-    index_path: str,
-    required_subdirs: tuple[str, ...] = ("_centroids",),
-) -> str | None:
-    """Heal an interrupted :func:`_publish_rebuild` (ADVICE r7): a
-    crash between the two renames leaves the index ONLY under
-    ``._rebuilding`` / ``._preindex``, and the next maintain/query call
-    would fail on a missing path. Same discipline as
-    ``operators/layout.py recover_compaction``: promote the staged
-    rebuild if it is complete (root ``_SUCCESS`` plus every required
-    sidecar dir's ``_SUCCESS`` — data is written before sidecars, so a
-    partial build cannot pass), else restore the retired index; with a
-    live index, leftovers are just cleaned. Returns the action taken
-    (``"promoted_rebuilding"`` / ``"restored_preindex"``) or None.
-    Runs at the top of :func:`ivf_maintain` / :func:`ivfpq_maintain`,
-    so the periodic maintenance call is also the repair hook."""
-    import os
-    import shutil
-
-    staging = index_path.rstrip("/") + "._rebuilding"
-    retired = index_path.rstrip("/") + "._preindex"
-    if os.path.isdir(index_path):
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(retired, ignore_errors=True)
-        return None
-
-    def complete(path: str) -> bool:
-        marks = [os.path.join(path, "_SUCCESS")] + [
-            os.path.join(path, d, "_SUCCESS") for d in required_subdirs
-        ]
-        return all(os.path.exists(m) for m in marks)
-
-    if os.path.isdir(staging) and complete(staging):
-        os.rename(staging, index_path)
-        shutil.rmtree(retired, ignore_errors=True)
-        spark.catalog.refreshByPath(index_path)
-        spark.catalog.refreshByPath(staging)
-        return "promoted_rebuilding"
-    if os.path.isdir(retired):
-        shutil.rmtree(staging, ignore_errors=True)
-        os.rename(retired, index_path)
-        spark.catalog.refreshByPath(index_path)
-        return "restored_preindex"
-    return None
-
-
-def _publish_rebuild(
-    spark: SparkSession, index_path: str, staging: str, retired: str
-) -> None:
-    """Swap a staged index rebuild into place (shared by
-    :func:`ivf_maintain` / :func:`ivfpq_maintain`): retire the live
-    dir, rename the staging dir in, drop both paths' cached file
-    listings — the session read the OLD index this call and may have
-    listed the staging dir; a stale InMemoryFileIndex would hand
-    readers deleted files. POSIX-rename strategy; on an object store
-    publish via operators/manifest.py instead."""
-    import os
-    import shutil
-
-    shutil.rmtree(retired, ignore_errors=True)
-    os.rename(index_path, retired)
-    os.rename(staging, index_path)
-    shutil.rmtree(retired)
-    spark.catalog.refreshByPath(index_path)
-    spark.catalog.refreshByPath(staging)
+def _cell_stats(spark: SparkSession, live: str):
+    """max / avg / total cell occupancy of a live IVF-family index dir
+    — one partition-pruned aggregate, the measurement both maintain
+    policies act on."""
+    return (
+        spark.read.parquet(live)
+        .groupBy("cell")
+        .agg(F.count("*").alias("n"))
+        .agg(
+            F.max("n").alias("mx"),
+            F.avg("n").alias("avg"),
+            F.sum("n").alias("total"),
+        )
+        .first()
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1981,7 +1914,8 @@ def ivfpq_build_index(
     residual-sample collect for codebook training, one encode map
     pass + one shuffle on cell. Artifacts: ``_centroids`` (n_cells ×
     dim) and ``_codebooks`` (m · k × dim/m) — both KB-scale,
-    underscore-invisible to the partitioned data scan.
+    underscore-invisible to the partitioned data scan. Published like
+    :func:`ivf_build_index`.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -2011,19 +1945,32 @@ def ivfpq_build_index(
         sample_mod=sample_mod,
         normalize=False,
     )
-    pq_encode(
+    encoded = pq_encode(
         resid,
         books,
         id_col=id_col,
         vec_col="_resid",
         keep_cols=[*(keep_cols or []), "cell"],
         normalize=False,
-    ).write.mode("overwrite").partitionBy("cell").parquet(index_path)
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/_centroids")
-    mm, kk, sub = books.shape
+    )
+
+    def write(d: str) -> None:
+        encoded.write.partitionBy("cell").parquet(d)
+        spark.createDataFrame(
+            [(i, c) for i, c in enumerate(cents)],
+            "cell int, centroid array<double>",
+        ).coalesce(1).write.parquet(f"{d}/_centroids")
+        _write_codebooks(spark, books, d)
+        _write_strata(df, d, keep_cols)
+
+    manifest_publish(index_path, write)
+
+
+def _write_codebooks(spark: SparkSession, books: np.ndarray, d: str) -> None:
+    """Persist (m, k, dim/m) PQ codebooks under ``{d}/_codebooks`` as
+    one row per (subspace, code) — shared by the flat-PQ and IVF-PQ
+    builds."""
+    mm, kk, _sub = books.shape
     spark.createDataFrame(
         [
             (i, j, [float(x) for x in books[i, j]])
@@ -2031,14 +1978,14 @@ def ivfpq_build_index(
             for j in range(kk)
         ],
         "subspace int, code int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/_codebooks")
-    _write_strata(df, index_path, keep_cols)
+    ).coalesce(1).write.parquet(f"{d}/_codebooks")
 
 
-def _read_codebooks(spark: SparkSession, index_path: str) -> np.ndarray:
-    """The persisted PQ codebooks back as (m, k, dim/m) — a bounded
-    m·k-row read by construction (shared with the flat-PQ index)."""
-    cb = spark.read.parquet(f"{index_path}/_codebooks").collect()
+def _read_codebooks(spark: SparkSession, live: str) -> np.ndarray:
+    """The persisted PQ codebooks of a live index dir back as
+    (m, k, dim/m) — a bounded m·k-row read by construction (shared
+    with the flat-PQ index)."""
+    cb = spark.read.parquet(f"{live}/_codebooks").collect()
     mm = 1 + max(r["subspace"] for r in cb)
     kk = 1 + max(r["code"] for r in cb)
     books = np.empty((mm, kk, len(cb[0]["centroid"])))
@@ -2068,15 +2015,16 @@ def ivfpq_index_append(
     against an index built with strata would silently skip the
     ``_strata`` append, and every later filtered query would size its
     shortlist from stale counts (ADVICE r12) — checked here, loudly."""
-    _check_strata_keep_cols(index_path, keep_cols)
+    live = manifest_resolve(index_path)
+    _check_strata_keep_cols(live, keep_cols)
     cents = [
         [float(x) for x in r["centroid"]]
         for r in sorted(
-            spark.read.parquet(f"{index_path}/_centroids").collect(),
+            spark.read.parquet(f"{live}/_centroids").collect(),
             key=lambda r: r["cell"],
         )
     ]
-    books = _read_codebooks(spark, index_path)
+    books = _read_codebooks(spark, live)
     cent_lit = _centroids_to_expr(cents)
     xn = _normalized(vec_col)
     d2s = F.transform(
@@ -2109,8 +2057,8 @@ def ivfpq_index_append(
         vec_col="_resid",
         keep_cols=[*(keep_cols or []), "cell"],
         normalize=False,
-    ).write.mode("append").partitionBy("cell").parquet(index_path)
-    _write_strata(batch, index_path, keep_cols, mode="append")
+    ).write.mode("append").partitionBy("cell").parquet(live)
+    _write_strata(batch, live, keep_cols, mode="append")
 
 
 def _ivfpq_adc_shortlist_df(
@@ -2189,8 +2137,9 @@ def ivfpq_query_index_df(
     ``source_df`` — only those rows ever touch raw vectors. A
     metadata predicate (``keep_cols`` at build) pre-filters inside
     the pruned compressed scan."""
+    live = manifest_resolve(index_path)
     cents_rows = sorted(
-        spark.read.parquet(f"{index_path}/_centroids").collect(),
+        spark.read.parquet(f"{live}/_centroids").collect(),
         key=lambda r: r["cell"],
     )
     cents = [[float(x) for x in r["centroid"]] for r in cents_rows]
@@ -2219,8 +2168,8 @@ def ivfpq_query_index_df(
         .limit(n_probe)
         .collect()
     ]
-    books = _read_codebooks(spark, index_path)
-    scan = spark.read.parquet(index_path).where(F.col("cell").isin(cells))
+    books = _read_codebooks(spark, live)
+    scan = spark.read.parquet(live).where(F.col("cell").isin(cells))
     short = _ivfpq_adc_shortlist_df(
         scan, cents, books, probe, shortlist, id_col, where=where
     )
@@ -2328,7 +2277,7 @@ def ivfpq_maintain(
 ) -> dict:
     """:func:`ivf_maintain`'s policy for the COMPOSITE layout: measure
     the cell-occupancy ratio with one aggregate, re-fit past the bound,
-    no-op under it. Same report dict, same stage+rename publish.
+    no-op under it. Same report dict, same versioned publish.
 
     The one structural difference: the IVF-PQ index stores CODES, not
     raw vectors, so a rebuild cannot self-feed — ``source_df`` (the
@@ -2341,25 +2290,12 @@ def ivfpq_maintain(
     restores both pruning selectivity AND quantization fidelity in one
     pass.
     """
-    import shutil
-
-    recovered = _recover_rebuild(
-        spark, index_path, required_subdirs=("_centroids", "_codebooks")
-    )
-    stats = (
-        spark.read.parquet(index_path)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("avg"),
-            F.sum("n").alias("total"),
-        )
-        .first()
-    )
+    recovered = manifest_recover(index_path)
+    live = manifest_resolve(index_path)
+    stats = _cell_stats(spark, live)
     ratio = float(stats["mx"]) / float(stats["avg"])
-    cur_cells = spark.read.parquet(f"{index_path}/_centroids").count()
-    books = _read_codebooks(spark, index_path)
+    cur_cells = spark.read.parquet(f"{live}/_centroids").count()
+    books = _read_codebooks(spark, live)
     m, k, _sub = books.shape
     report = {
         "rebuilt": False,
@@ -2370,12 +2306,9 @@ def ivfpq_maintain(
     }
     if ratio <= max_imbalance:
         return report
-    staging = index_path.rstrip("/") + "._rebuilding"
-    retired = index_path.rstrip("/") + "._preindex"
-    shutil.rmtree(staging, ignore_errors=True)
     ivfpq_build_index(
         source_df,
-        staging,
+        index_path,
         n_cells=n_cells or cur_cells,
         m=int(m),
         k=int(k),
@@ -2385,6 +2318,5 @@ def ivfpq_maintain(
         sample_mod=sample_mod,
         keep_cols=keep_cols,
     )
-    _publish_rebuild(spark, index_path, staging, retired)
     report["rebuilt"] = True
     return report

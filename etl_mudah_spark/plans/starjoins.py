@@ -312,7 +312,9 @@ def _lineitem_fingerprint(sf_dir: str) -> tuple:
     which is the cheap side of that trade."""
     import os
 
-    path = os.path.join(sf_dir, "lineitem.parquet")
+    from etl_mudah_spark.operators.manifest import manifest_resolve
+
+    path = manifest_resolve(os.path.join(sf_dir, "lineitem.parquet"))
     if os.path.isdir(path):
         files = [
             os.path.join(path, f)

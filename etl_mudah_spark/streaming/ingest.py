@@ -196,7 +196,6 @@ def stream_scd2_ingest(
     ts_col: str,
     tiebreak_cols: list[str] | None = None,
     max_files_per_trigger: int = 1,
-    swap: str = "rename",
     state_partitions: int | None = None,
 ) -> None:
     """Maintain an SCD type-2 dimension history from a stream of change
@@ -215,8 +214,8 @@ def stream_scd2_ingest(
     2. rebuild version history for AFFECTED KEYS ONLY (semi-join of
        the log against the batch's distinct keys — O(touched keys'
        history), not O(dimension));
-    3. swap those keys' rows into the history table (anti-join out the
-       stale versions, union the recomputed ones).
+    3. publish the history with those keys' rows swapped (anti-join
+       out the stale versions, union the recomputed ones).
 
     Because :func:`~etl_mudah_spark.operators.scd.scd2_collapse` is a
     pure function of a key's full log, the incremental result is
@@ -225,23 +224,16 @@ def stream_scd2_ingest(
     the log append null-safe-dedups on (key, ts, attrs) against the
     existing log, and the history rebuild runs for the batch's keys
     REGARDLESS of whether the append added rows, so a retry of a batch
-    that crashed after its append but before its history swap still
+    that crashed after its append but before its history publish still
     repairs the history (at-least-once safe end to end).
 
-    Crash-safe swap protocol (local FS default): staging is fully
-    written (Spark drops ``_SUCCESS`` on completion) BEFORE the swap
-    begins; the swap is rename-history-aside → rename-staging-in →
-    delete-aside. ``_recover()`` runs before the stream starts and
-    finishes or rolls back any interrupted swap; if the history
-    directory is lost entirely it is rebuilt from the log (the stated
-    source of truth).
-
-    ``swap="manifest"`` selects the object-store-safe protocol
-    (operators/manifest.py): each rebuilt history lands in a fresh
-    versioned dir under ``history_path`` and one atomic ``_current``
-    pointer write publishes it — no data renames, no missing window; a
-    crashed publish leaves only an unreferenced dir pruned on recover.
-    Readers resolve via ``manifest_resolve(history_path)``.
+    Each rebuilt history is a manifest publish (operators/manifest.py):
+    it lands in a fresh versioned dir under ``history_path`` and one
+    atomic ``_current`` pointer write makes it live. A crashed publish
+    leaves only an unreferenced dir, pruned before the stream starts;
+    a history that was never published (or was lost) is rebuilt from
+    the log, the stated source of truth. Readers resolve via
+    ``manifest_resolve(history_path)``.
 
     Scale: the history rewrite is full-table here (read + anti-join +
     rewrite); at 100 TB partition the history by a key bucket and make
@@ -249,12 +241,14 @@ def stream_scd2_ingest(
     operators/merge.py does for facts.
     """
     import os
-    import shutil
 
+    from etl_mudah_spark.operators.manifest import (
+        manifest_current,
+        manifest_publish,
+        manifest_recover,
+    )
     from etl_mudah_spark.operators.scd import scd2_collapse
 
-    if swap not in ("rename", "manifest"):
-        raise ValueError(f"swap must be 'rename' or 'manifest', got {swap!r}")
     prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     if state_partitions:
         # Restored in the run's finally: streaming state width is fixed
@@ -262,87 +256,8 @@ def stream_scd2_ingest(
         # keep the session default (AQE only coalesces down, never up).
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
 
-    staging = history_path.rstrip("/") + "._staging"
-    aside = history_path.rstrip("/") + "._old"
-
-    if swap == "manifest":
-        from etl_mudah_spark.operators.manifest import (
-            manifest_current,
-            manifest_publish,
-            manifest_recover,
-            manifest_resolve,
-        )
-
-        def _history_exists() -> bool:
-            return manifest_current(history_path) is not None
-
-        def _history_path() -> str:
-            return manifest_resolve(history_path)
-
-        def _swap_in(out: DataFrame) -> None:
-            manifest_publish(
-                history_path,
-                lambda d: out.write.mode("overwrite").parquet(d),
-            )
-
-        def _recover() -> None:
-            """Prune unreferenced version dirs from crashed publishes;
-            rebuild from the log when no version was ever published
-            (or the table was lost externally)."""
-            manifest_recover(history_path)
-            if not _history_exists() and os.path.exists(log_path):
-                full = scd2_collapse(
-                    spark.read.parquet(log_path),
-                    key_cols,
-                    attr_cols,
-                    ts_col,
-                    tiebreak_cols,
-                )
-                _swap_in(full)
-
-    else:
-
-        def _history_exists() -> bool:
-            return os.path.exists(history_path)
-
-        def _history_path() -> str:
-            return history_path
-
-        def _swap_in(out: DataFrame) -> None:
-            """Atomically-enough replace history with ``out`` (see
-            _recover for the crash matrix)."""
-            out.write.mode("overwrite").parquet(staging)
-            if os.path.exists(history_path):
-                os.rename(history_path, aside)
-            os.rename(staging, history_path)
-            shutil.rmtree(aside, ignore_errors=True)
-
-        def _recover() -> None:
-            """Finish or roll back an interrupted _swap_in.
-
-            Crash matrix: (a) during the staging write → staging exists
-            without _SUCCESS → discard it (the failed micro-batch replays
-            and rebuilds); (b) between rename-aside and rename-in →
-            history missing, staging complete → promote staging; (c) after
-            rename-in → only the aside dir remains → delete it; (d)
-            history dir lost by external means → rebuild from the log.
-            """
-            complete = os.path.exists(os.path.join(staging, "_SUCCESS"))
-            if complete and not os.path.exists(history_path):
-                os.rename(staging, history_path)
-            shutil.rmtree(aside, ignore_errors=True)
-            if os.path.exists(staging):
-                shutil.rmtree(staging, ignore_errors=True)
-            if not os.path.exists(history_path) and os.path.exists(log_path):
-                full = scd2_collapse(
-                    spark.read.parquet(log_path),
-                    key_cols,
-                    attr_cols,
-                    ts_col,
-                    tiebreak_cols,
-                )
-                full.write.mode("overwrite").parquet(staging)
-                os.rename(staging, history_path)
+    def publish(out: DataFrame) -> None:
+        manifest_publish(history_path, lambda d: out.write.parquet(d))
 
     def apply_batch(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
@@ -378,7 +293,7 @@ def stream_scd2_ingest(
             fresh.write.mode("append").parquet(log_path)
         # Rebuild history for the batch's keys even when fresh is
         # empty: an all-duplicate batch is exactly what the retry of a
-        # crashed append-but-not-swapped batch looks like, and skipping
+        # crashed append-but-not-published batch looks like, and skipping
         # the rebuild would leave those keys' history stale forever.
         log = spark.read.parquet(log_path)
         keys = batch.select(*key_cols).distinct()
@@ -386,16 +301,27 @@ def stream_scd2_ingest(
         hist = scd2_collapse(
             affected, key_cols, attr_cols, ts_col, tiebreak_cols
         )
-        if _history_exists():
-            keep = spark.read.parquet(_history_path()).join(
+        live = manifest_current(history_path)
+        if live is not None:
+            keep = spark.read.parquet(live).join(
                 F.broadcast(keys), key_cols, "left_anti"
             )
             out = keep.unionByName(hist)
         else:
             out = hist
-        _swap_in(out)
+        publish(out)
 
-    _recover()
+    manifest_recover(history_path)
+    if manifest_current(history_path) is None and os.path.exists(log_path):
+        publish(
+            scd2_collapse(
+                spark.read.parquet(log_path),
+                key_cols,
+                attr_cols,
+                ts_col,
+                tiebreak_cols,
+            )
+        )
 
     stream = (
         spark.readStream.schema(schema_ddl)

@@ -324,7 +324,9 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming join variant the stream-stream interval join
     (stream_view_purchase_join) does not cover.
     """
-    cust = spark.read.parquet(os.path.join(sf_dir, "customer.parquet")).select(
+    from etl_mudah_spark.tables import load
+
+    cust = load(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_nationkey")
     )
     enriched = _events_stream(spark, sf_dir).join(

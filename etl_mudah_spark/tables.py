@@ -1,7 +1,9 @@
 """Table catalog over the driver's parquet star schema.
 
 Loads are plain ``spark.read.parquet`` — Catalyst gets full pushdown
-(PushedFilters / ReadSchema reach the parquet scan). Helpers mark the
+(PushedFilters / ReadSchema reach the parquet scan). A table that
+compaction republished (operators/manifest.py) is read through its
+live version dir, resolved here once per load. Helpers mark the
 dimension tables that should broadcast in joins at any scale: region
 (5 rows), nation (25), supplier (small) are broadcast-safe even at
 100 TB fact scale because dimension cardinality grows ~log(sf).
@@ -13,6 +15,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_mudah_spark.operators.manifest import manifest_resolve
 
 TABLES = (
     "region",
@@ -56,7 +60,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # gaps) on the normalized ts must not depend on the host
         # timezone.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+        df = spark.read.parquet(_path(sf_dir, name))
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
             # nanos-as-long: integer `div`, not `/` — float division
@@ -65,7 +69,11 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return spark.read.parquet(_path(sf_dir, name))
+
+
+def _path(sf_dir: str, name: str) -> str:
+    return manifest_resolve(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def table_num_rows(sf_dir: str, name: str) -> int:
@@ -79,9 +87,7 @@ def table_num_rows(sf_dir: str, name: str) -> int:
 
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return ds.dataset(
-        os.path.join(sf_dir, f"{name}.parquet"), format="parquet"
-    ).count_rows()
+    return ds.dataset(_path(sf_dir, name), format="parquet").count_rows()
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -69,7 +69,9 @@ try:
     # ---- (a) actual parquet encodings of the staged lineitem ----
     import pyarrow.parquet as pq
 
-    li_dir = os.path.join(sc_dir, "lineitem.parquet")
+    from etl_mudah_spark.operators.manifest import manifest_resolve
+
+    li_dir = manifest_resolve(os.path.join(sc_dir, "lineitem.parquet"))
     f = next(x for x in sorted(os.listdir(li_dir)) if x.endswith(".parquet"))
     md = pq.ParquetFile(os.path.join(li_dir, f)).metadata
     rg = md.row_group(0)
@@ -136,8 +138,8 @@ try:
             .agg(dsum2("l_quantity").alias("qty_sum"))
             .where(F.col("qty_sum") > 250)
         )
-        orders = spark.read.parquet(os.path.join(sc_dir, "orders.parquet"))
-        cust = spark.read.parquet(os.path.join(sc_dir, "customer.parquet"))
+        orders = spark.read.parquet(manifest_resolve(os.path.join(sc_dir, "orders.parquet")))
+        cust = spark.read.parquet(manifest_resolve(os.path.join(sc_dir, "customer.parquet")))
         return (
             q.join(orders, q.l_orderkey == orders.o_orderkey)
             .join(cust, orders.o_custkey == cust.c_custkey)
@@ -182,8 +184,8 @@ try:
 
     def bo_preagg():
         q = spark.read.parquet(pre).where(F.col("qty_sum") > 250)
-        orders = spark.read.parquet(os.path.join(sc_dir, "orders.parquet"))
-        cust = spark.read.parquet(os.path.join(sc_dir, "customer.parquet"))
+        orders = spark.read.parquet(manifest_resolve(os.path.join(sc_dir, "orders.parquet")))
+        cust = spark.read.parquet(manifest_resolve(os.path.join(sc_dir, "customer.parquet")))
         return (
             q.join(orders, q.l_orderkey == orders.o_orderkey)
             .join(cust, orders.o_custkey == cust.c_custkey)

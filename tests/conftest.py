@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import contextlib
+import os
 import sys
 from pathlib import Path
 
@@ -22,3 +24,40 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def publish_crash():
+    """``with publish_crash(base, window): <call that publishes base>``
+    injects one crash into the manifest publish of ``base`` and
+    requires the call to fail with it.
+
+    ``window="write"``: the first parquet write into the new version
+    dir completes, then raises — a crash inside the write callback
+    that leaves a partial version. ``window="flip"``: ``os.replace``
+    raises — the version is fully written but the ``_current`` pointer
+    never flips."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    @contextlib.contextmanager
+    def inject(base: str, window: str):
+        orig = DataFrameWriter.parquet
+
+        def parquet(self, path, *args, **kwargs):
+            orig(self, path, *args, **kwargs)
+            if str(path).startswith(os.path.join(base, "v=")):
+                raise RuntimeError(f"injected crash after writing {path}")
+
+        def replace(src, dst):
+            raise RuntimeError(f"injected crash before flipping {dst}")
+
+        with pytest.MonkeyPatch.context() as mp:
+            if window == "write":
+                mp.setattr(DataFrameWriter, "parquet", parquet)
+            else:
+                assert window == "flip", window
+                mp.setattr(os, "replace", replace)
+            with pytest.raises(Exception, match="injected crash"):
+                yield
+
+    return inject

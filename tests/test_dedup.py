@@ -681,3 +681,43 @@ def test_minhash_index_compact_preserves_results(spark, tmp_path):
     after_pairs, after_files = pairset(), n_files()
     assert after_pairs == before_pairs
     assert after_files < before_files
+
+
+def test_minhash_index_append_after_compaction_lands_in_live_version(
+    spark, tmp_path
+):
+    """Compaction publishes bands/ and shingles/ as manifest tables; a
+    later append must land INSIDE the live version (not beside v=N/,
+    where partition discovery would break and the probe would miss
+    it), so the compacted index answers like an uncompacted twin."""
+    import os
+
+    from etl_mudah_spark.operators.dedup import (
+        minhash_dedup_incremental,
+        minhash_index_append,
+        minhash_index_build,
+        minhash_index_compact,
+    )
+
+    full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
+    ref, idx = str(tmp_path / "ref"), str(tmp_path / "idx")
+    for p in (ref, idx):
+        minhash_index_build(full_df.where(F.col("doc_id") == 0), p)
+    minhash_index_compact(spark, idx, max_files=1)
+    for p in (ref, idx):  # doc 1 duplicates doc 0
+        minhash_index_append(full_df.where(F.col("doc_id") == 1), p)
+    probe = full_df.where(F.col("doc_id") == 2)
+
+    def pairset(p):
+        return {
+            (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
+            for r in minhash_dedup_incremental(
+                spark, probe, p, threshold=0.1, include_batch_pairs=False
+            ).collect()
+        }
+
+    got = pairset(idx)
+    assert got == pairset(ref)
+    assert {a for a, _, _ in got} == {0, 1}
+    for sub in ("bands", "shingles"):
+        assert sorted(os.listdir(f"{idx}/{sub}")) == ["_current", "v=00000001"]

@@ -84,13 +84,11 @@ def test_partitioned_scan_prunes(spark, sf_dir, tmp_path):
 import pytest
 
 
-@pytest.mark.parametrize("swap", ["rename", "manifest"])
 def test_compact_files_reduces_file_count_and_preserves_rows(
-    spark, sf_dir, tmp_path, swap
+    spark, sf_dir, tmp_path
 ):
-    """Both swap strategies (VERDICT r6 item 5) produce the same
-    compacted layout behind the same API; manifest mode migrates the
-    plain directory in place and readers resolve the pointer."""
+    """Compaction migrates the plain directory in place into a
+    manifest-published version; readers resolve the pointer."""
     from etl_mudah_spark.operators.layout import compact_files
     from etl_mudah_spark.operators.manifest import manifest_resolve
 
@@ -108,10 +106,9 @@ def test_compact_files_reduces_file_count_and_preserves_rows(
         path,
         target_file_bytes=64 * 1024 * 1024,
         sort_within_by=["o_orderdate"],
-        swap=swap,
     )
     assert n_after < before
-    data_path = manifest_resolve(path) if swap == "manifest" else path
+    data_path = manifest_resolve(path)
     got = spark.read.parquet(data_path)
     assert got.count() == n_rows
     # sortWithinPartitions clustering: each file is internally ordered
@@ -125,20 +122,96 @@ def test_compact_files_reduces_file_count_and_preserves_rows(
             )
             vals = col.column(0).to_pylist()
             assert vals == sorted(vals)
-    if swap == "manifest":
-        # a second compaction publishes v2 and retains v1 for in-flight
-        # readers; loose pre-migration files are gone
-        v1 = data_path
-        compact_files(
-            spark, path, target_file_bytes=64 * 1024 * 1024, swap=swap
+    # a second compaction publishes v2 and retains v1 for in-flight
+    # readers; loose pre-migration files are gone
+    v1 = data_path
+    compact_files(spark, path, target_file_bytes=64 * 1024 * 1024)
+    v2 = manifest_resolve(path)
+    assert v2 != v1 and os.path.exists(v1)
+    assert spark.read.parquet(v2).count() == n_rows
+    assert not any(
+        f.endswith(".parquet") for f in os.listdir(path)
+        if os.path.isfile(os.path.join(path, f))
+    )
+
+
+def test_compact_files_keeps_hive_partitions_and_their_sizing(spark, tmp_path):
+    """A hive-partitioned table compacts as ONE manifest table: the
+    partition column survives (read back from the directory layout)
+    and each partition gets its own bytes/target file count."""
+    import os
+
+    from etl_mudah_spark.operators.layout import compact_files
+    from etl_mudah_spark.operators.manifest import manifest_read, manifest_resolve
+
+    path = str(tmp_path / "hive")
+    df = spark.range(0, 6000).selectExpr(
+        "id", "CAST(id % 3 AS INT) AS p", "repeat('x', id % 50) AS pad"
+    )
+    # partition p=0 carries ~20x the rows of p=1 and p=2
+    skewed = df.where("p = 0").unionByName(
+        df.where("p > 0 AND id % 20 = 1")
+    )
+    skewed.repartition(30).write.partitionBy("p").parquet(path)
+    sizes = {
+        d: sum(
+            os.path.getsize(os.path.join(path, d, f))
+            for f in os.listdir(os.path.join(path, d))
+            if not f.startswith(("_", "."))
         )
-        v2 = manifest_resolve(path)
-        assert v2 != v1 and os.path.exists(v1)
-        assert spark.read.parquet(v2).count() == n_rows
-        assert not any(
-            f.endswith(".parquet") for f in os.listdir(path)
-            if os.path.isfile(os.path.join(path, f))
-        )
+        for d in os.listdir(path)
+        if d.startswith("p=")
+    }
+    target = sizes["p=0"] // 3
+    n = compact_files(spark, path, target_file_bytes=target)
+    live = manifest_resolve(path)
+    per_part = {
+        d: len([f for f in os.listdir(os.path.join(live, d))
+                if f.endswith(".parquet")])
+        for d in os.listdir(live)
+        if d.startswith("p=")
+    }
+    want = {d: max(1, -(-b // target)) for d, b in sizes.items()}
+    assert per_part == want and n == sum(want.values())
+    assert sorted(os.listdir(path)) == ["_current", os.path.basename(live)]
+    got = manifest_read(spark, path)
+    assert set(got.columns) == {"id", "p", "pad"}
+    assert sorted(map(tuple, got.select("id", "p").collect())) == sorted(
+        map(tuple, skewed.select("id", "p").collect())
+    )
+
+
+def test_compact_files_recovers_interrupted_publish(
+    spark, tmp_path, publish_crash
+):
+    """Crash inside the version write and crash between the version
+    write and the pointer flip: the live table reads back unchanged,
+    and the next compaction prunes the orphan and succeeds."""
+    from etl_mudah_spark.operators.layout import compact_files
+    from etl_mudah_spark.operators.manifest import (
+        manifest_read,
+        manifest_resolve,
+        manifest_versions,
+    )
+
+    path = str(tmp_path / "tbl")
+    spark.range(0, 2000).selectExpr("id", "id % 7 AS k").repartition(
+        20
+    ).write.parquet(path)
+    compact_files(spark, path, target_file_bytes=1 << 20)
+    want = sorted(map(tuple, manifest_read(spark, path).collect()))
+    for window in ("write", "flip"):
+        live = manifest_versions(path)[-1]
+        with publish_crash(path, window):
+            compact_files(spark, path, target_file_bytes=1 << 20)
+        assert manifest_versions(path)[-1] == live + 1  # the orphan
+        assert manifest_resolve(path).endswith(f"v={live:08d}")
+        assert sorted(map(tuple, manifest_read(spark, path).collect())) == want
+        compact_files(spark, path, target_file_bytes=1 << 20)
+        # orphan pruned, its version number republished and live
+        assert manifest_versions(path) == [live, live + 1]
+        assert manifest_resolve(path).endswith(f"v={live + 1:08d}")
+        assert sorted(map(tuple, manifest_read(spark, path).collect())) == want
 
 
 def test_manifest_publish_recover_and_retention(tmp_path):
@@ -177,32 +250,20 @@ def test_manifest_publish_recover_and_retention(tmp_path):
     assert os.path.exists(v2) and not os.path.exists(v1)
     assert mf.manifest_resolve(base) == v3
 
-
-def test_recover_compaction_heals_interrupted_swap(spark, sf_dir, tmp_path):
-    """Crash between the two swap renames leaves the dataset missing and
-    the intact copy under ._precompact; recovery must rename it back.
-    With the dataset present, stale scratch dirs are just deleted."""
-    import os
-
-    from etl_mudah_spark.operators.layout import recover_compaction
-
-    path = str(tmp_path / "ds")
-    nation = load(spark, sf_dir, "nation")
-    n_rows = nation.count()
-    nation.write.parquet(path)
-    # simulate the mid-swap crash: dataset renamed aside, staging gone
-    retired = path + "._precompact"
-    os.rename(path, retired)
-    assert recover_compaction(path) is True
-    assert os.path.exists(path) and not os.path.exists(retired)
-    assert spark.read.parquet(path).count() == n_rows
-    # healthy dataset + leftover scratch dirs -> scratch removed, no heal
-    os.makedirs(path + "._compacting")
-    os.makedirs(retired)
-    assert recover_compaction(path) is False
-    assert not os.path.exists(path + "._compacting")
-    assert not os.path.exists(retired)
-    assert spark.read.parquet(path).count() == n_rows
+    # migrating a plain PARTITIONED dir: after the flip nothing but the
+    # pointer and the version is left — no loose files, checksum
+    # sidecars, _SUCCESS markers, partition dirs or underscore sidecars
+    plain = str(tmp_path / "plain")
+    for rel in ("_SUCCESS", "._SUCCESS.crc", "band_id=0/part-0.parquet",
+                "band_id=0/.part-0.parquet.crc", "band_id=1/part-0.parquet",
+                "_centroids/part-0.parquet", "part-loose.parquet"):
+        f = os.path.join(plain, rel)
+        os.makedirs(os.path.dirname(f), exist_ok=True)
+        with open(f, "w") as fh:
+            fh.write("old")
+    v = mf.manifest_publish(plain, writer("migrated"))
+    assert sorted(os.listdir(plain)) == ["_current", os.path.basename(v)]
+    assert os.listdir(v) == ["part-0.parquet"]
 
 
 def test_zorder_clustering_prunes_on_every_dimension(spark, tmp_path):
@@ -262,6 +323,9 @@ def test_zorder_clustering_prunes_on_every_dimension(spark, tmp_path):
     compact_files(spark, zord, target_file_bytes=target,
                   zorder_by=["x", "y"], max_files=16)
 
+    from etl_mudah_spark.operators.manifest import manifest_resolve
+
+    single, zord = manifest_resolve(single), manifest_resolve(zord)
     lo, hi = 100, 163  # 1/16 of the y domain
     s_hit, s_n = overlap_fraction(single, lo, hi, "y")
     z_hit, z_n = overlap_fraction(zord, lo, hi, "y")
@@ -297,7 +361,9 @@ def test_zorder_handles_all_null_column_and_rejects_conflicting_sorts(
     n = compact_files(spark, path, target_file_bytes=10_000,
                       zorder_by=["x", "y"])
     assert n >= 1
-    assert spark.read.parquet(path).count() == 100
+    from etl_mudah_spark.operators.manifest import manifest_read
+
+    assert manifest_read(spark, path).count() == 100
 
     with pytest.raises(ValueError, match="not both"):
         compact_files(spark, path, sort_within_by=["y"], zorder_by=["x"])
@@ -446,7 +512,9 @@ def test_compact_row_group_bytes_splits_groups(spark, tmp_path):
     )
     import glob
 
-    files = glob.glob(f"{path}/part-*.parquet")
+    from etl_mudah_spark.operators.manifest import manifest_resolve
+
+    files = glob.glob(f"{manifest_resolve(path)}/part-*.parquet")
     assert len(files) == 1
     meta = pq.ParquetFile(files[0]).metadata
     assert meta.num_row_groups >= 4  # split granularity preserved

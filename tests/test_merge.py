@@ -119,3 +119,77 @@ def test_merge_schema_evolution_new_and_missing_columns(spark):
     assert out[2]["price"] == 250.0 and out[2]["fuel"] == "diesel"
     # inserted row: target-only column NULL, new column present
     assert out[3]["region_id"] is None and out[3]["fuel"] == "petrol"
+
+
+def test_merge_upsert_keeps_stage_when_final_write_fails(spark, tmp_path):
+    """Spark's overwrite clears the table before its job runs; if that
+    job then fails, the staged merge is the only complete copy — it
+    must survive, and the error must name it."""
+    import os
+    import re
+    import shutil
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    path = str(tmp_path / "listings")
+    b1 = _batch(spark, [(1, 10.0, T0, "r1", None, None), (2, 20.0, T0, "r2", None, None)])
+    merge_upsert(spark, b1, path, ["listing_id"], ["listing_date", "listing_id"],
+                 batch_ts=T1)
+    b2 = _batch(spark, [(2, 25.0, T1, "r2", None, None), (3, 30.0, T1, "r2", None, None)])
+    orig = DataFrameWriter.parquet
+
+    def parquet(self, p, *args, **kwargs):
+        if p == path:  # the final write: pre-write delete, then a job failure
+            shutil.rmtree(path)
+            raise RuntimeError("injected job failure")
+        return orig(self, p, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", parquet)
+        with pytest.raises(RuntimeError, match="intact at") as ei:
+            merge_upsert(spark, b2, path, ["listing_id"],
+                         ["listing_date", "listing_id"], batch_ts=T2)
+    assert not os.path.exists(path)
+    stage = re.search(r"intact at '([^']+)'", str(ei.value)).group(1)
+    rows = {r.listing_id: r for r in spark.read.parquet(stage).collect()}
+    assert set(rows) == {1, 2, 3}
+    assert rows[1].price == 10.0 and rows[1].updated_at == T1
+    assert rows[2].price == 25.0 and rows[2].created_at == T1
+    assert rows[2].updated_at == T2 and rows[3].created_at == T2
+
+
+def test_merge_upsert_reads_compacted_table_through_its_live_version(
+    spark, tmp_path
+):
+    """A table compact_maintain republished as a manifest table merges
+    from its live version: no `v` column is read or written back."""
+    from etl_mudah_spark.operators.layout import compact_maintain
+
+    path = str(tmp_path / "listings")
+    rows = [(i, 1.0 * i, T0, "r1", T0, T0) for i in range(1, 5)]
+    _batch(spark, rows).repartition(4).write.parquet(path)
+    assert compact_maintain(spark, path, max_small_files=2) == 1
+    merge_upsert(spark, _batch(spark, [(5, 5.0, T1, "r1", None, None)]),
+                 path, ["listing_id"], ["listing_date", "listing_id"],
+                 batch_ts=T2)
+    out = spark.read.parquet(path)
+    assert out.columns == spark.createDataFrame([], SCHEMA).columns
+    assert sorted(r.listing_id for r in out.collect()) == [1, 2, 3, 4, 5]
+
+
+def test_merge_upsert_partitioned_into_manifest_table_raises(spark, tmp_path):
+    """A dynamic partition overwrite would land beside the version dirs
+    of a manifest-published table, so it is refused up front."""
+    from etl_mudah_spark.operators.layout import compact_files
+    from etl_mudah_spark.operators.manifest import manifest_read
+
+    path = str(tmp_path / "listings")
+    b1 = _batch(spark, [(1, 10.0, T0, "r1", None, None), (2, 20.0, T0, "r2", None, None)])
+    merge_upsert(spark, b1, path, ["listing_id"], ["listing_date", "listing_id"],
+                 partition_col="region_id", batch_ts=T1)
+    compact_files(spark, path)
+    b2 = _batch(spark, [(2, 25.0, T1, "r2", None, None)])
+    with pytest.raises(ValueError, match="manifest-published"):
+        merge_upsert(spark, b2, path, ["listing_id"], ["listing_date", "listing_id"],
+                     partition_col="region_id", batch_ts=T2)
+    assert sorted(r.price for r in manifest_read(spark, path).collect()) == [10.0, 20.0]

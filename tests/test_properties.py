@@ -449,7 +449,9 @@ def test_stream_scd2_matches_batch_collapse_under_adversarial_batching(
     # and must cover every distinct change.
     assert n_distinct <= n_log <= sum(len(b) for b in batches)
     full = scd2_collapse(log, ["cust_id"], ["tier"], "ts", ["tier"])
-    got = sorted(map(tuple, spark.read.parquet(hist_p).collect()))
+    from etl_mudah_spark.operators.manifest import manifest_read
+
+    got = sorted(map(tuple, manifest_read(spark, hist_p).collect()))
     want = sorted(map(tuple, full.collect()))
     assert got == want
 

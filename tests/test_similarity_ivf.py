@@ -16,6 +16,7 @@ from etl_mudah_spark.operators.similarity import (
     ivf_query_index,
     ivf_topk,
 )
+from etl_mudah_spark.operators.manifest import manifest_read, manifest_versions
 from etl_mudah_spark.tables import load
 from tests.conftest import SF_SMOKE
 
@@ -122,7 +123,7 @@ def test_ivf_index_append_matches_full_build_queries(spark, tmp_path):
     ivf_build_index(even, index, n_cells=8)
     ivf_index_append(spark, index, odd)
 
-    grown = spark.read.parquet(index)
+    grown = manifest_read(spark, index)
     assert grown.count() == emb.count()
     # every appended vector sits in its nearest existing cell
     probe = probe_row(emb)
@@ -196,7 +197,7 @@ def test_ivf_maintain_rebuilds_exactly_once_on_drift(spark, tmp_path):
     assert r1["rebuilt"] is True
     assert r1["imbalance_ratio"] == round(ratio_before, 3)
     # contents preserved across the rebuild swap
-    rebuilt = spark.read.parquet(index)
+    rebuilt = manifest_read(spark, index)
     assert rebuilt.count() == 5 * n
     assert 5 <= rebuilt.select("cell").distinct().count() <= 8
     # drift resolved: the re-fit separates the new mass
@@ -205,50 +206,37 @@ def test_ivf_maintain_rebuilds_exactly_once_on_drift(spark, tmp_path):
     # second call: no-op (exactly one rebuild for one drift event)
     r2 = ivf_maintain(spark, index, max_imbalance=4.0)
     assert r2["rebuilt"] is False
-    assert not os.path.exists(index + "._rebuilding")
-    assert not os.path.exists(index + "._preindex")
+    assert manifest_versions(index) == [1, 2]  # one publish per drift event
 
 
-def test_ivf_maintain_recovers_interrupted_publish(spark, tmp_path):
-    """ADVICE r7: a crash between _publish_rebuild's two renames
-    leaves the index only under ._preindex (+ a complete ._rebuilding)
-    — the next maintain call must heal the path instead of failing on
-    a missing parquet dir. Three windows: (a) mid-swap with a complete
-    staging -> promote it; (b) mid-swap with an INCOMPLETE staging ->
-    restore the retired copy; (c) live index with stale leftovers ->
-    clean them, no-op otherwise."""
-    import os
-    import shutil
-
-    from etl_mudah_spark.operators.similarity import ivf_maintain
+def test_ivf_maintain_recovers_interrupted_publish(spark, tmp_path, publish_crash):
+    """A re-fit that crashes inside its version write (data written,
+    _centroids not) or between the version write and the pointer flip
+    leaves the live index answering exactly as before; the next
+    maintain call prunes the orphan (``recovered``) and publishes."""
+    from etl_mudah_spark.operators.similarity import ivf_maintain, probe_row
+    from etl_mudah_spark.operators.similarity import ivf_query_index_df
 
     emb = load(spark, SF_SMOKE, "embeddings")
     index = str(tmp_path / "ivf_r")
     ivf_build_index(emb, index, n_cells=8)
     n = emb.count()
+    probe = probe_row(emb)
 
-    # (a) complete staged rebuild, index renamed away mid-swap
-    shutil.copytree(index, index + "._rebuilding")
-    os.rename(index, index + "._preindex")
-    r = ivf_maintain(spark, index, max_imbalance=50.0)
-    assert r["recovered"] == "promoted_rebuilding"
-    assert spark.read.parquet(index).count() == n
-    assert not os.path.exists(index + "._rebuilding")
-    assert not os.path.exists(index + "._preindex")
+    def answer():
+        q = ivf_query_index_df(spark, index, probe, k=10, n_probe=3)
+        return [tuple(r) for r in q.collect()]
 
-    # (b) incomplete staging (no root _SUCCESS): fall back to retired
-    shutil.copytree(index, index + "._rebuilding")
-    os.remove(index + "._rebuilding/_SUCCESS")
-    os.rename(index, index + "._preindex")
+    for window in ("write", "flip"):
+        before, live = answer(), manifest_versions(index)[-1]
+        with publish_crash(index, window):
+            ivf_maintain(spark, index, max_imbalance=0.0)  # forces a re-fit
+        assert manifest_versions(index)[-1] == live + 1  # the orphan
+        assert answer() == before
+        r = ivf_maintain(spark, index, max_imbalance=0.0)
+        assert r["recovered"] == 1 and r["rebuilt"] is True
+        assert manifest_versions(index) == [live, live + 1]
+        assert manifest_read(spark, index).count() == n
     r = ivf_maintain(spark, index, max_imbalance=50.0)
-    assert r["recovered"] == "restored_preindex"
-    assert spark.read.parquet(index).count() == n
-    assert not os.path.exists(index + "._rebuilding")
-    assert not os.path.exists(index + "._preindex")
+    assert r["recovered"] == 0 and r["rebuilt"] is False
 
-    # (c) live index + leftovers from a crash after publish
-    os.makedirs(index + "._preindex")
-    r = ivf_maintain(spark, index, max_imbalance=50.0)
-    assert r["recovered"] is None and r["rebuilt"] is False
-    assert not os.path.exists(index + "._preindex")
-    assert spark.read.parquet(index).count() == n

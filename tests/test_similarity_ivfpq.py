@@ -15,6 +15,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_mudah_spark.operators import similarity as sim
+from etl_mudah_spark.operators.manifest import (
+    manifest_read,
+    manifest_resolve,
+    manifest_versions,
+)
 from etl_mudah_spark.tables import load
 
 SF = "/root/testdata/sf0.001"
@@ -66,7 +71,7 @@ def test_ivfpq_topk_df_matches_persisted_index(spark, emb, index):
 def test_ivfpq_compressed_scan_partition_pruning(spark, index):
     # the per-query scan opens only the probed cells' partitions, and
     # reads codes — never raw vectors
-    scan = spark.read.parquet(index).where(F.col("cell").isin([0, 3]))
+    scan = manifest_read(spark, index).where(F.col("cell").isin([0, 3]))
     plan = scan._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan
     assert "cell" in plan.split("PartitionFilters", 1)[1][:200]
@@ -82,7 +87,7 @@ def test_ivfpq_append_matches_full_build_queries(spark, emb, brute_ids, tmp_path
         sample_mod=1,
     )
     sim.ivfpq_index_append(spark, path, emb.where(F.col("vec_id") % 2 == 1))
-    grown = spark.read.parquet(path)
+    grown = manifest_read(spark, path)
     assert grown.count() == emb.count()
     probe = sim.probe_row(emb)
     out = sim.ivfpq_query_index_df(
@@ -98,9 +103,9 @@ def test_ivfpq_build_deterministic(spark, emb, index, tmp_path):
     path = str(tmp_path / "index2")
     sim.ivfpq_build_index(emb, path, n_cells=8, m=8, k=16, sample_mod=1)
     a = {r["vec_id"]: (r["cell"], tuple(r["pq_codes"]))
-         for r in spark.read.parquet(index).collect()}
+         for r in manifest_read(spark, index).collect()}
     b = {r["vec_id"]: (r["cell"], tuple(r["pq_codes"]))
-         for r in spark.read.parquet(path).collect()}
+         for r in manifest_read(spark, path).collect()}
     assert a == b
 
 
@@ -115,15 +120,15 @@ def test_residual_pq_tightens_quantization_error(spark, emb, index):
     }
     cents = {
         r["cell"]: np.array(r["centroid"])
-        for r in spark.read.parquet(f"{index}/_centroids").collect()
+        for r in spark.read.parquet(f"{manifest_resolve(index)}/_centroids").collect()
     }
-    cb = spark.read.parquet(f"{index}/_codebooks").collect()
+    cb = spark.read.parquet(f"{manifest_resolve(index)}/_codebooks").collect()
     books_res = np.empty((8, 16, 8))
     for r in cb:
         books_res[r["subspace"], r["code"]] = r["centroid"]
     idx_rows = {
         r["vec_id"]: (r["cell"], r["pq_codes"])
-        for r in spark.read.parquet(index).collect()
+        for r in manifest_read(spark, index).collect()
     }
     vecs = {
         r["vec_id"]: np.array(r["v"])
@@ -148,10 +153,10 @@ def test_residual_pq_tightens_quantization_error(spark, emb, index):
 
 def test_ivfpq_artifacts_invisible_to_data_scan(spark, index):
     # underscore dirs don't leak into the partitioned scan
-    cols = set(spark.read.parquet(index).columns)
+    cols = set(manifest_read(spark, index).columns)
     assert cols == {"vec_id", "pq_codes", "cell"}
-    assert os.path.isdir(f"{index}/_centroids")
-    assert os.path.isdir(f"{index}/_codebooks")
+    assert os.path.isdir(f"{manifest_resolve(index)}/_centroids")
+    assert os.path.isdir(f"{manifest_resolve(index)}/_codebooks")
 
 
 def test_ivfpq_maintain_rebuilds_exactly_once_on_drift(spark, emb, tmp_path):
@@ -186,14 +191,13 @@ def test_ivfpq_maintain_rebuilds_exactly_once_on_drift(spark, emb, tmp_path):
     corpus = emb.select("vec_id", "embedding").unionByName(drift)
     r1 = sim.ivfpq_maintain(spark, path, corpus, max_imbalance=4.0, sample_mod=1)
     assert r1["rebuilt"] is True
-    rebuilt = spark.read.parquet(path)
+    rebuilt = manifest_read(spark, path)
     assert rebuilt.count() == 5 * n
     assert r1["imbalance_ratio"] > 4.0
     r2 = sim.ivfpq_maintain(spark, path, corpus, max_imbalance=4.0, sample_mod=1)
     assert r2["rebuilt"] is False
     assert r2["imbalance_ratio"] <= r1["imbalance_ratio"]
-    assert not os.path.exists(path + "._rebuilding")
-    assert not os.path.exists(path + "._preindex")
+    assert manifest_versions(path) == [1, 2]  # one publish per drift event
 
 
 def test_ivfpq_cell_ranking_scale_invariant(spark, emb, index):
@@ -214,24 +218,32 @@ def test_ivfpq_cell_ranking_scale_invariant(spark, emb, index):
     ]
 
 
-def test_ivfpq_maintain_recovers_interrupted_publish(spark, emb, tmp_path):
-    # composite-layout twin of the ivf_maintain recovery pin: the
-    # _codebooks sidecar participates in the completeness check
-    import shutil
-
+def test_ivfpq_maintain_recovers_interrupted_publish(
+    spark, emb, tmp_path, publish_crash
+):
+    # composite-layout twin of the ivf_maintain recovery pin: a crash
+    # after the coded data but before the _centroids/_codebooks
+    # sidecars, and one before the pointer flip, both leave the live
+    # index answering as before; the next call prunes and publishes
     path = str(tmp_path / "index")
     sim.ivfpq_build_index(emb, path, n_cells=8, m=8, k=16, sample_mod=1)
     n = emb.count()
-    shutil.copytree(path, path + "._rebuilding")
-    os.rename(path, path + "._preindex")
-    r = sim.ivfpq_maintain(spark, path, emb, max_imbalance=50.0, sample_mod=1)
-    assert r["recovered"] == "promoted_rebuilding"
-    assert spark.read.parquet(path).count() == n
-    # incomplete sidecar: missing _codebooks/_SUCCESS fails the
-    # completeness check and the retired index is restored
-    shutil.copytree(path, path + "._rebuilding")
-    os.remove(path + "._rebuilding/_codebooks/_SUCCESS")
-    os.rename(path, path + "._preindex")
-    r = sim.ivfpq_maintain(spark, path, emb, max_imbalance=50.0, sample_mod=1)
-    assert r["recovered"] == "restored_preindex"
-    assert spark.read.parquet(path).count() == n
+    probe = sim.probe_row(emb)
+
+    def answer():
+        q = sim.ivfpq_query_index_df(
+            spark, emb, path, probe, k=10, n_probe=3, shortlist=100
+        )
+        return [tuple(r) for r in q.collect()]
+
+    for window in ("write", "flip"):
+        before, live = answer(), manifest_versions(path)[-1]
+        with publish_crash(path, window):
+            sim.ivfpq_maintain(spark, path, emb, max_imbalance=0.0, sample_mod=1)
+        assert manifest_versions(path)[-1] == live + 1  # the orphan
+        assert answer() == before
+        r = sim.ivfpq_maintain(spark, path, emb, max_imbalance=0.0, sample_mod=1)
+        assert r["recovered"] == 1 and r["rebuilt"] is True
+        assert manifest_versions(path) == [live, live + 1]
+        assert manifest_read(spark, path).count() == n
+

@@ -13,6 +13,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from etl_mudah_spark.operators import similarity as sim
+from etl_mudah_spark.operators.manifest import manifest_read
 from etl_mudah_spark.tables import load
 from tests.conftest import SF_SMOKE
 
@@ -77,7 +78,7 @@ def test_pq_index_build_query_roundtrip(spark, emb, qvec, tmp_path):
     # Column-pruning proof: the index scan's ReadSchema carries codes,
     # and no embedding column appears in any scan of the shortlist plan.
     plan = (
-        spark.read.parquet(idx)
+        manifest_read(spark, idx)
         .select("vec_id")
         ._jdf.queryExecution().executedPlan().toString()
     )

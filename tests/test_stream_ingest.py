@@ -13,6 +13,7 @@ import time
 
 from pyspark.sql import functions as F
 
+from etl_mudah_spark.operators.manifest import manifest_read
 from etl_mudah_spark.streaming.ingest import stream_ingest_listings
 
 
@@ -203,7 +204,7 @@ def test_stream_scd2_ingest_matches_batch_collapse(spark, tmp_path):
     )
     stream_scd2_ingest(spark, str(drop), ddl, log_p, hist_p, ckpt, **kwargs)
 
-    hist = spark.read.parquet(hist_p)
+    hist = manifest_read(spark, hist_p)
     rows = {(r["cust_id"], r["version"]): r for r in hist.collect()}
     # cust 1: two versions (bronze closed at the gold change, gold open)
     assert rows[(1, 1)]["tier"] == "bronze" and rows[(1, 1)]["valid_to"] is not None
@@ -224,7 +225,7 @@ def test_stream_scd2_ingest_matches_batch_collapse(spark, tmp_path):
                              (3, "bronze", "2024-02-01T00:00:00")], now - 10)
     stream_scd2_ingest(spark, str(drop), ddl, log_p, hist_p, ckpt, **kwargs)
     assert spark.read.parquet(log_p).count() == n_log
-    hist2 = spark.read.parquet(hist_p)
+    hist2 = manifest_read(spark, hist_p)
     assert sorted(map(tuple, hist2.collect())) == hist_rows
 
     # ground truth: incremental history == from-scratch collapse of the log
@@ -261,7 +262,7 @@ def test_stream_scd2_replay_with_null_attr_is_noop(spark, tmp_path):
                (2, "silver", "2024-01-01T00:00:00")], now - 30)
     stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
     n_log = spark.read.parquet(log_p).count()
-    hist = sorted(map(tuple, spark.read.parquet(hist_p).collect()))
+    hist = sorted(map(tuple, manifest_read(spark, hist_p).collect()))
 
     # identical content under a new file name → new checkpoint offset,
     # duplicate rows (including the NULL tier) → full no-op
@@ -270,7 +271,7 @@ def test_stream_scd2_replay_with_null_attr_is_noop(spark, tmp_path):
                (2, "silver", "2024-01-01T00:00:00")], now - 10)
     stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
     assert spark.read.parquet(log_p).count() == n_log == 2
-    assert sorted(map(tuple, spark.read.parquet(hist_p).collect())) == hist
+    assert sorted(map(tuple, manifest_read(spark, hist_p).collect())) == hist
 
 
 def test_stream_scd2_retry_after_append_crash_repairs_history(spark, tmp_path):
@@ -304,17 +305,20 @@ def test_stream_scd2_retry_after_append_crash_repairs_history(spark, tmp_path):
     stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
     assert spark.read.parquet(log_p).count() == 3
     rows = {(r["cust_id"], r["version"]): r
-            for r in spark.read.parquet(hist_p).collect()}
+            for r in manifest_read(spark, hist_p).collect()}
     assert rows[(1, 2)]["tier"] == "gold" and rows[(1, 2)]["valid_to"] is None
     assert (3, 1) in rows and len(rows) == 3
 
 
-def test_stream_scd2_recover_interrupted_swap(spark, tmp_path):
-    """_recover finishes a swap that died between rename-aside and
-    rename-in (history gone, complete staging present), and rebuilds a
-    lost history dir from the log."""
+def test_stream_scd2_recover_interrupted_swap(spark, tmp_path, publish_crash):
+    """A history publish that crashes inside its write or before its
+    pointer flip leaves the live history unchanged; the next run
+    prunes the orphan version, replays the batch and publishes. A lost
+    history dir is rebuilt from the log."""
     import shutil
 
+    from etl_mudah_spark.operators import manifest as mf
+    from etl_mudah_spark.operators.scd import scd2_collapse
     from etl_mudah_spark.streaming.ingest import stream_scd2_ingest
 
     drop = tmp_path / "d"
@@ -327,28 +331,39 @@ def test_stream_scd2_recover_interrupted_swap(spark, tmp_path):
               [(1, "bronze", "2024-01-01T00:00:00"),
                (2, "silver", "2024-01-01T00:00:00")], now - 30)
     stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
-    want = sorted(map(tuple, spark.read.parquet(hist_p).collect()))
+    for i, (window, tier) in enumerate([("write", "gold"), ("flip", "platinum")]):
+        before = sorted(map(tuple, manifest_read(spark, hist_p).collect()))
+        live = mf.manifest_resolve(hist_p)
+        _scd_snap(drop, f"s{i + 2}.jsonl",
+                  [(1, tier, f"2024-0{i + 2}-01T00:00:00")], now - 20 + i)
+        with publish_crash(hist_p, window):
+            stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p,
+                               ckpt, **SCD_KW)
+        live_v = int(live.rsplit("=", 1)[1])
+        assert mf.manifest_versions(hist_p)[-1] == live_v + 1  # the orphan
+        assert mf.manifest_resolve(hist_p) == live
+        assert sorted(map(tuple, manifest_read(spark, hist_p).collect())) == before
+        # the checkpoint replays the failed batch: orphan pruned, published
+        stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
+        assert mf.manifest_resolve(hist_p) != live
+        rows = {(r["cust_id"], r["version"]): r["tier"]
+                for r in manifest_read(spark, hist_p).collect()}
+        assert rows[(1, i + 2)] == tier
+    want = sorted(map(tuple, manifest_read(spark, hist_p).collect()))
+    full = scd2_collapse(spark.read.parquet(log_p), ["cust_id"], ["tier"], "ts")
+    assert want == sorted(map(tuple, full.collect()))
 
-    # (b) in the crash matrix: staging complete, history renamed aside
-    shutil.move(hist_p, hist_p + "._staging")
-    assert os.path.exists(os.path.join(hist_p + "._staging", "_SUCCESS"))
-    stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p,
-                       str(tmp_path / "ckpt2"), **SCD_KW)
-    assert sorted(map(tuple, spark.read.parquet(hist_p).collect())) == want
-    assert not os.path.exists(hist_p + "._staging")
-
-    # (d): history dir lost entirely → rebuilt from the log
+    # history dir lost entirely → rebuilt from the log
     shutil.rmtree(hist_p)
     stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p,
-                       str(tmp_path / "ckpt3"), **SCD_KW)
-    assert sorted(map(tuple, spark.read.parquet(hist_p).collect())) == want
+                       str(tmp_path / "ckpt2"), **SCD_KW)
+    assert sorted(map(tuple, manifest_read(spark, hist_p).collect())) == want
 
 
 def test_stream_scd2_manifest_swap(spark, tmp_path):
-    """swap='manifest' (VERDICT r6 item 5): the history lives in
-    versioned dirs behind a _current pointer — same semantics as the
-    rename path (incremental == from-scratch collapse; replay no-op),
-    plus: a crashed publish (unreferenced version dir) never affects
+    """The history lives in versioned dirs behind a _current pointer
+    (incremental == from-scratch collapse; replay no-op), plus: a
+    crashed publish (unreferenced version dir) never affects
     readers and is pruned on the next run."""
     import os
 
@@ -368,8 +383,7 @@ def test_stream_scd2_manifest_swap(spark, tmp_path):
     _scd_snap(drop, "s2.jsonl",
               [(1, "gold", "2024-02-01T00:00:00"),
                (3, "bronze", "2024-02-01T00:00:00")], now - 20)
-    stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt,
-                       swap="manifest", **SCD_KW)
+    stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
 
     cur = mf.manifest_resolve(hist_p)
     assert cur != hist_p and os.path.basename(cur).startswith("v=")
@@ -388,8 +402,7 @@ def test_stream_scd2_manifest_swap(spark, tmp_path):
     _scd_snap(drop, "s2_replay.jsonl",
               [(1, "gold", "2024-02-01T00:00:00"),
                (3, "bronze", "2024-02-01T00:00:00")], now - 10)
-    stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt,
-                       swap="manifest", **SCD_KW)
+    stream_scd2_ingest(spark, str(drop), SCD_DDL, log_p, hist_p, ckpt, **SCD_KW)
     assert spark.read.parquet(log_p).count() == n_log
     assert not os.path.exists(orphan)
     cur2 = mf.manifest_resolve(hist_p)
