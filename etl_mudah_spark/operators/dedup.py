@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
 from etl_mudah_spark.operators.ckpt import materialize_once as _checkpoint
-from etl_mudah_spark.operators.manifest import manifest_resolve
+from etl_mudah_spark.operators.manifest import manifest_publish, manifest_resolve
 from etl_mudah_spark.operators.text import WHITESPACE_RE
 
 
@@ -276,12 +276,23 @@ def minhash_index_build(
     planning time; within a band the join key is the selective
     band_hash. (The same num_hashes/bands/shingle_n must be passed at
     query time — hash family and banding are the index's contract.)
+
+    Each sub-table is a manifest publish (operators/manifest.py), so a
+    crashed rebuild leaves the live index answering. Shingles publish
+    first: a crash between the two publishes pairs the old bands with
+    new shingles, which still cover every candidate a rebuild over a
+    grown corpus can produce.
     """
+    manifest_publish(
+        f"{path}/shingles",
+        lambda d: df.select(
+            F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
+        ).write.parquet(d),
+    )
     buckets = minhash_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_n)
-    buckets.write.mode("overwrite").partitionBy("band_id").parquet(f"{path}/bands")
-    df.select(
-        F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    ).write.mode("overwrite").parquet(f"{path}/shingles")
+    manifest_publish(
+        f"{path}/bands", lambda d: buckets.write.partitionBy("band_id").parquet(d)
+    )
 
 
 def minhash_index_append(

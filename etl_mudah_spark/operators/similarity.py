@@ -1096,16 +1096,23 @@ def srp_index_build(
     (:func:`_hyperplane`), so the same (dim, n_planes, n_tables) at
     query time reproduces build-time buckets exactly — the index's
     contract, like minhash's band parameters.
+
+    Each sub-table is a manifest publish, vectors first — the same
+    crash contract as minhash_index_build.
     """
+    manifest_publish(
+        f"{path}/vectors",
+        lambda d: df.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
+        .withColumn("norm", l2_norm(F.col("v")))
+        .write.parquet(d),
+    )
     buckets = srp_buckets_udf(dim, n_planes, n_tables)
-    df.select(
-        F.col(id_col), buckets(F.col(vec_col)).alias("bkts")
-    ).write.mode("overwrite").parquet(f"{path}/buckets")
-    df.select(
-        F.col(id_col), as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", l2_norm(F.col("v"))).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/vectors")
+    manifest_publish(
+        f"{path}/buckets",
+        lambda d: df.select(
+            F.col(id_col), buckets(F.col(vec_col)).alias("bkts")
+        ).write.parquet(d),
+    )
 
 
 def srp_index_append(

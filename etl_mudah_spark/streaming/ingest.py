@@ -28,6 +28,50 @@ from pyspark.sql import functions as F
 from etl_mudah_spark.operators.flatten import flatten_listings
 from etl_mudah_spark.operators.merge import merge_upsert
 from etl_mudah_spark.schemas import API_LISTING
+from etl_mudah_spark.streaming.pipeline import _read_or_empty, run_stream
+
+
+def _merge_listings(
+    spark: SparkSession,
+    table_path: str,
+    partition_col: str | None,
+    batch_ts,
+    row_checks=None,
+    quarantine_path: str | None = None,
+):
+    """The per-trigger body both listings pipelines share: flatten the
+    API shape, pass the dead-letter gate when ``row_checks`` is given,
+    then merge-upsert by listing_id (last write wins by listing_date)."""
+
+    def apply_batch(batch: DataFrame, _batch_id: int) -> None:
+        flat = flatten_listings(batch)
+        if row_checks is not None:
+            from etl_mudah_spark.operators.checks import split_quarantine
+
+            flat, rejects = split_quarantine(flat, row_checks)
+            if not rejects.isEmpty():
+                rejects.withColumn(
+                    "violated", F.concat_ws(",", F.col("violated"))
+                ).write.mode("append").parquet(quarantine_path)
+        # One job yields both the empty-batch skip and the per-batch
+        # stamp. The stamp is derived from the batch's own data (max
+        # listing_date), not a single stream-start timestamp: each
+        # micro-batch gets its own updated_at, and a replayed batch
+        # reproduces the same stamp (idempotent under the at-least-once
+        # edge). An explicit batch_ts overrides.
+        n, max_date = flat.agg(F.count(F.lit(1)), F.max("listing_date")).first()
+        if n:
+            merge_upsert(
+                spark,
+                flat,
+                table_path,
+                key_cols=["listing_id"],
+                order_cols=["listing_date", "listing_id"],
+                partition_col=partition_col,
+                batch_ts=max_date if batch_ts is None else batch_ts,
+            )
+
+    return apply_batch
 
 
 def stream_ingest_listings(
@@ -48,8 +92,8 @@ def stream_ingest_listings(
 
     ``state_partitions`` sizes spark.sql.shuffle.partitions — the
     state/merge-shuffle width fixed AT QUERY START — to state volume
-    (streaming/pipeline.py state_partitions_for, BASELINE.md §13)
-    instead of leaving the session default.
+    (streaming/pipeline.py state_partitions_for, BASELINE.md §13) for
+    the run's span (pipeline.run_stream); the session keeps its width.
 
     ``drop_dir`` holds JSON-lines files of raw API listings (the
     ``data[]`` elements: ``{"id": ..., "attributes": {...}}``).
@@ -69,57 +113,20 @@ def stream_ingest_listings(
         raise ValueError(
             "row_checks and quarantine_path must be passed together"
         )
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        # Restored in the run's finally: streaming state width is fixed
-        # at query start, but later batch queries in this session must
-        # keep the session default (AQE only coalesces down, never up).
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        flat = flatten_listings(batch)
-        if row_checks is not None:
-            from etl_mudah_spark.operators.checks import split_quarantine
-
-            flat, rejects = split_quarantine(flat, row_checks)
-            if not rejects.isEmpty():
-                rejects.withColumn(
-                    "violated", F.concat_ws(",", F.col("violated"))
-                ).write.mode("append").parquet(quarantine_path)
-        if not flat.isEmpty():
-            # Per-batch stamp derived from the batch's own data (max
-            # listing_date), not a single stream-start timestamp: each
-            # micro-batch gets its own updated_at, and a replayed batch
-            # reproduces the same stamp (idempotent under the
-            # at-least-once edge). An explicit batch_ts overrides.
-            ts = batch_ts
-            if ts is None:
-                ts = flat.agg(F.max("listing_date")).first()[0]
-            merge_upsert(
-                spark,
-                flat,
-                table_path,
-                key_cols=["listing_id"],
-                order_cols=["listing_date", "listing_id"],
-                partition_col=partition_col,
-                batch_ts=ts,
-            )
-
     stream = (
         spark.readStream.schema(API_LISTING)
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(drop_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark,
+        stream,
+        _merge_listings(
+            spark, table_path, partition_col, batch_ts, row_checks, quarantine_path
+        ),
+        width=state_partitions,
+        checkpoint_dir=checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def stream_ingest_listings_live(
@@ -153,34 +160,16 @@ def stream_ingest_listings_live(
 
     spark.dataSource.register(ListingsDataSource)
 
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        flat = flatten_listings(batch)
-        if not flat.isEmpty():
-            ts = batch_ts
-            if ts is None:
-                ts = flat.agg(F.max("listing_date")).first()[0]
-            merge_upsert(
-                spark,
-                flat,
-                table_path,
-                key_cols=["listing_id"],
-                order_cols=["listing_date", "listing_id"],
-                partition_col=partition_col,
-                batch_ts=ts,
-            )
-
     stream = (
         spark.readStream.format("mudah_listings").options(**source_options).load()
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark,
+        stream,
+        _merge_listings(spark, table_path, partition_col, batch_ts),
+        width=None,
+        checkpoint_dir=checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
 
 
 def stream_scd2_ingest(
@@ -204,8 +193,8 @@ def stream_scd2_ingest(
 
     ``state_partitions`` sizes spark.sql.shuffle.partitions — the
     state/merge-shuffle width fixed AT QUERY START — to state volume
-    (streaming/pipeline.py state_partitions_for, BASELINE.md §13)
-    instead of leaving the session default.
+    (streaming/pipeline.py state_partitions_for, BASELINE.md §13) for
+    the run's span (pipeline.run_stream); the session keeps its width.
 
     Per micro-batch, foreachBatch does the incremental-history dance:
 
@@ -248,13 +237,6 @@ def stream_scd2_ingest(
         manifest_recover,
     )
     from etl_mudah_spark.operators.scd import scd2_collapse
-
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        # Restored in the run's finally: streaming state width is fixed
-        # at query start, but later batch queries in this session must
-        # keep the session default (AQE only coalesces down, never up).
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
 
     def publish(out: DataFrame) -> None:
         manifest_publish(history_path, lambda d: out.write.parquet(d))
@@ -328,16 +310,13 @@ def stream_scd2_ingest(
         .option("maxFilesPerTrigger", str(max_files_per_trigger))
         .json(drop_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark,
+        stream,
+        apply_batch,
+        width=state_partitions,
+        checkpoint_dir=checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def stream_ivm_refresh(
@@ -393,13 +372,6 @@ def stream_ivm_refresh(
             f"stream_ivm_refresh: no live aggregate version at {agg_base!r} "
             "— bootstrap with manifest_publish(summing_agg(snapshot)) first"
         )
-    prior_shuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions:
-        # Restored in the run's finally: streaming state width is fixed
-        # at query start, but later batch queries in this session must
-        # keep the session default (AQE only coalesces down, never up).
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-
     _MARKER = "_applied_batch"
 
     def apply_batch(batch: DataFrame, batch_id: int) -> None:
@@ -428,16 +400,13 @@ def stream_ivm_refresh(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .json(diff_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark,
+        stream,
+        apply_batch,
+        width=state_partitions,
+        checkpoint_dir=checkpoint_dir,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prior_shuffle)
 
 
 def stream_srp_dedup_ingest(
@@ -521,22 +490,12 @@ def stream_srp_dedup_ingest(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(batch_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark, stream, apply_batch, width=None, checkpoint_dir=checkpoint_dir
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    import os
-
-    if not os.path.exists(pairs_path):
-        return spark.createDataFrame(
-            [], "id_a bigint, id_b bigint, cosine_sim double"
-        )
-    return spark.read.parquet(pairs_path)
+    return _read_or_empty(
+        spark, pairs_path, "id_a bigint, id_b bigint, cosine_sim double"
+    )
 
 
 def stream_minhash_dedup_ingest(
@@ -599,22 +558,12 @@ def stream_minhash_dedup_ingest(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(batch_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark, stream, apply_batch, width=None, checkpoint_dir=checkpoint_dir
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    import os
-
-    if not os.path.exists(pairs_path):
-        return spark.createDataFrame(
-            [], "doc_a bigint, doc_b bigint, jaccard double"
-        )
-    return spark.read.parquet(pairs_path)
+    return _read_or_empty(
+        spark, pairs_path, "doc_a bigint, doc_b bigint, jaccard double"
+    )
 
 
 def stream_doc_curation_gate(
@@ -738,29 +687,15 @@ def stream_doc_curation_gate(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .parquet(batch_dir)
     )
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    run_stream(
+        spark, stream, apply_batch, width=None, checkpoint_dir=checkpoint_dir
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    import os
-
-    acc = (
-        spark.read.parquet(accepted_path)
-        if os.path.exists(accepted_path)
-        else spark.createDataFrame(
-            [], "doc_id bigint, source string, n_tok bigint"
-        )
+    acc = _read_or_empty(
+        spark, accepted_path, "doc_id bigint, source string, n_tok bigint"
     )
-    rej = (
-        spark.read.parquet(rejected_path)
-        if os.path.exists(rejected_path)
-        else spark.createDataFrame(
-            [], "doc_id bigint, source string, n_tok bigint, reason string"
-        )
+    rej = _read_or_empty(
+        spark,
+        rejected_path,
+        "doc_id bigint, source string, n_tok bigint, reason string",
     )
     return acc, rej

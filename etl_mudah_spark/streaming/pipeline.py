@@ -20,72 +20,90 @@ different source — that is the point of Structured Streaming).
 from __future__ import annotations
 
 import atexit
-import functools
+import contextlib
+import datetime
 import glob
 import os
 import shutil
 import tempfile
+from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from etl_mudah_spark.session import default_parallelism
+from etl_mudah_spark.tables import normalize_ts, read_raw_events
 
 EVENTS_SCHEMA_TEMPLATE = (
     "event_id bigint, ts {ts}, user_id bigint, event_type string, "
     "value double, props string"
 )
 
-# Final StreamingQueryProgress of the last drain_to_parquet run —
+# Final StreamingQueryProgress of the last run_stream query —
 # diagnostics/test surface (state partition counts, batch durations).
 LAST_PROGRESS: dict = {}
 
-# Single-slot save of the session's spark.sql.shuffle.partitions from
-# before a streaming builder resized it (events_raw_schema saves,
-# drain_to_parquet / the builder's own drain restores). Streaming state
-# width is fixed AT QUERY START, so the conf must stay resized until
-# .start() — a plain context manager around the set alone would restore
-# too early; this slot spans the build→start→drain window instead.
-# Without the restore, a stream sized to dashboard state (e.g.
-# state_partitions=1) would leave every LATER batch shuffle in the
-# session planned 1-wide: AQE only coalesces partitions DOWN, never up
-# (ADVICE r12).
-_PRIOR_SHUFFLE: list[str] = []
+_SHUFFLE_WIDTH = "spark.sql.shuffle.partitions"
+
+# user_id of the late sentinel rows _sentinel_stream stages; builders
+# filter it from their output.
+_SENTINEL_USER = -1
 
 
-def _save_and_set_shuffle_width(spark: SparkSession, n: int) -> None:
-    """Set the streaming state width, saving the session default once
-    per build→drain span (re-entrant: a builder reading two streams
-    saves only the true prior)."""
-    if not _PRIOR_SHUFFLE:
-        _PRIOR_SHUFFLE.append(spark.conf.get("spark.sql.shuffle.partitions"))
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+def run_stream(
+    spark: SparkSession,
+    stream_df: DataFrame,
+    fn: Callable[[DataFrame, int], None],
+    *,
+    width: int | None,
+    checkpoint_dir: str | None = None,
+    output_mode: str = "append",
+) -> None:
+    """Run a bounded streaming query to completion: ``fn`` is its
+    ``foreachBatch`` sink and ``processAllAvailable`` drains every
+    available input (Trigger.AvailableNow semantics). Every streaming
+    query of the engine starts here.
 
-
-def restore_shuffle_width(spark: SparkSession) -> None:
-    """Restore the pre-stream session shuffle width (no-op if nothing
-    is pending). Every drain path must call this in a finally."""
-    if _PRIOR_SHUFFLE:
-        spark.conf.set("spark.sql.shuffle.partitions", _PRIOR_SHUFFLE.pop())
-
-
-def _restores_shuffle_width(fn):
-    """Builder-level leak guard (ADVICE r13): every public builder saves
-    the session shuffle width via events_raw_schema and relies on
-    drain_to_parquet's ``finally`` to restore it — but an exception
-    BETWEEN the save and the drain (plan construction, source staging)
-    left the session resized AND the save slot populated, so the next
-    builder skipped its own save and restored the leaked width instead
-    of the true session default. Wrapping the whole builder makes the
-    restore unconditional on every exit path; after a successful drain
-    the slot is already empty and the extra restore is a no-op."""
-
-    @functools.wraps(fn)
-    def wrapper(spark, *args, **kwargs):
+    ``width`` is the state width. Streaming state is partitioned by
+    spark.sql.shuffle.partitions AT QUERY START and AQE does not
+    coalesce it — a vanilla session's default 200 is 200 near-empty
+    state-store tasks per micro-batch (measured 2-5x wall-clock on the
+    stateful queries). So ``width`` is set before ``start()`` and held
+    until after ``stop()``; batch plans built inside ``fn`` on the
+    outer session (e.g. merge_upsert's shuffle) see it too. The
+    session's prior width is restored on every exit path: later batch
+    queries must not inherit a stream's width, because AQE only
+    coalesces partitions down, never up. ``width=None`` runs at the
+    session width. The final progress lands in :data:`LAST_PROGRESS`.
+    """
+    prior = spark.conf.get(_SHUFFLE_WIDTH)
+    if width:
+        spark.conf.set(_SHUFFLE_WIDTH, str(width))
+    try:
+        writer = stream_df.writeStream.outputMode(output_mode).foreachBatch(fn)
+        if checkpoint_dir is not None:
+            writer = writer.option("checkpointLocation", checkpoint_dir)
+        q = writer.start()
         try:
-            return fn(spark, *args, **kwargs)
+            q.processAllAvailable()
         finally:
-            restore_shuffle_width(spark)
+            # stateOperators[].numShufflePartitions is the ACTUAL state
+            # partition count the store committed per trigger — the
+            # number ``width`` controls, pinned in
+            # tests/test_pipeline_e2e.py at two sizes
+            LAST_PROGRESS.clear()
+            LAST_PROGRESS.update(q.lastProgress or {})
+            q.stop()
+    finally:
+        spark.conf.set(_SHUFFLE_WIDTH, prior)
 
-    return wrapper
+
+def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
+    """Lazy read of the parquet a stream's batches appended to, or an
+    empty frame of ``schema`` when no batch wrote any."""
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.parquet(path)
 
 
 def state_partitions_for(
@@ -110,57 +128,18 @@ def state_partitions_for(
     return n
 
 
-def events_raw_schema(
-    spark: SparkSession,
-    events_path: str,
-    state_partitions: int | None = None,
-) -> tuple[str, str]:
+def events_raw_schema(spark: SparkSession, events_path: str) -> tuple[str, str]:
     """Streaming reads need a declared schema, but the testdata's
-    ``ts`` physical encoding varies by generation: INT64
-    TIMESTAMP(NANOS) (readable only as ``bigint`` via nanosAsLong),
-    TIMESTAMP(MICROS) with isAdjustedToUTC=false (``timestamp_ntz``),
-    or plain ``timestamp``. Batch-read the footer once (driver-side,
+    ``ts`` physical encoding varies by generation (see
+    tables.read_raw_events). Batch-read the footer once (driver-side,
     metadata only) and return ``(schema_ddl, ts_dtype)`` matching the
     file. Pins the session to UTC while here: every streaming reader
     funnels through this, and the NTZ→LTZ normalization (plus window
     bucketing downstream) must not depend on the host timezone — same
     discipline as tables.load."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # Streaming state is partitioned by spark.sql.shuffle.partitions AT
-    # QUERY START and AQE does not coalesce it — under a vanilla
-    # session's default 200 that is 200 near-empty state-store tasks
-    # per micro-batch (measured 2-5x wall-clock on the stateful
-    # queries). This is the chokepoint every streaming reader passes
-    # through, so the state-partition knob lives here:
-    # ``state_partitions`` (size to state volume — see
-    # :func:`state_partitions_for`, the measured §13 rule worth 2.4x
-    # on the per-trigger floor at dashboard-sized state) or the core
-    # count as the prior default. The session default is SAVED here and
-    # restored by the drain (drain_to_parquet finally) so later batch
-    # queries in the same session are planned at the session width, not
-    # the stream's — AQE only coalesces down, never up.
-    from etl_mudah_spark.session import default_parallelism
-
-    _save_and_set_shuffle_width(
-        spark,
-        state_partitions if state_partitions else default_parallelism(),
-    )
-    ts_dtype = dict(spark.read.parquet(events_path).dtypes)["ts"]
+    ts_dtype = read_raw_events(spark, events_path)[1]
     return EVENTS_SCHEMA_TEMPLATE.format(ts=ts_dtype), ts_dtype
-
-
-def normalize_ts(df: DataFrame, ts_dtype: str) -> DataFrame:
-    """Convert a raw ``ts`` column (any supported encoding) to the
-    session-timezone TIMESTAMP type. The session runs UTC, so the
-    NTZ→LTZ cast changes no values."""
-    if ts_dtype == "bigint":
-        # nanos-as-long: integer `div`, not `/` — float division loses
-        # precision above 2^53 ns.
-        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if ts_dtype == "timestamp_ntz":
-        return df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
 
 
 def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
@@ -174,8 +153,22 @@ def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> Da
     ``collect`` is O(result) driver memory, which for e.g. sessionization
     output is O(users × sessions)). ``complete`` mode overwrites the
     staging dir each micro-batch (last batch = full result); ``append``
-    mode accumulates per-batch files.
+    mode accumulates per-batch files. The state width is the core count
+    (:func:`_drain` takes a builder's ``state_partitions``).
     """
+    return _drain(stream_df, spark, mode)
+
+
+def _drain(
+    stream_df: DataFrame,
+    spark: SparkSession,
+    mode: str,
+    state_partitions: int | None = None,
+) -> DataFrame:
+    """:func:`drain_to_parquet` at the event-stream builders' state
+    width: ``state_partitions`` (size it to state volume — see
+    :func:`state_partitions_for`, the measured §13 rule worth 2.4x on
+    the per-trigger floor at dashboard-sized state) or the core count."""
     out_dir = tempfile.mkdtemp(prefix="stream_stage_")
     # The returned DataFrame lazily references these files, so they must
     # outlive this call; reclaim them at interpreter exit instead.
@@ -186,33 +179,72 @@ def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> Da
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
         batch_df.write.mode(write_mode).parquet(path)
 
-    q = stream_df.writeStream.outputMode(mode).foreachBatch(sink).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        # surface the final StreamingQueryProgress for observability:
-        # stateOperators[].numShufflePartitions is the ACTUAL state
-        # partition count the store committed per trigger — the number
-        # the state_partitions knob controls, pinned in
-        # tests/test_pipeline_e2e.py at two sizes
-        LAST_PROGRESS.clear()
-        if q.lastProgress is not None:
-            LAST_PROGRESS.update(q.lastProgress)
-        q.stop()
-        restore_shuffle_width(spark)
-    if not os.path.exists(path):
-        # No micro-batch produced output: empty result, stream's schema.
-        return spark.createDataFrame([], stream_df.schema)
-    return spark.read.parquet(path)
-
-
-def _events_stream(
-    spark: SparkSession, sf_dir: str, state_partitions: int | None = None
-) -> DataFrame:
-    ddl, ts_dtype = events_raw_schema(
+    run_stream(
         spark,
-        os.path.join(sf_dir, "events.parquet"),
-        state_partitions=state_partitions,
+        stream_df,
+        sink,
+        width=state_partitions or default_parallelism(),
+        output_mode=mode,
+    )
+    return _read_or_empty(spark, path, stream_df.schema)
+
+
+@contextlib.contextmanager
+def _sentinel_stream(
+    spark: SparkSession, sf_dir: str, prefix: str
+) -> Iterator[DataFrame]:
+    """The events stream followed by two far-future sentinel files, one
+    file per trigger, ``ts`` normalized. Stateful queries that emit
+    only once event time passes them (append-mode windows, session
+    timeouts, outer-join state) need the sentinels' follow-up
+    micro-batches to flush. The file source orders batches by
+    modification time under maxFilesPerTrigger=1, so the sentinels get
+    strictly increasing mtimes; they are written in the SAME ts
+    encoding as the source file so one declared stream schema covers
+    all staged files, and carry ``user_id = _SENTINEL_USER``. The
+    staging dir is removed when the block exits, so drain inside it."""
+    ddl, ts_dtype = events_raw_schema(
+        spark, os.path.join(sf_dir, "events.parquet")
+    )
+    staging = tempfile.mkdtemp(prefix=prefix)
+    try:
+        dst = os.path.join(staging, "000_events.parquet")
+        shutil.copyfile(os.path.join(sf_dir, "events.parquet"), dst)
+        max_ts = spark.read.schema(ddl).parquet(dst).agg(F.max("ts")).first()[0]
+        base_mtime = os.stat(dst).st_mtime
+        for i, offset_days in enumerate((10, 20), start=1):
+            if ts_dtype == "bigint":  # nanos-as-long
+                sentinel_ts = max_ts + offset_days * 24 * 3600 * 10**9
+            else:
+                sentinel_ts = max_ts + datetime.timedelta(days=offset_days)
+            sentinel = spark.createDataFrame(
+                [(-(10**9) - i, sentinel_ts, _SENTINEL_USER, "sentinel", 0.0, "{}")],
+                ddl,
+            )
+            path = os.path.join(staging, f"{i:03d}_sentinel")
+            sentinel.coalesce(1).write.parquet(path)
+            for f in os.listdir(path):
+                full = os.path.join(path, f)
+                if f.endswith(".parquet"):
+                    shutil.move(full, os.path.join(staging, f"{i:03d}_sentinel.parquet"))
+            shutil.rmtree(path, ignore_errors=True)
+            os.utime(
+                os.path.join(staging, f"{i:03d}_sentinel.parquet"),
+                (base_mtime + 10 * i, base_mtime + 10 * i),
+            )
+        yield normalize_ts(
+            spark.readStream.schema(ddl)
+            .option("maxFilesPerTrigger", "1")
+            .parquet(staging),
+            ts_dtype,
+        )
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ddl, ts_dtype = events_raw_schema(
+        spark, os.path.join(sf_dir, "events.parquet")
     )
     raw = (
         spark.readStream.schema(ddl)
@@ -222,7 +254,6 @@ def _events_stream(
     return normalize_ts(raw, ts_dtype)
 
 
-@_restores_shuffle_width
 def stream_hourly_event_counts(
     spark: SparkSession, sf_dir: str, state_partitions: int | None = None
 ) -> DataFrame:
@@ -237,7 +268,7 @@ def stream_hourly_event_counts(
     (BASELINE.md §13).
     """
     agg = (
-        _events_stream(spark, sf_dir, state_partitions)
+        _events_stream(spark, sf_dir)
         .withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
@@ -246,25 +277,23 @@ def stream_hourly_event_counts(
         )
         .select(F.col("w.start").alias("hour_start"), "event_type", "cnt", "total_value")
     )
-    return drain_to_parquet(agg, spark, "complete")
+    return _drain(agg, spark, "complete", state_partitions)
 
 
-@_restores_shuffle_width
 def stream_dedup_events(
     spark: SparkSession, sf_dir: str, state_partitions: int | None = None
 ) -> DataFrame:
     """Streaming dedup on event_id within a watermark, counted per type.
     ``state_partitions``: see :func:`state_partitions_for` (§13)."""
     deduped = (
-        _events_stream(spark, sf_dir, state_partitions)
+        _events_stream(spark, sf_dir)
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    result = drain_to_parquet(deduped, spark, "append")
+    result = _drain(deduped, spark, "append", state_partitions)
     return result.groupBy("event_type").agg(F.count("*").alias("cnt"))
 
 
-@_restores_shuffle_width
 def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join: purchases attributed to a prior
     view by the same user within 30 minutes.
@@ -299,7 +328,7 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
     )
-    result = drain_to_parquet(joined, spark, "append")
+    result = _drain(joined, spark, "append")
     # one row per attributed (view, purchase) pair -> distinct purchases
     # per user (a purchase may match several prior views)
     return (
@@ -310,7 +339,6 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_restores_shuffle_width
 def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-STATIC join: the events stream enriched with the customer
     dimension (user_id = c_custkey), aggregated per nation.
@@ -336,10 +364,9 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
     )
-    return drain_to_parquet(agg, spark, "complete")
+    return _drain(agg, spark, "complete")
 
 
-@_restores_shuffle_width
 def stream_hourly_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming build of the mergeable-sketch table
     (operators/rollup.py shape): per-hour HLL sketches of user_id
@@ -357,10 +384,9 @@ def stream_hourly_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("events"),
         )
     )
-    return drain_to_parquet(agg, spark, "complete")
+    return _drain(agg, spark, "complete")
 
 
-@_restores_shuffle_width
 def stream_cms_counters(
     spark: SparkSession,
     sf_dir: str,
@@ -430,16 +456,7 @@ def stream_cms_counters(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     src = normalize_ts(reader.parquet(sf_dir), ts_dtype)
-    q = (
-        src.writeStream.outputMode("append")
-        .foreachBatch(apply_batch)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        restore_shuffle_width(spark)
+    run_stream(spark, src, apply_batch, width=default_parallelism())
     if latest["path"] is None:
         # empty stream: derive the group columns' REAL types from the
         # source schema (a hardcoded string type would break unions
@@ -460,7 +477,6 @@ def stream_cms_counters(
     return spark.read.parquet(latest["path"])
 
 
-@_restores_shuffle_width
 def stream_value_drift_bins(
     spark: SparkSession,
     sf_dir: str,
@@ -514,7 +530,7 @@ def _stream_side_bin_counts(
         )
         .agg(F.count("*").alias("cnt"))
     )
-    counts = drain_to_parquet(binned, spark, "complete")
+    counts = _drain(binned, spark, "complete")
     return (
         counts.groupBy("bin")
         .agg(
@@ -529,7 +545,6 @@ def _stream_side_bin_counts(
     )
 
 
-@_restores_shuffle_width
 def stream_value_ks_binned(
     spark: SparkSession,
     sf_dir: str,
@@ -550,7 +565,6 @@ def stream_value_ks_binned(
     return ks_binned_from_counts(wide, n_bins)
 
 
-@_restores_shuffle_width
 def stream_value_quantile_sketch(
     spark: SparkSession,
     sf_dir: str,
@@ -579,13 +593,12 @@ def stream_value_quantile_sketch(
         )
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    counters = drain_to_parquet(binned, spark, "complete")
+    counters = _drain(binned, spark, "complete")
     return histogram_quantiles(
         counters, lo=lo, width=width, quantiles=((1, 2), (19, 20), (99, 100))
     )
 
 
-@_restores_shuffle_width
 def stream_sliding_5min_counts(
     spark: SparkSession, sf_dir: str, state_partitions: int | None = None
 ) -> DataFrame:
@@ -598,28 +611,12 @@ def stream_sliding_5min_counts(
     Append-mode windows only flush when event time PASSES them, and a
     single-file stream's watermark update takes effect one micro-batch
     too late — so the source is staged with the sessionizers' late
-    sentinel files (streaming/stateful._stage_with_sentinels): two
+    sentinel files (:func:`_sentinel_stream`): two
     far-future rows arrive in follow-up micro-batches, advance the
     watermark past every real window, and land in windows 10+ days
     away from the data, which the caller filters by a literal cutoff.
     """
-    import shutil
-    import tempfile
-
-    from etl_mudah_spark.streaming.stateful import _stage_with_sentinels
-
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="sliding_peak_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        raw = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        )
+    with _sentinel_stream(spark, sf_dir, "sliding_peak_") as raw:
         agg = (
             raw.where(F.col("ts").isNotNull())
             .withWatermark("ts", "10 minutes")
@@ -631,10 +628,4 @@ def stream_sliding_5min_counts(
                 "n_events",
             )
         )
-        return drain_to_parquet(agg, spark, "append")
-    finally:
-        # drain_to_parquet restores on success; this covers an
-        # exception between events_raw_schema and the drain (no-op when
-        # the drain already restored).
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)
+        return _drain(agg, spark, "append", state_partitions)

@@ -25,9 +25,6 @@ pandas work is O(rows log rows) for the in-batch sort.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
 from typing import Any, Iterator
 
 import pandas as pd
@@ -36,18 +33,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from etl_mudah_spark.streaming.pipeline import (
-    drain_to_parquet,
-    events_raw_schema,
-    restore_shuffle_width,
-    normalize_ts,
+    _SENTINEL_USER,
+    _drain,
+    _sentinel_stream,
 )
 
 OUT_SCHEMA = (
     "user_id bigint, session_start timestamp, session_end timestamp, n_events bigint"
 )
 STATE_SCHEMA = "start bigint, last bigint, n bigint"
-
-_SENTINEL_USER = -1
 
 
 def _us_to_ts(us: int) -> pd.Timestamp:
@@ -112,42 +106,6 @@ def _make_sessionizer(gap_us: int):
     return fn
 
 
-def _stage_with_sentinels(
-    spark: SparkSession, sf_dir: str, staging: str, ddl: str, ts_dtype: str
-) -> None:
-    """Copy events.parquet into ``staging`` and append two sentinel
-    files with strictly increasing mtimes (file source orders batches
-    by modification time under maxFilesPerTrigger=1). Sentinels are
-    written in the SAME ts encoding as the source file so one declared
-    stream schema covers all staged files."""
-    import datetime
-
-    dst = os.path.join(staging, "000_events.parquet")
-    shutil.copyfile(os.path.join(sf_dir, "events.parquet"), dst)
-    max_ts = spark.read.schema(ddl).parquet(dst).agg(F.max("ts")).first()[0]
-    base_mtime = os.stat(dst).st_mtime
-    for i, offset_days in enumerate((10, 20), start=1):
-        if ts_dtype == "bigint":  # nanos-as-long
-            sentinel_ts = max_ts + offset_days * 24 * 3600 * 10**9
-        else:
-            sentinel_ts = max_ts + datetime.timedelta(days=offset_days)
-        sentinel = spark.createDataFrame(
-            [(-(10**9) - i, sentinel_ts, _SENTINEL_USER, "sentinel", 0.0, "{}")],
-            ddl,
-        )
-        path = os.path.join(staging, f"{i:03d}_sentinel")
-        sentinel.coalesce(1).write.parquet(path)
-        for f in os.listdir(path):
-            full = os.path.join(path, f)
-            if f.endswith(".parquet"):
-                shutil.move(full, os.path.join(staging, f"{i:03d}_sentinel.parquet"))
-        shutil.rmtree(path, ignore_errors=True)
-        os.utime(
-            os.path.join(staging, f"{i:03d}_sentinel.parquet"),
-            (base_mtime + 10 * i, base_mtime + 10 * i),
-        )
-
-
 def stream_sessionize_native(
     spark: SparkSession, sf_dir: str, gap_minutes: int = 30
 ) -> DataFrame:
@@ -166,23 +124,10 @@ def stream_sessionize_native(
     directly, keeping the output identical to the stateful operator
     and the batch lag-window oracle.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="sessionize_native_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        stream = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        ).withWatermark("ts", "0 seconds")
+    with _sentinel_stream(spark, sf_dir, "sessionize_native_") as raw:
         sessions = (
-            stream.groupBy(
-                "user_id", F.session_window("ts", f"{gap_minutes} minutes")
-            )
+            raw.withWatermark("ts", "0 seconds")
+            .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
             .agg(
                 F.min("ts").alias("session_start"),
                 F.max("ts").alias("session_end"),
@@ -190,11 +135,8 @@ def stream_sessionize_native(
             )
             .select("user_id", "session_start", "session_end", "n_events")
         )
-        out = drain_to_parquet(sessions, spark, "append")
-        return out.where(F.col("user_id") != _SENTINEL_USER)
-    finally:
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)
+        out = _drain(sessions, spark, "append")
+    return out.where(F.col("user_id") != _SENTINEL_USER)
 
 
 def stream_sessionize_stateful(
@@ -203,34 +145,23 @@ def stream_sessionize_stateful(
     """Per-session rows (user_id, session_start, session_end, n_events)
     computed by a stateful streaming query; equals the batch lag-window
     sessionization on the same data."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="sessionize_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        stream = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        ).withWatermark("ts", "0 seconds")
-        sessions = stream.groupBy("user_id").applyInPandasWithState(
-            _make_sessionizer(gap_minutes * 60 * 1_000_000),
-            OUT_SCHEMA,
-            STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
+    with _sentinel_stream(spark, sf_dir, "sessionize_") as raw:
+        sessions = (
+            raw.withWatermark("ts", "0 seconds")
+            .groupBy("user_id")
+            .applyInPandasWithState(
+                _make_sessionizer(gap_minutes * 60 * 1_000_000),
+                OUT_SCHEMA,
+                STATE_SCHEMA,
+                "append",
+                GroupStateTimeout.EventTimeTimeout,
+            )
         )
         # Stage to parquet (executor-parallel) and return a lazy read:
         # session output is O(users × sessions) — collecting it through
         # the driver is the one thing this path must never do at scale.
-        out = drain_to_parquet(sessions, spark, "append")
-        return out.where(F.col("user_id") != _SENTINEL_USER)
-    finally:
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)
+        out = _drain(sessions, spark, "append")
+    return out.where(F.col("user_id") != _SENTINEL_USER)
 
 
 def stream_unconverted_views(
@@ -255,19 +186,7 @@ def stream_unconverted_views(
     from one side would stall it; sentinel rows join only each other
     (same user, same ts) and are dropped by the final user filter.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    ddl, ts_dtype = events_raw_schema(
-        spark, os.path.join(sf_dir, "events.parquet")
-    )
-    staging = tempfile.mkdtemp(prefix="unconverted_")
-    try:
-        _stage_with_sentinels(spark, sf_dir, staging, ddl, ts_dtype)
-        raw = normalize_ts(
-            spark.readStream.schema(ddl)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staging),
-            ts_dtype,
-        )
+    with _sentinel_stream(spark, sf_dir, "unconverted_") as raw:
         views = (
             raw.where(F.col("event_type").isin("view", "sentinel"))
             .select(
@@ -307,12 +226,9 @@ def stream_unconverted_views(
         # state flush (observed as undercounted users when both
         # filters ran pre-drain).
         unconverted = joined.where(F.col("p_id").isNull())
-        result = drain_to_parquet(unconverted, spark, "append")
-        return (
-            result.where(F.col("v_user") != _SENTINEL_USER)
-            .groupBy(F.col("v_user").alias("user_id"))
-            .agg(F.count("*").alias("unconverted_views"))
-        )
-    finally:
-        restore_shuffle_width(spark)
-        shutil.rmtree(staging, ignore_errors=True)
+        result = _drain(unconverted, spark, "append")
+    return (
+        result.where(F.col("v_user") != _SENTINEL_USER)
+        .groupBy(F.col("v_user").alias("user_id"))
+        .agg(F.count("*").alias("unconverted_views"))
+    )

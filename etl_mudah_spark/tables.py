@@ -50,26 +50,39 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # one chokepoint every query passes through.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
-        # events.ts encoding varies across testdata generations: INT64
-        # TIMESTAMP(NANOS) (which Spark 4 rejects outright unless read as
-        # long) or TIMESTAMP(MICROS) with isAdjustedToUTC=false (which
-        # Spark reads as TIMESTAMP_NTZ, breaking epoch casts downstream).
-        # Normalize both to the session-timezone TIMESTAMP type; the
-        # session runs UTC, so NTZ→LTZ changes no values and DuckDB-
-        # oracle parity holds. Epoch arithmetic (window buckets, session
-        # gaps) on the normalized ts must not depend on the host
-        # timezone.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(_path(sf_dir, name))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # nanos-as-long: integer `div`, not `/` — float division
-            # would lose precision above 2^53 ns.
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        return df
+        df, ts_dtype = read_raw_events(spark, _path(sf_dir, name))
+        return normalize_ts(df, ts_dtype)
     return spark.read.parquet(_path(sf_dir, name))
+
+
+def read_raw_events(
+    spark: SparkSession, path: str
+) -> tuple[DataFrame, str | None]:
+    """Batch-read an events parquet with ``ts`` as stored, returning
+    ``(df, ts_dtype)``. events.ts encoding varies across testdata
+    generations: INT64 TIMESTAMP(NANOS) (which Spark 4 rejects outright
+    unless read as long, hence nanosAsLong), TIMESTAMP(MICROS) with
+    isAdjustedToUTC=false (read as ``timestamp_ntz``), or plain
+    ``timestamp``. :func:`normalize_ts` maps the raw column to the
+    session type; batch loads and stream sources share both halves."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    return df, dict(df.dtypes).get("ts")
+
+
+def normalize_ts(df: DataFrame, ts_dtype: str | None) -> DataFrame:
+    """Convert a raw ``ts`` column (any supported encoding) to the
+    session-timezone TIMESTAMP type. The session runs UTC, so the
+    NTZ→LTZ cast changes no values and DuckDB-oracle parity holds;
+    epoch arithmetic (window buckets, session gaps) on the normalized
+    ts does not depend on the host timezone."""
+    if ts_dtype == "bigint":
+        # nanos-as-long: integer `div`, not `/` — float division would
+        # lose precision above 2^53 ns.
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_dtype == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
 
 
 def _path(sf_dir: str, name: str) -> str:

@@ -26,6 +26,21 @@ def sf_dir():
     return SF_SMOKE
 
 
+@contextlib.contextmanager
+def conf_set(spark, key: str, value: str):
+    """Set a session conf for the block, then put back exactly what was
+    there: the prior explicit value, or no explicit value at all."""
+    prior = spark.conf.get(key, None)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        if prior is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prior)
+
+
 @pytest.fixture
 def publish_crash():
     """``with publish_crash(base, window): <call that publishes base>``
@@ -35,13 +50,16 @@ def publish_crash():
     ``window="write"``: the first parquet write into the new version
     dir completes, then raises — a crash inside the write callback
     that leaves a partial version. ``window="flip"``: ``os.replace``
-    raises — the version is fully written but the ``_current`` pointer
-    never flips."""
+    onto ``base``'s pointer raises — the version is fully written but
+    the ``_current`` pointer never flips. Publishes of other tables in
+    the same call go through, so a crash can target the second of two
+    publishes."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     @contextlib.contextmanager
     def inject(base: str, window: str):
         orig = DataFrameWriter.parquet
+        orig_replace = os.replace
 
         def parquet(self, path, *args, **kwargs):
             orig(self, path, *args, **kwargs)
@@ -49,7 +67,9 @@ def publish_crash():
                 raise RuntimeError(f"injected crash after writing {path}")
 
         def replace(src, dst):
-            raise RuntimeError(f"injected crash before flipping {dst}")
+            if os.path.normpath(os.path.dirname(str(dst))) == os.path.normpath(base):
+                raise RuntimeError(f"injected crash before flipping {dst}")
+            orig_replace(src, dst)
 
         with pytest.MonkeyPatch.context() as mp:
             if window == "write":

@@ -650,6 +650,7 @@ def test_minhash_index_compact_preserves_results(spark, tmp_path):
         minhash_index_build,
         minhash_index_compact,
     )
+    from etl_mudah_spark.operators.manifest import manifest_resolve
 
     full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
     idx = str(tmp_path / "idx")
@@ -667,14 +668,9 @@ def test_minhash_index_compact_preserves_results(spark, tmp_path):
             ).collect()
         }
 
-    def n_files():
-        return len(
-            [
-                f
-                for f in glob.glob(f"{idx}/**/*.parquet", recursive=True)
-                if "_precompact" not in f
-            ]
-        )
+    def n_files():  # live versions only: compaction retains the old one
+        live = [manifest_resolve(f"{idx}/{sub}") for sub in ("bands", "shingles")]
+        return sum(len(glob.glob(f"{d}/**/*.parquet", recursive=True)) for d in live)
 
     before_pairs, before_files = pairset(), n_files()
     minhash_index_compact(spark, idx, max_files=1)
@@ -720,4 +716,46 @@ def test_minhash_index_append_after_compaction_lands_in_live_version(
     assert got == pairset(ref)
     assert {a for a, _, _ in got} == {0, 1}
     for sub in ("bands", "shingles"):
-        assert sorted(os.listdir(f"{idx}/{sub}")) == ["_current", "v=00000001"]
+        # v=1 is the build, v=2 the compaction (v=1 retained, keep=1)
+        assert sorted(os.listdir(f"{idx}/{sub}")) == [
+            "_current", "v=00000001", "v=00000002"
+        ]
+
+
+def test_minhash_index_build_crash_leaves_live_index_answering(
+    spark, tmp_path, publish_crash
+):
+    """A rebuild that crashes inside either sub-table's version write
+    or before its pointer flip leaves the live index answering exactly
+    as before (shingles publish first, so old bands never meet missing
+    shingles); the next build publishes and answers like a fresh index
+    over the grown corpus."""
+    from etl_mudah_spark.operators.dedup import (
+        minhash_dedup_incremental,
+        minhash_index_build,
+    )
+
+    full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
+    grown = full_df.where(F.col("doc_id") <= 3)
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    minhash_index_build(full_df.where(F.col("doc_id") <= 1), idx)
+    minhash_index_build(grown, ref)
+    probe = spark.createDataFrame([(10, CORPUS[2][1])], "doc_id bigint, text string")
+
+    def answer(p):
+        return sorted(
+            (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
+            for r in minhash_dedup_incremental(
+                spark, probe, p, threshold=0.1, include_batch_pairs=False
+            ).collect()
+        )
+
+    before = answer(idx)
+    assert {a for a, _, _ in before} == {0, 1}
+    for sub in ("shingles", "bands"):
+        for window in ("write", "flip"):
+            with publish_crash(f"{idx}/{sub}", window):
+                minhash_index_build(grown, idx)
+            assert answer(idx) == before, (sub, window)
+    minhash_index_build(grown, idx)
+    assert answer(idx) == answer(ref) != before

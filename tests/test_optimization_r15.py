@@ -15,7 +15,7 @@ import tempfile
 from pyspark.sql import functions as F
 
 from etl_mudah_spark.operators.ckpt import RELIABLE_DIR_CONF, materialize_once
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, conf_set
 
 
 def test_minhash_near_dup_single_shingle_pass(spark):
@@ -118,14 +118,10 @@ def test_big_orders_preagg_hint_gated_by_threshold(spark):
     # GBs and the bound says so).
     from etl_mudah_spark.plans import registry
 
-    prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1b")
-    try:
+    with conf_set(spark, "spark.sql.autoBroadcastJoinThreshold", "1b"):
         df = registry.REGISTRY["big_orders_preagg"].spark_fn(spark, SF_SMOKE)
         analyzed = df._jdf.queryExecution().analyzed().toString()
         assert "ResolvedHint" not in analyzed
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
 
 
 def test_materialize_once_local_by_default(spark):

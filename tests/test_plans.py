@@ -181,30 +181,34 @@ def test_q7_q8_broadcast_the_dimension_sides(spark):
     assert "BroadcastHashJoin" in q8
 
 
-def test_bm25_filters_terms_before_shuffle_and_takes_ordered(spark):
+def test_bm25_filters_terms_before_shuffle_and_takes_ordered(spark, monkeypatch):
     """doc_bm25_search's scale claims: the query-term IN-filter sits
     directly on the exploded tokens (the grouped relation is O(matching
     doc-terms), not O(corpus tokens)), corpus stats broadcast, and the
     final ranking is TakeOrdered, not sort+limit.
 
     Round 15: tf rides a materialize-once boundary (one tokenize pass
-    for its two consumers), so the IN-filter lives in the pre-boundary
-    tf subtree (_bm25_tf) and the final plan shows the ExistingRDD
-    boundary instead of a corpus scan per consumer."""
+    for its two consumers), so the final plan shows the ExistingRDD
+    boundary instead of a corpus scan per consumer, and the IN-filter
+    is pinned on the subtree the registered query actually hands to
+    that boundary."""
+    from etl_mudah_spark.plans import llmprep
+
+    materialized = []
+    orig = llmprep._materialize_once
+
+    def capture(df):
+        materialized.append(df)
+        return orig(df)
+
+    monkeypatch.setattr(llmprep, "_materialize_once", capture)
     plan = _plan(spark, "doc_bm25_search")
     assert "TakeOrderedAndProject" in plan
     assert "BroadcastHashJoin" in plan  # per-term df joins broadcast
     assert "ExistingRDD" in plan  # tf materialized once, not per consumer
 
-    from etl_mudah_spark.plans.llmprep import BM25_QUERY, _bm25_tf
-    from etl_mudah_spark.tables import load
-
-    tf_plan = (
-        _bm25_tf(load(spark, SF_SMOKE, "documents"), BM25_QUERY)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
+    assert len(materialized) == 1, "one materialize-once boundary (tf)"
+    tf_plan = materialized[0]._jdf.queryExecution().executedPlan().toString()
     filt = [
         l
         for l in tf_plan.splitlines()

@@ -406,6 +406,7 @@ def test_srp_index_compact_preserves_results(spark, tmp_path):
     the file count."""
     import glob
 
+    from etl_mudah_spark.operators.manifest import manifest_resolve
     from etl_mudah_spark.plans.datapipe import EMB_DIM
 
     emb = load(spark, SF_SMOKE, "embeddings")
@@ -434,17 +435,52 @@ def test_srp_index_compact_preserves_results(spark, tmp_path):
             ).collect()
         }
 
-    def n_files():
-        return len(
-            [
-                f
-                for f in glob.glob(f"{idx}/**/*.parquet", recursive=True)
-                if "_precompact" not in f
-            ]
-        )
+    def n_files():  # live versions only: compaction retains the old one
+        live = [manifest_resolve(f"{idx}/{sub}") for sub in ("buckets", "vectors")]
+        return sum(len(glob.glob(f"{d}/**/*.parquet", recursive=True)) for d in live)
 
     before_pairs, before_files = pairset(), n_files()
     sim.srp_index_compact(spark, idx, max_files=1)
     after_pairs, after_files = pairset(), n_files()
     assert after_pairs == before_pairs and before_pairs
     assert after_files < before_files
+
+
+def test_srp_index_build_crash_leaves_live_index_answering(
+    spark, tmp_path, publish_crash
+):
+    """The SRP twin of the MinHash rebuild crash test: a crash in
+    either sub-table's publish, in either window, leaves the live
+    index answering as before (vectors publish first); the next build
+    publishes and answers like a fresh index over the grown corpus."""
+    from etl_mudah_spark.plans.datapipe import EMB_DIM
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    grown = emb.where(F.col("vec_id") % 2 == 0)
+    batch = emb.where(F.col("vec_id") % 2 == 1)
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    params = dict(dim=EMB_DIM, n_planes=8, n_tables=24)
+
+    def answer(p):
+        return sorted(
+            tuple(r)
+            for r in sim.srp_dedup_incremental(
+                spark, batch, p, threshold=0.45, include_batch_pairs=False,
+                **params,
+            ).collect()
+        )
+
+    sim.srp_index_build(grown, ref, **params)
+    want = answer(ref)
+    assert want, "known near-dup pairs exist at smoke scale"
+    # the live index lacks one paired corpus vector, so the rebuild shows
+    old = grown.where(F.col("vec_id") != want[0][0])
+    sim.srp_index_build(old, idx, **params)
+    before = answer(idx)
+    for sub in ("vectors", "buckets"):
+        for window in ("write", "flip"):
+            with publish_crash(f"{idx}/{sub}", window):
+                sim.srp_index_build(grown, idx, **params)
+            assert answer(idx) == before, (sub, window)
+    sim.srp_index_build(grown, idx, **params)
+    assert answer(idx) == want != before

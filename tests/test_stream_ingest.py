@@ -455,6 +455,46 @@ def test_stream_ingest_with_quarantine_gate(spark, tmp_path):
         )
 
 
+def test_stream_ingest_stamps_batches_and_skips_empty_ones(spark, tmp_path):
+    """One aggregate per trigger decides both the stamp and the skip:
+    updated_at is the batch's max listing_date unless an explicit
+    batch_ts is passed, and a batch that is empty after the dead-letter
+    gate never reaches merge_upsert (no table is created)."""
+    import datetime
+
+    from etl_mudah_spark.operators.checks import in_range
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    _write_drop_file(
+        str(drop),
+        "b1.jsonl",
+        [_listing(1, 10.0, "2024-01-01 10:00:00"),
+         _listing(2, 20.0, "2024-03-01 10:00:00")],
+        time.time() - 5,
+    )
+
+    def stamps(table):
+        return {r["updated_at"] for r in spark.read.parquet(table).collect()}
+
+    t_data, t_explicit = str(tmp_path / "t1"), str(tmp_path / "t2")
+    stream_ingest_listings(spark, str(drop), t_data, str(tmp_path / "c1"))
+    assert stamps(t_data) == {datetime.datetime(2024, 3, 1, 10, 0)}
+    explicit = datetime.datetime(2030, 1, 1)
+    stream_ingest_listings(
+        spark, str(drop), t_explicit, str(tmp_path / "c2"), batch_ts=explicit
+    )
+    assert stamps(t_explicit) == {explicit}
+
+    t_empty, qpath = str(tmp_path / "t3"), str(tmp_path / "q")
+    stream_ingest_listings(
+        spark, str(drop), t_empty, str(tmp_path / "c3"),
+        row_checks=[in_range("price", 1000, 2000)], quarantine_path=qpath,
+    )
+    assert not os.path.exists(t_empty)
+    assert spark.read.parquet(qpath).count() == 2
+
+
 def test_stream_cms_equals_batch_sketch_multibatch(spark, tmp_path):
     """CMS linearity end to end: the events table split into FOUR
     files, streamed one file per trigger through stream_cms_counters
