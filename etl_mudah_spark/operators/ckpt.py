@@ -44,6 +44,14 @@ def materialize_once(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     reliable_dir = spark.conf.get(RELIABLE_DIR_CONF, "")
     if reliable_dir:
-        spark.sparkContext.setCheckpointDir(reliable_dir)
+        sc = spark.sparkContext
+        # setCheckpointDir makes a fresh UUID subdir on every call: set
+        # it only when the live one is not already a subdir of the knob
+        hpath = sc._jvm.org.apache.hadoop.fs.Path
+        want = hpath(reliable_dir)
+        want = want.getFileSystem(sc._jsc.hadoopConfiguration()).makeQualified(want)
+        cur = sc.getCheckpointDir()
+        if cur is None or not hpath(cur).getParent().equals(want):
+            sc.setCheckpointDir(reliable_dir)
         return df.checkpoint(eager=False)
     return df.localCheckpoint(eager=False)

@@ -266,8 +266,8 @@ def minhash_index_build(
     shingle_n: int = 3,
 ) -> None:
     """One-time O(corpus) job persisting the LSH dedup index:
-    ``{path}/bands`` = (id, band_hash) partitioned by band_id, and
-    ``{path}/shingles`` = (id, shingle array) for Jaccard verification.
+    ``bands`` = (id, band_hash) partitioned by band_id, and
+    ``shingles`` = (id, shingle array) for Jaccard verification.
 
     This is how a daily-ingest pipeline stays O(batch) instead of
     O(corpus) per day at 100 TB: corpus signatures are computed once and
@@ -277,22 +277,23 @@ def minhash_index_build(
     band_hash. (The same num_hashes/bands/shingle_n must be passed at
     query time — hash family and banding are the index's contract.)
 
-    Each sub-table is a manifest publish (operators/manifest.py), so a
-    crashed rebuild leaves the live index answering. Shingles publish
-    first: a crash between the two publishes pairs the old bands with
-    new shingles, which still cover every candidate a rebuild over a
-    grown corpus can produce.
+    The index is ONE manifest table (operators/manifest.py): both
+    sub-tables land in one version dir (``manifest_resolve(path)/bands``
+    and ``/shingles``) behind one ``_current`` pointer, so a crashed
+    rebuild leaves the whole live index answering and bands never pair
+    with another build's shingles. ``layout.compact_files(spark, path)``
+    compacts both sub-tables in one publish, keeping the band_id
+    layout.
     """
-    manifest_publish(
-        f"{path}/shingles",
-        lambda d: df.select(
-            F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-        ).write.parquet(d),
-    )
     buckets = minhash_band_buckets(df, id_col, text_col, num_hashes, bands, shingle_n)
-    manifest_publish(
-        f"{path}/bands", lambda d: buckets.write.partitionBy("band_id").parquet(d)
-    )
+
+    def write(d: str) -> None:
+        df.select(
+            F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
+        ).write.parquet(f"{d}/shingles")
+        buckets.write.partitionBy("band_id").parquet(f"{d}/bands")
+
+    manifest_publish(path, write)
 
 
 def minhash_index_append(
@@ -317,47 +318,14 @@ def minhash_index_append(
     (num_hashes, bands, shingle_n) contract must match the build —
     the hash family is deterministic in those parameters.
     """
+    live = manifest_resolve(path)
     buckets = minhash_band_buckets(
         batch, id_col, text_col, num_hashes, bands, shingle_n
     )
-    buckets.write.mode("append").partitionBy("band_id").parquet(
-        manifest_resolve(f"{path}/bands")
-    )
+    buckets.write.mode("append").partitionBy("band_id").parquet(f"{live}/bands")
     batch.select(
         F.col(id_col), word_shingles(F.col(text_col), shingle_n).alias("sh")
-    ).write.mode("append").parquet(manifest_resolve(f"{path}/shingles"))
-
-
-def minhash_index_compact(
-    spark,
-    path: str,
-    target_file_bytes: int = 32 * 1024 * 1024,
-    max_files: int | None = None,
-) -> int:
-    """Compact a streamed-into MinHash index's small files — the
-    operational closer of the streaming ingest loop: a per-trigger
-    ``minhash_index_append`` writes a few files per micro-batch, and a
-    year of 12-h triggers turns each band partition into ~10^3 tiny
-    files whose listing + footer reads dominate the incremental-dedup
-    probe's planning time. Runs ``layout.compact_files`` on the bands
-    and shingles sub-tables, one manifest publish each; the bands table
-    keeps its ``band_id=`` hive layout (each band partition sized on
-    its own bytes), so the planning-time band pruning the index exists
-    for survives. No ``minhash_index_append`` may run until it returns
-    (same contract as compact_files). Returns the new total file count.
-
-    Dedup results are EXACTLY unchanged (same rows, relocated) —
-    pinned in tests/test_dedup.py.
-    """
-    from etl_mudah_spark.operators.layout import compact_files
-
-    n = compact_files(
-        spark, f"{path}/bands", target_file_bytes, max_files=max_files
-    )
-    n += compact_files(
-        spark, f"{path}/shingles", target_file_bytes, max_files=max_files
-    )
-    return n
+    ).write.mode("append").parquet(f"{live}/shingles")
 
 
 def minhash_dedup_incremental(
@@ -387,8 +355,9 @@ def minhash_dedup_incremental(
     bounded by bucket collisions exactly like the self-join path; exact
     verification reads only the candidate ids' shingle rows.
     """
+    live = manifest_resolve(index_path)
     nb = minhash_band_buckets(batch, id_col, text_col, num_hashes, bands, shingle_n)
-    corpus = spark.read.parquet(manifest_resolve(f"{index_path}/bands"))
+    corpus = spark.read.parquet(f"{live}/bands")
     cands = (
         corpus.alias("c")
         .join(
@@ -402,9 +371,9 @@ def minhash_dedup_incremental(
         )
         .distinct()
     )
-    corpus_sh = spark.read.parquet(
-        manifest_resolve(f"{index_path}/shingles")
-    ).select(F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a"))
+    corpus_sh = spark.read.parquet(f"{live}/shingles").select(
+        F.col(id_col).alias("doc_a"), F.col("sh").alias("sh_a")
+    )
     batch_sh = batch.select(
         F.col(id_col).alias("doc_b"),
         word_shingles(F.col(text_col), shingle_n).alias("sh_b"),

@@ -284,9 +284,14 @@ def compact_files(
     btree index on listing_date, SURVEY.md §4).
 
     Hive-partitioned tables (``k=v/`` dirs, worked out from the layout)
-    compact as ONE table: every partition dir is rewritten with its
-    own bytes/target file count, so the partition columns and the
-    planning-time pruning they buy survive the rewrite.
+    and multi-table indexes (MinHash ``bands/`` + ``shingles/``, SRP
+    ``buckets/`` + ``vectors/``) compact as ONE table: every leaf dir
+    holding data is rewritten with its own bytes/target file count, so
+    the partition columns and the planning-time pruning they buy
+    survive the rewrite. Top-level ``_`` sidecar dirs describe the
+    rows, not their files (an index's ``_centroids``, ``_codebooks``,
+    ``_strata``), and are copied into the new version unchanged; a
+    ``_zonemap`` names the old files and is dropped (rebuild it).
 
     The rewrite publishes through operators/manifest.py: it lands in a
     fresh versioned directory under ``path`` and one atomic
@@ -310,6 +315,7 @@ def compact_files(
     """
     import math
     import os
+    import shutil
 
     from etl_mudah_spark.operators.manifest import manifest_publish, manifest_resolve
 
@@ -373,6 +379,10 @@ def compact_files(
                 os.path.join(data_path, rel),
                 os.path.normpath(os.path.join(new_dir, rel)),
             )
+        for d in os.listdir(data_path):
+            src = os.path.join(data_path, d)
+            if d.startswith("_") and d != "_zonemap" and os.path.isdir(src):
+                shutil.copytree(src, os.path.join(new_dir, d))
 
     new_dir = manifest_publish(path, write)
     return sum(

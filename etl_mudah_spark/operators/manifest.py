@@ -1,6 +1,9 @@
 """Manifest-pointer table publication — the ONE way a table is
-replaced in this engine (compaction, SCD2 history rebuilds, IVF/IVF-PQ
-index builds and re-fits, IVM aggregate refreshes).
+replaced in this engine (compaction, SCD2 history rebuilds, MinHash,
+SRP, IVF, PQ and IVF-PQ index builds and re-fits, IVM aggregate
+refreshes). A multi-table index is ONE manifest table: its sub-tables
+(``bands/`` + ``shingles/``, ``buckets/`` + ``vectors/``) and sidecars
+share one version dir behind one pointer.
 
 Directory renames are not a portable swap primitive: on S3-style object
 stores "rename" is a copy+delete over every object (O(bytes),

@@ -19,7 +19,10 @@ Scale design:
 
 from __future__ import annotations
 
+import functools
 import math
+import operator
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -612,6 +615,175 @@ def srp_topk_df(
     )
 
 
+# ---------------------------------------------------------------------------
+# IVF-family shared steps: the coarse fit, centroid I/O, frozen-centroid
+# assignment, probe-cell ranking and maintain policy that every IVF /
+# IVF-PQ builder, appender and query composes — one copy each, so the
+# seed, normalization and tie-breaks cannot diverge between them.
+# ---------------------------------------------------------------------------
+
+
+def _sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance between two array<double> columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def _centroids_to_expr(centroids) -> Column:
+    """A bounded list of vectors (the n_cells × dim coarse centroids,
+    or one PQ subspace's k codewords) as ONE parsed
+    array<array<double>> literal — a parsed SQL string costs ms where
+    one F.lit py4j round-trip per coordinate costs seconds."""
+    return F.expr(
+        "array("
+        + ",".join(
+            "array(" + ",".join(f"{float(v)!r}D" for v in c) + ")"
+            for c in centroids
+        )
+        + ")"
+    )
+
+
+def _normalized(vec_col: str) -> Column:
+    v = as_double(F.col(vec_col))
+    return F.transform(v, lambda x: x / F.greatest(l2_norm(v), F.lit(1e-12)))
+
+
+def _probe_normalized() -> Column:
+    """The probe_row ``_pv`` column L2-normalized — the space PQ/IVF-PQ
+    centroids are fit in. The ONE definition of probe normalization:
+    cell ranking (:func:`_top_cells`) and ADC scoring
+    (:func:`_adc_shortlist_df`) both call this, so the epsilon/norm
+    expression can never diverge between the two stages again (the r7
+    ADVICE bug class). ``_pv`` is already array<double> by construction
+    (every probe selection goes through ``as_double``), hence no cast
+    here — :func:`_normalized` is the general-column variant that
+    casts."""
+    return F.transform(
+        F.col("_pv"),
+        lambda x: x / F.greatest(l2_norm(F.col("_pv")), F.lit(1e-12)),
+    )
+
+
+def _fit_cells(
+    df: DataFrame, x: Column, n_cells: int, seed: int
+) -> tuple[DataFrame, list[list[float]]]:
+    """Fit the KMeans coarse quantizer on the vectors ``x`` and assign
+    every row of ``df`` its ``cell``. Returns ``(df + cell, centroids)``
+    with ``centroids[i]`` the center of cell i. The fit is the one eager
+    (iterative) step of every IVF-family build and on-the-fly query."""
+    from pyspark.ml.clustering import KMeans
+    from pyspark.ml.functions import array_to_vector
+
+    feats = df.withColumn("_feat", array_to_vector(x))
+    model = KMeans(
+        k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="cell"
+    ).fit(feats.select("_feat"))
+    cents = [[float(v) for v in c] for c in model.clusterCenters()]
+    return model.transform(feats).drop("_feat"), cents
+
+
+def _centroid_df(spark: SparkSession, cents: list[list[float]]) -> DataFrame:
+    """Centroids as the (cell, centroid) relation that builds persist
+    under ``_centroids`` and :func:`_top_cells` ranks."""
+    return spark.createDataFrame(
+        list(enumerate(cents)), "cell int, centroid array<double>"
+    )
+
+
+def _read_centroids(spark: SparkSession, live: str) -> list[list[float]]:
+    """The persisted centroids of a live IVF-family version dir in cell
+    order — a bounded n_cells-row read by construction."""
+    rows = spark.read.parquet(f"{live}/_centroids").collect()
+    return [
+        [float(v) for v in r["centroid"]]
+        for r in sorted(rows, key=lambda r: r["cell"])
+    ]
+
+
+def _nearest_cell(df: DataFrame, x: Column, cents: Column) -> DataFrame:
+    """``df`` plus ``cell``, the nearest FROZEN centroid to ``x``:
+    squared distance to every centroid of the :func:`_centroids_to_expr`
+    literal ``cents``, argmin via array_position(array_min) — pure
+    Column algebra, ties break to the LOWEST cell id."""
+    return (
+        df.withColumn("_d2", F.transform(cents, lambda c: _sq_dist(x, c)))
+        .withColumn(
+            "cell",
+            (F.array_position(F.col("_d2"), F.array_min("_d2")) - 1).cast("int"),
+        )
+        .drop("_d2")
+    )
+
+
+def _top_cells(
+    cents: DataFrame, probe: DataFrame, n_probe: int, normalized: bool
+) -> DataFrame:
+    """The ``n_probe`` cells whose centroids lie nearest the 1-row
+    ``probe`` (:func:`probe_row`), as a one-column ``_pcell`` relation:
+    the (cell, centroid) relation — n_cells rows by construction —
+    crossJoined with the broadcast probe and ranked in-plan, ties to
+    the lowest cell. ``normalized`` ranks the L2-normalized probe: the
+    IVF-PQ centroids live in that space, and an un-normalized probe
+    could pick other cells than the ADC stage scores, a recall loss
+    the exact re-rank cannot repair (ADVICE r7)."""
+    pv = _probe_normalized() if normalized else F.col("_pv")
+    return (
+        cents.crossJoin(F.broadcast(probe))
+        .select(
+            F.col("cell").alias("_pcell"),
+            _sq_dist(F.col("centroid"), pv).alias("_d2"),
+        )
+        .orderBy(F.asc("_d2"), F.asc("_pcell"))
+        .limit(n_probe)
+        .select("_pcell")
+    )
+
+
+def _maintain(
+    spark: SparkSession,
+    index_path: str,
+    max_imbalance: float,
+    n_cells: int | None,
+    rebuild: Callable[[str, int], None],
+) -> dict:
+    """The measure-then-act body of :func:`ivf_maintain` and
+    :func:`ivfpq_maintain`: prune orphan versions of crashed publishes,
+    measure the live version's max/mean cell occupancy with one
+    partition-pruned aggregate, and past ``max_imbalance`` call
+    ``rebuild(live, n_cells)`` — a build published as the next
+    version. ``n_cells`` defaults to the current centroid count."""
+    recovered = manifest_recover(index_path)
+    live = manifest_resolve(index_path)
+    stats = (
+        spark.read.parquet(live)
+        .groupBy("cell")
+        .agg(F.count("*").alias("n"))
+        .agg(
+            F.max("n").alias("mx"),
+            F.avg("n").alias("avg"),
+            F.sum("n").alias("total"),
+        )
+        .first()
+    )
+    ratio = float(stats["mx"]) / float(stats["avg"])
+    n_cells = n_cells or spark.read.parquet(f"{live}/_centroids").count()
+    report = {
+        "rebuilt": False,
+        "recovered": recovered,
+        "imbalance_ratio": round(ratio, 3),
+        "n_cells": n_cells,
+        "n_vectors": int(stats["total"]),
+    }
+    if ratio > max_imbalance:
+        rebuild(live, n_cells)
+        report["rebuilt"] = True
+    return report
+
+
 def ivf_topk(
     df: DataFrame,
     query_vec: list[float],
@@ -634,19 +806,14 @@ def ivf_topk(
     recall depends on (n_cells, n_probe); compare against
     :func:`brute_force_topk` (pinned in tests/test_similarity_ivf.py).
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.withColumn("_feat", array_to_vector(as_double(F.col(vec_col))))
-    km = KMeans(k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="_cell")
-    model = km.fit(feats.select("_feat"))
+    assigned, cents = _fit_cells(df, as_double(F.col(vec_col)), n_cells, seed)
     # Probe cells chosen driver-side: centroids are tiny (n_cells × dim).
     dists = [
         (i, sum((c - q) ** 2 for c, q in zip(center, query_vec)))
-        for i, center in enumerate(model.clusterCenters())
+        for i, center in enumerate(np.asarray(cents))
     ]
     probe = [i for i, _ in sorted(dists, key=lambda t: t[1])[:n_probe]]
-    cand = model.transform(feats).where(F.col("_cell").isin(probe))
+    cand = assigned.where(F.col("cell").isin(probe))
     return brute_force_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
@@ -667,32 +834,12 @@ def ivf_topk_df(
     a literal relation crossJoined with the broadcast probe, ranked by
     squared distance, and the top ``n_probe`` cells semi-join the cell
     assignments. The query vector never surfaces on the driver."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.withColumn("_feat", array_to_vector(as_double(F.col(vec_col))))
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="_cell"
+    assigned, cents = _fit_cells(df, as_double(F.col(vec_col)), n_cells, seed)
+    top = _top_cells(
+        _centroid_df(df.sparkSession, cents), probe, n_probe, normalized=False
     )
-    model = km.fit(feats.select("_feat"))
-    cents = df.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>",
-    )
-    d2 = F.aggregate(
-        F.zip_with(F.col("centroid"), F.col("_pv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    top_cells = (
-        cents.crossJoin(F.broadcast(probe))
-        .select("cell", d2.alias("_d2"))
-        .orderBy(F.asc("_d2"), F.asc("cell"))
-        .limit(n_probe)
-        .select("cell")
-    )
-    cand = model.transform(feats).join(
-        F.broadcast(top_cells), F.col("_cell") == F.col("cell"), "left_semi"
+    cand = assigned.join(
+        F.broadcast(top), F.col("cell") == F.col("_pcell"), "left_semi"
     )
     return brute_force_topk_df(cand, probe, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -721,21 +868,13 @@ def ivf_build_index(
     over a live index is atomic; every reader and appender of the index
     resolves the live version first.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.withColumn("_feat", array_to_vector(as_double(F.col(vec_col))))
-    km = KMeans(k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="cell")
-    model = km.fit(feats.select("_feat"))
-    assigned = model.transform(feats).drop("_feat")
-    centroids = df.sparkSession.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, centroid array<double>",
-    )
+    assigned, cents = _fit_cells(df, as_double(F.col(vec_col)), n_cells, seed)
 
     def write(d: str) -> None:
         assigned.write.partitionBy("cell").parquet(d)
-        centroids.coalesce(1).write.parquet(f"{d}/_centroids")
+        _centroid_df(df.sparkSession, cents).coalesce(1).write.parquet(
+            f"{d}/_centroids"
+        )
 
     manifest_publish(index_path, write)
 
@@ -751,38 +890,20 @@ def ivf_index_append(
     O(batch) daily ingest, the IVF twin of the minhash incremental
     index (operators/dedup.py).
 
-    The assignment is pure Column algebra: squared distance to each of
-    the (bounded, by construction) centroids as an array literal,
-    argmin via array_position(array_min) — ties break to the LOWEST
-    cell id, deterministically. Existing partitions are untouched (the
+    The assignment is pure Column algebra against the (bounded, by
+    construction) centroids as one parsed array literal
+    (:func:`_nearest_cell`) — ties break to the LOWEST cell id,
+    deterministically. Existing partitions are untouched (the
     append lands only in the batch's cells); queries see the union
     immediately. No re-fit: centroid drift accumulates until a
     periodic :func:`ivf_build_index` re-balance, the standard
     IVF-serving tradeoff.
     """
     live = manifest_resolve(index_path)
-    cents = sorted(
-        spark.read.parquet(f"{live}/_centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    v = as_double(F.col(vec_col))
-    d2s = [
-        F.aggregate(
-            F.zip_with(
-                v,
-                F.array(*[F.lit(float(x)) for x in r["centroid"]]),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        for r in cents
-    ]
-    arr = F.array(*d2s)
-    cell = (F.array_position(arr, F.array_min(arr)) - 1).cast("int")
-    batch.withColumn("cell", cell).write.mode("append").partitionBy(
-        "cell"
-    ).parquet(live)
+    cents = _centroids_to_expr(_read_centroids(spark, live))
+    _nearest_cell(batch, as_double(F.col(vec_col)), cents).write.mode(
+        "append"
+    ).partitionBy("cell").parquet(live)
 
 
 def ivf_query_index(
@@ -839,20 +960,10 @@ def ivf_query_index_df(
     the way post-filtering a global shortlist can.
     """
     live = manifest_resolve(index_path)
-    cents = spark.read.parquet(f"{live}/_centroids")
-    d2 = F.aggregate(
-        F.zip_with(F.col("centroid"), F.col("_pv"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    top = _top_cells(
+        spark.read.parquet(f"{live}/_centroids"), probe, n_probe, normalized=False
     )
-    cells = [
-        r["cell"]
-        for r in cents.crossJoin(F.broadcast(probe))
-        .select("cell", d2.alias("_d2"))
-        .orderBy(F.asc("_d2"), F.asc("cell"))
-        .limit(n_probe)
-        .collect()
-    ]
+    cells = [r["_pcell"] for r in top.collect()]
     scan = spark.read.parquet(live).where(F.col("cell").isin(cells))
     if where is not None:
         scan = scan.where(where)
@@ -1085,9 +1196,9 @@ def srp_index_build(
 ) -> None:
     """Persist the SRP-LSH dedup index — the cosine-family twin of
     operators/dedup.py:minhash_index_build, closing the incremental
-    story for the third dedup family: ``{path}/buckets`` = (id, the t
-    per-table bucket ids) and ``{path}/vectors`` = (id, vector, norm)
-    for exact verification.
+    story for the third dedup family: ``buckets`` = (id, the t
+    per-table bucket ids) and ``vectors`` = (id, vector, norm) for
+    exact verification.
 
     Daily embedding ingest then stays O(batch): corpus projections (the
     Arrow matmul, the expensive part) are computed ONCE here; each new
@@ -1097,22 +1208,21 @@ def srp_index_build(
     query time reproduces build-time buckets exactly — the index's
     contract, like minhash's band parameters.
 
-    Each sub-table is a manifest publish, vectors first — the same
-    crash contract as minhash_index_build.
+    One manifest table like minhash_index_build: both sub-tables live
+    under ``manifest_resolve(path)`` behind one pointer, and
+    ``layout.compact_files(spark, path)`` compacts them in one publish.
     """
-    manifest_publish(
-        f"{path}/vectors",
-        lambda d: df.select(F.col(id_col), as_double(F.col(vec_col)).alias("v"))
-        .withColumn("norm", l2_norm(F.col("v")))
-        .write.parquet(d),
-    )
     buckets = srp_buckets_udf(dim, n_planes, n_tables)
-    manifest_publish(
-        f"{path}/buckets",
-        lambda d: df.select(
+
+    def write(d: str) -> None:
+        df.select(F.col(id_col), as_double(F.col(vec_col)).alias("v")).withColumn(
+            "norm", l2_norm(F.col("v"))
+        ).write.parquet(f"{d}/vectors")
+        df.select(
             F.col(id_col), buckets(F.col(vec_col)).alias("bkts")
-        ).write.parquet(d),
-    )
+        ).write.parquet(f"{d}/buckets")
+
+    manifest_publish(path, write)
 
 
 def srp_index_append(
@@ -1139,42 +1249,16 @@ def srp_index_append(
     parameters are caller-held rather than persisted, matching
     srp_dedup_incremental's existing contract).
     """
+    live = manifest_resolve(path)
     buckets = srp_buckets_udf(dim, n_planes, n_tables)
     batch.select(
         F.col(id_col), buckets(F.col(vec_col)).alias("bkts")
-    ).write.mode("append").parquet(manifest_resolve(f"{path}/buckets"))
+    ).write.mode("append").parquet(f"{live}/buckets")
     batch.select(
         F.col(id_col), as_double(F.col(vec_col)).alias("v")
     ).withColumn("norm", l2_norm(F.col("v"))).write.mode("append").parquet(
-        manifest_resolve(f"{path}/vectors")
+        f"{live}/vectors"
     )
-
-
-def srp_index_compact(
-    spark,
-    path: str,
-    target_file_bytes: int = 32 * 1024 * 1024,
-    max_files: int | None = None,
-) -> int:
-    """Compact a streamed-into SRP index's small files — the cosine
-    twin of ``dedup.minhash_index_compact``: per-trigger
-    ``srp_index_append`` writes accumulate until listing + footer
-    reads dominate the per-batch probe's planning time. Runs
-    ``layout.compact_files`` (a manifest publish per sub-table) on the
-    buckets and vectors dirs; no ``srp_index_append`` may run until it
-    returns. Returns the new total file count.
-    Dedup results are exactly unchanged — pinned in
-    tests/test_similarity_batch.py.
-    """
-    from etl_mudah_spark.operators.layout import compact_files
-
-    n = compact_files(
-        spark, f"{path}/buckets", target_file_bytes, max_files=max_files
-    )
-    n += compact_files(
-        spark, f"{path}/vectors", target_file_bytes, max_files=max_files
-    )
-    return n
 
 
 def srp_dedup_incremental(
@@ -1212,6 +1296,7 @@ def srp_dedup_incremental(
     candidates map-side exactly like the self-join path; verification
     reads only the candidate ids' vector rows.
     """
+    live = manifest_resolve(index_path)
     buckets = srp_buckets_udf(dim, n_planes, n_tables)
     nb = batch.select(
         F.col(id_col).alias("_bid"), buckets(F.col(vec_col)).alias("_bbkts")
@@ -1219,7 +1304,7 @@ def srp_dedup_incremental(
         "_bid", "_bbkts", F.posexplode("_bbkts").alias("_tbl", "_bkt")
     )
     cx = (
-        spark.read.parquet(manifest_resolve(f"{index_path}/buckets"))
+        spark.read.parquet(f"{live}/buckets")
         .select(F.col(id_col).alias("_cid"), F.col("bkts").alias("_cbkts"))
         .select("_cid", "_cbkts", F.posexplode("_cbkts").alias("_tbl", "_bkt"))
     )
@@ -1247,7 +1332,7 @@ def srp_dedup_incremental(
         .where(F.col("_cid") != F.col("_bid"))
         .select("_cid", "_bid")
     )
-    vc = spark.read.parquet(manifest_resolve(f"{index_path}/vectors")).select(
+    vc = spark.read.parquet(f"{live}/vectors").select(
         F.col(id_col).alias("_cid"),
         F.col("v").alias("_va"),
         F.col("norm").alias("_na"),
@@ -1454,50 +1539,52 @@ def pq_topk(
     return brute_force_topk(cand, query_vec, k=k, id_col=id_col, vec_col=vec_col)
 
 
-def _pq_adc_shortlist_df(
+def _adc_shortlist_df(
     encoded: DataFrame,
-    codebooks: np.ndarray,
+    books: np.ndarray,
     probe: DataFrame,
     shortlist: int,
     id_col: str,
     where: Column | None = None,
+    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
-    """In-plan ADC scoring shared by :func:`pq_topk_df` and
-    :func:`pq_query_index_df`: the codebooks (a few KB, driver-trained
-    by construction) fold in as array<array<double>> literals; each
-    encoded row's distance is m element_at/slice/zip_with terms
-    between its chosen centroids and the broadcast (L2-normalized)
-    probe vector — pure codegen, no Python, no driver job for the
-    query itself. An optional metadata predicate applies BELOW the
-    scoring (pre-filter, pushable into the index scan)."""
-    m, _kk, sub = codebooks.shape
-    pvn = _probe_normalized()
-    score = None
-    for i in range(m):
-        # ONE parsed SQL expression per subspace instead of m·k·sub
-        # F.lit() py4j round-trips (4096 of them cost ~5s of pure
-        # driver-side plan construction; the parsed string costs ms)
-        cents = F.expr(
-            "array("
-            + ",".join(
-                "array(" + ",".join(f"{float(v)!r}D" for v in c) + ")"
-                for c in codebooks[i]
-            )
-            + ")"
-        )
-        chosen = F.element_at(cents, F.element_at("pq_codes", i + 1) + 1)
-        qsub = F.slice(F.col("_pvn"), i * sub + 1, sub)
-        term = F.aggregate(
-            F.zip_with(qsub, chosen, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        score = term if score is None else score + term
+    """In-plan ADC scoring shared by the flat-PQ and IVF-PQ queries:
+    each subspace's codebook (a few KB, driver-trained by construction)
+    folds in as one parsed array<array<double>> literal, and a row's
+    distance is m slice/element_at/zip_with terms between the broadcast
+    L2-normalized probe and its chosen codewords — pure codegen, no
+    Python, no driver job for the query itself. With ``centroids``
+    (IVF-PQ) the probe's residual against the row's cell replaces the
+    probe — distance ≈ Σᵢ ‖(q̂ − cent_cell)ᵢ − codebookᵢ[codeᵢ]‖² — so
+    ONE pruned scan scores every probed cell (no per-cell plan union).
+    An optional metadata predicate applies BELOW the scoring
+    (pre-filter, pushable into the index scan)."""
+    m, _kk, sub = books.shape
     if where is not None:
         encoded = encoded.where(where)
+    scored = encoded.crossJoin(
+        F.broadcast(probe.select(_probe_normalized().alias("_pvn")))
+    )
+    q = F.col("_pvn")
+    if centroids is not None:
+        chosen = F.element_at(_centroids_to_expr(centroids), F.col("cell") + 1)
+        scored = scored.withColumn("_qr", F.zip_with(q, chosen, lambda a, b: a - b))
+        q = F.col("_qr")
+    score = functools.reduce(
+        operator.add,
+        [
+            _sq_dist(
+                F.slice(q, i * sub + 1, sub),
+                F.element_at(
+                    _centroids_to_expr(books[i]),
+                    F.element_at("pq_codes", i + 1) + 1,
+                ),
+            )
+            for i in range(m)
+        ],
+    )
     return (
-        encoded.crossJoin(F.broadcast(probe.select(pvn.alias("_pvn"))))
-        .select(id_col, score.alias("adc_dist"))
+        scored.select(id_col, score.alias("adc_dist"))
         .orderBy(F.asc("adc_dist"), F.asc(id_col))
         .limit(shortlist)
     )
@@ -1514,10 +1601,10 @@ def pq_topk_df(
 ) -> DataFrame:
     """:func:`pq_topk` with the probe as a 1-row DataFrame
     (:func:`probe_row`): ADC lookup in-plan via
-    :func:`_pq_adc_shortlist_df`, exact re-rank on the broadcast
+    :func:`_adc_shortlist_df`, exact re-rank on the broadcast
     shortlist — single job end to end."""
     encoded = pq_encode(df, codebooks, id_col=id_col, vec_col=vec_col)
-    short = _pq_adc_shortlist_df(encoded, codebooks, probe, shortlist, id_col)
+    short = _adc_shortlist_df(encoded, codebooks, probe, shortlist, id_col)
     cand = df.join(F.broadcast(short.select(id_col)), id_col)
     return brute_force_topk_df(cand, probe, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -1545,7 +1632,7 @@ def pq_query_index_df(
     live = manifest_resolve(index_path)
     books = _read_codebooks(spark, live)
     encoded = spark.read.parquet(live)
-    short = _pq_adc_shortlist_df(
+    short = _adc_shortlist_df(
         encoded, books, probe, shortlist, id_col, where=where
     )
     cand = source_df.join(F.broadcast(short.select(id_col)), id_col)
@@ -1708,17 +1795,10 @@ def semantic_dedup_pairs(
     the registered query pins measured recall against the exact
     all-pairs twin.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    feats = df.withColumn("_feat", array_to_vector(as_double(F.col(vec_col))))
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="_cell"
-    )
-    model = km.fit(feats.select("_feat"))
-    assigned = model.transform(feats).select(
+    assigned, _ = _fit_cells(df, as_double(F.col(vec_col)), n_cells, seed)
+    assigned = assigned.select(
         F.col(id_col).alias("_id"),
-        F.col("_cell"),
+        F.col("cell").alias("_cell"),
         as_double(F.col(vec_col)).alias("_v"),
     )
     a, b = assigned.alias("a"), assigned.alias("b")
@@ -1798,46 +1878,19 @@ def ivf_maintain(
     ``n_cells`` defaults to the current centroid count — maintenance
     preserves the index's resolution unless told otherwise.
     """
-    recovered = manifest_recover(index_path)
-    live = manifest_resolve(index_path)
-    stats = _cell_stats(spark, live)
-    ratio = float(stats["mx"]) / float(stats["avg"])
-    cur_cells = spark.read.parquet(f"{live}/_centroids").count()
-    report = {
-        "rebuilt": False,
-        "recovered": recovered,
-        "imbalance_ratio": round(ratio, 3),
-        "n_cells": n_cells or cur_cells,
-        "n_vectors": int(stats["total"]),
-    }
-    if ratio <= max_imbalance:
-        return report
-    ivf_build_index(
-        spark.read.parquet(live).drop("cell"),
+    return _maintain(
+        spark,
         index_path,
-        n_cells=n_cells or cur_cells,
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-    )
-    report["rebuilt"] = True
-    return report
-
-
-def _cell_stats(spark: SparkSession, live: str):
-    """max / avg / total cell occupancy of a live IVF-family index dir
-    — one partition-pruned aggregate, the measurement both maintain
-    policies act on."""
-    return (
-        spark.read.parquet(live)
-        .groupBy("cell")
-        .agg(F.count("*").alias("n"))
-        .agg(
-            F.max("n").alias("mx"),
-            F.avg("n").alias("avg"),
-            F.sum("n").alias("total"),
-        )
-        .first()
+        max_imbalance,
+        n_cells,
+        lambda live, n: ivf_build_index(
+            spark.read.parquet(live).drop("cell"),
+            index_path,
+            n_cells=n,
+            id_col=id_col,
+            vec_col=vec_col,
+            seed=seed,
+        ),
     )
 
 
@@ -1853,42 +1906,6 @@ def _cell_stats(spark: SparkSession, live: str):
 # alone (IVF still reads raw vectors inside probed cells; flat PQ
 # still reads every row's codes).
 # ---------------------------------------------------------------------------
-
-
-def _centroids_to_expr(centroids: list[list[float]]) -> Column:
-    """The (n_cells × dim, bounded by construction) coarse-centroid
-    table as ONE parsed array<array<double>> literal — same
-    plan-construction trick as the PQ codebook literals (a parsed SQL
-    string costs ms where n_cells·dim F.lit py4j round-trips cost
-    seconds)."""
-    return F.expr(
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(v)!r}D" for v in c) + ")"
-            for c in centroids
-        )
-        + ")"
-    )
-
-
-def _normalized(vec_col: str) -> Column:
-    v = as_double(F.col(vec_col))
-    return F.transform(v, lambda x: x / F.greatest(l2_norm(v), F.lit(1e-12)))
-
-
-def _probe_normalized() -> Column:
-    """The probe_row ``_pv`` column L2-normalized — the space PQ/IVF-PQ
-    centroids are fit in. The ONE definition of probe normalization:
-    cell ranking (ivfpq_query/topk) and ADC scoring (both shortlist
-    helpers) all call this, so the epsilon/norm expression can never
-    diverge between the two stages again (the r7 ADVICE bug class).
-    ``_pv`` is already array<double> by construction (every probe
-    selection goes through ``as_double``), hence no cast here —
-    :func:`_normalized` is the general-column variant that casts."""
-    return F.transform(
-        F.col("_pv"),
-        lambda x: x / F.greatest(l2_norm(F.col("_pv")), F.lit(1e-12)),
-    )
 
 
 def ivfpq_build_index(
@@ -1924,25 +1941,40 @@ def ivfpq_build_index(
     underscore-invisible to the partitioned data scan. Published like
     :func:`ivf_build_index`.
     """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
     spark = df.sparkSession
-    feats = df.withColumn("_xn", _normalized(vec_col)).withColumn(
-        "_feat", array_to_vector(F.col("_xn"))
+    codes, cents, books = _ivfpq_fit(
+        df, n_cells, m, k, id_col, vec_col, seed, sample_mod, keep_cols
     )
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="cell"
+
+    def write(d: str) -> None:
+        codes.write.partitionBy("cell").parquet(d)
+        _centroid_df(spark, cents).coalesce(1).write.parquet(f"{d}/_centroids")
+        _write_codebooks(spark, books, d)
+        _write_strata(df, d, keep_cols)
+
+    manifest_publish(index_path, write)
+
+
+def _ivfpq_fit(
+    df: DataFrame,
+    n_cells: int,
+    m: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+    seed: int,
+    sample_mod: int | None,
+    keep_cols: list[str] | None,
+) -> tuple[DataFrame, list[list[float]], np.ndarray]:
+    """The IVF-PQ fit shared by :func:`ivfpq_build_index` and
+    :func:`ivfpq_topk_df`: the coarse quantizer on the L2-normalized
+    vectors, then one residual codebook set. Returns ``(codes,
+    centroids, codebooks)``; ``codes`` holds (id, keep_cols, cell,
+    pq_codes)."""
+    assigned, cents = _fit_cells(
+        df.withColumn("_xn", _normalized(vec_col)), F.col("_xn"), n_cells, seed
     )
-    model = km.fit(feats.select("_feat"))
-    cents = [[float(x) for x in c] for c in model.clusterCenters()]
-    chosen = F.element_at(_centroids_to_expr(cents), F.col("cell") + 1)
-    resid = feats.transform(model.transform).select(
-        F.col(id_col),
-        *[F.col(c) for c in (keep_cols or [])],
-        F.col("cell"),
-        F.zip_with(F.col("_xn"), chosen, lambda a, b: a - b).alias("_resid"),
-    )
+    resid = _residuals(assigned, _centroids_to_expr(cents), id_col, keep_cols)
     books = pq_train_codebooks(
         resid,
         m=m,
@@ -1952,7 +1984,32 @@ def ivfpq_build_index(
         sample_mod=sample_mod,
         normalize=False,
     )
-    encoded = pq_encode(
+    return _encode_residuals(resid, books, id_col, keep_cols), cents, books
+
+
+def _residuals(
+    assigned: DataFrame, cents: Column, id_col: str, keep_cols: list[str] | None
+) -> DataFrame:
+    """``(id, keep_cols, cell, _resid)``: each normalized vector
+    ``_xn`` minus its cell's centroid (``cents``, the
+    :func:`_centroids_to_expr` literal) — what the IVF-PQ codes
+    quantize."""
+    chosen = F.element_at(cents, F.col("cell") + 1)
+    return assigned.select(
+        F.col(id_col),
+        *[F.col(c) for c in (keep_cols or [])],
+        F.col("cell"),
+        F.zip_with(F.col("_xn"), chosen, lambda a, b: a - b).alias("_resid"),
+    )
+
+
+def _encode_residuals(
+    resid: DataFrame, books: np.ndarray, id_col: str, keep_cols: list[str] | None
+) -> DataFrame:
+    """PQ codes of :func:`_residuals` rows, keeping ``cell`` (the
+    partition column) and ``keep_cols``; raw residuals, no
+    re-normalization."""
+    return pq_encode(
         resid,
         books,
         id_col=id_col,
@@ -1960,17 +2017,6 @@ def ivfpq_build_index(
         keep_cols=[*(keep_cols or []), "cell"],
         normalize=False,
     )
-
-    def write(d: str) -> None:
-        encoded.write.partitionBy("cell").parquet(d)
-        spark.createDataFrame(
-            [(i, c) for i, c in enumerate(cents)],
-            "cell int, centroid array<double>",
-        ).coalesce(1).write.parquet(f"{d}/_centroids")
-        _write_codebooks(spark, books, d)
-        _write_strata(df, d, keep_cols)
-
-    manifest_publish(index_path, write)
 
 
 def _write_codebooks(spark: SparkSession, books: np.ndarray, d: str) -> None:
@@ -2024,99 +2070,17 @@ def ivfpq_index_append(
     shortlist from stale counts (ADVICE r12) — checked here, loudly."""
     live = manifest_resolve(index_path)
     _check_strata_keep_cols(live, keep_cols)
-    cents = [
-        [float(x) for x in r["centroid"]]
-        for r in sorted(
-            spark.read.parquet(f"{live}/_centroids").collect(),
-            key=lambda r: r["cell"],
-        )
-    ]
-    books = _read_codebooks(spark, live)
-    cent_lit = _centroids_to_expr(cents)
-    xn = _normalized(vec_col)
-    d2s = F.transform(
-        cent_lit,
-        lambda c: F.aggregate(
-            F.zip_with(F.col("_xn"), c, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ),
+    cents = _centroids_to_expr(_read_centroids(spark, live))
+    assigned = _nearest_cell(
+        batch.withColumn("_xn", _normalized(vec_col)), F.col("_xn"), cents
     )
-    assigned = (
-        batch.withColumn("_xn", xn)
-        .withColumn("_d2", d2s)
-        .withColumn(
-            "cell",
-            (F.array_position(F.col("_d2"), F.array_min("_d2")) - 1).cast("int"),
-        )
-    )
-    chosen = F.element_at(cent_lit, F.col("cell") + 1)
-    resid = assigned.select(
-        F.col(id_col),
-        *[F.col(c) for c in (keep_cols or [])],
-        F.col("cell"),
-        F.zip_with(F.col("_xn"), chosen, lambda a, b: a - b).alias("_resid"),
-    )
-    pq_encode(
-        resid,
-        books,
-        id_col=id_col,
-        vec_col="_resid",
-        keep_cols=[*(keep_cols or []), "cell"],
-        normalize=False,
+    _encode_residuals(
+        _residuals(assigned, cents, id_col, keep_cols),
+        _read_codebooks(spark, live),
+        id_col,
+        keep_cols,
     ).write.mode("append").partitionBy("cell").parquet(live)
     _write_strata(batch, live, keep_cols, mode="append")
-
-
-def _ivfpq_adc_shortlist_df(
-    encoded: DataFrame,
-    centroids: list[list[float]],
-    books: np.ndarray,
-    probe: DataFrame,
-    shortlist: int,
-    id_col: str,
-    where: Column | None = None,
-) -> DataFrame:
-    """In-plan residual-ADC scoring: distance ≈ Σᵢ ‖(q̂ − cent_cell)ᵢ −
-    codebookᵢ[codeᵢ]‖² — the query residual against each row's cell
-    folds in as ``element_at`` on the centroid literal, so ONE pruned
-    scan scores every probed cell (no per-cell plan union). Pure
-    codegen, no Python, no driver job; an optional metadata predicate
-    applies BELOW the scoring (pre-filter in the compressed scan)."""
-    m, _kk, sub = books.shape
-    pvn = _probe_normalized()
-    if where is not None:
-        encoded = encoded.where(where)
-    chosen_cent = F.element_at(_centroids_to_expr(centroids), F.col("cell") + 1)
-    scored = (
-        encoded.crossJoin(F.broadcast(probe.select(pvn.alias("_pvn"))))
-        .withColumn(
-            "_qr", F.zip_with(F.col("_pvn"), chosen_cent, lambda a, b: a - b)
-        )
-    )
-    score = None
-    for i in range(m):
-        cents_i = F.expr(
-            "array("
-            + ",".join(
-                "array(" + ",".join(f"{float(v)!r}D" for v in c) + ")"
-                for c in books[i]
-            )
-            + ")"
-        )
-        code_cent = F.element_at(cents_i, F.element_at("pq_codes", i + 1) + 1)
-        qsub = F.slice(F.col("_qr"), i * sub + 1, sub)
-        term = F.aggregate(
-            F.zip_with(qsub, code_cent, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        score = term if score is None else score + term
-    return (
-        scored.select(id_col, score.alias("adc_dist"))
-        .orderBy(F.asc("adc_dist"), F.asc(id_col))
-        .limit(shortlist)
-    )
 
 
 def ivfpq_query_index_df(
@@ -2145,40 +2109,13 @@ def ivfpq_query_index_df(
     metadata predicate (``keep_cols`` at build) pre-filters inside
     the pruned compressed scan."""
     live = manifest_resolve(index_path)
-    cents_rows = sorted(
-        spark.read.parquet(f"{live}/_centroids").collect(),
-        key=lambda r: r["cell"],
-    )
-    cents = [[float(x) for x in r["centroid"]] for r in cents_rows]
-    cdf = spark.createDataFrame(
-        [(r["cell"], [float(x) for x in r["centroid"]]) for r in cents_rows],
-        "cell int, centroid array<double>",
-    )
-    # Rank cells against the NORMALIZED probe (ADVICE r7): the coarse
-    # centroids were fit on L2-normalized vectors and the ADC stage
-    # normalizes the probe, so an un-normalized probe here could pick
-    # different n_probe cells than the space the index lives in —
-    # silently degrading recall in a way the exact re-rank cannot
-    # repair (it only sees the probed cells' shortlist).
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("centroid"), _probe_normalized(), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cells = [
-        r["cell"]
-        for r in cdf.crossJoin(F.broadcast(probe))
-        .select("cell", d2.alias("_d2"))
-        .orderBy(F.asc("_d2"), F.asc("cell"))
-        .limit(n_probe)
-        .collect()
-    ]
+    cents = _read_centroids(spark, live)
+    top = _top_cells(_centroid_df(spark, cents), probe, n_probe, normalized=True)
+    cells = [r["_pcell"] for r in top.collect()]
     books = _read_codebooks(spark, live)
     scan = spark.read.parquet(live).where(F.col("cell").isin(cells))
-    short = _ivfpq_adc_shortlist_df(
-        scan, cents, books, probe, shortlist, id_col, where=where
+    short = _adc_shortlist_df(
+        scan, books, probe, shortlist, id_col, where=where, centroids=cents
     )
     cand = source_df.join(F.broadcast(short.select(id_col)), id_col)
     return brute_force_topk_df(cand, probe, k=k, id_col=id_col, vec_col=vec_col)
@@ -2208,64 +2145,18 @@ def ivfpq_topk_df(
     correctness twin of the persisted index — at scale use the
     build/append/query surface, which swaps the on-the-fly cell
     semi-join for planning-time partition pruning."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    spark = df.sparkSession
-    feats = df.withColumn("_xn", _normalized(vec_col)).withColumn(
-        "_feat", array_to_vector(F.col("_xn"))
+    codes, cents, books = _ivfpq_fit(
+        df, n_cells, m, n_codes, id_col, vec_col, seed, sample_mod, None
     )
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=5, featuresCol="_feat", predictionCol="cell"
+    top = _top_cells(
+        _centroid_df(df.sparkSession, cents), probe, n_probe, normalized=True
     )
-    model = km.fit(feats.select("_feat"))
-    cents = [[float(x) for x in c] for c in model.clusterCenters()]
-    chosen = F.element_at(_centroids_to_expr(cents), F.col("cell") + 1)
-    resid = feats.transform(model.transform).select(
-        F.col(id_col),
-        F.col("cell"),
-        F.zip_with(F.col("_xn"), chosen, lambda a, b: a - b).alias("_resid"),
+    pruned = codes.join(
+        F.broadcast(top), F.col("cell") == F.col("_pcell"), "left_semi"
     )
-    books = pq_train_codebooks(
-        resid,
-        m=m,
-        k=n_codes,
-        id_col=id_col,
-        vec_col="_resid",
-        sample_mod=sample_mod,
-        normalize=False,
+    short = _adc_shortlist_df(
+        pruned, books, probe, shortlist, id_col, centroids=cents
     )
-    encoded = pq_encode(
-        resid,
-        books,
-        id_col=id_col,
-        vec_col="_resid",
-        keep_cols=["cell"],
-        normalize=False,
-    )
-    cdf = spark.createDataFrame(
-        [(i, c) for i, c in enumerate(cents)], "pcell int, centroid array<double>"
-    )
-    # normalized-probe cell ranking — same ADVICE r7 fix as
-    # ivfpq_query_index_df (centroids live in the normalized space)
-    d2 = F.aggregate(
-        F.zip_with(
-            F.col("centroid"), _probe_normalized(), lambda a, b: (a - b) * (a - b)
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    top_cells = (
-        cdf.crossJoin(F.broadcast(probe))
-        .select("pcell", d2.alias("_d2"))
-        .orderBy(F.asc("_d2"), F.asc("pcell"))
-        .limit(n_probe)
-        .select("pcell")
-    )
-    pruned = encoded.join(
-        F.broadcast(top_cells), F.col("cell") == F.col("pcell"), "left_semi"
-    )
-    short = _ivfpq_adc_shortlist_df(pruned, cents, books, probe, shortlist, id_col)
     cand = df.join(F.broadcast(short.select(id_col)), id_col)
     return brute_force_topk_df(cand, probe, k=k, id_col=id_col, vec_col=vec_col)
 
@@ -2297,33 +2188,20 @@ def ivfpq_maintain(
     restores both pruning selectivity AND quantization fidelity in one
     pass.
     """
-    recovered = manifest_recover(index_path)
-    live = manifest_resolve(index_path)
-    stats = _cell_stats(spark, live)
-    ratio = float(stats["mx"]) / float(stats["avg"])
-    cur_cells = spark.read.parquet(f"{live}/_centroids").count()
-    books = _read_codebooks(spark, live)
-    m, k, _sub = books.shape
-    report = {
-        "rebuilt": False,
-        "recovered": recovered,
-        "imbalance_ratio": round(ratio, 3),
-        "n_cells": n_cells or cur_cells,
-        "n_vectors": int(stats["total"]),
-    }
-    if ratio <= max_imbalance:
-        return report
-    ivfpq_build_index(
-        source_df,
-        index_path,
-        n_cells=n_cells or cur_cells,
-        m=int(m),
-        k=int(k),
-        id_col=id_col,
-        vec_col=vec_col,
-        seed=seed,
-        sample_mod=sample_mod,
-        keep_cols=keep_cols,
-    )
-    report["rebuilt"] = True
-    return report
+
+    def rebuild(live: str, n: int) -> None:
+        m, k, _sub = _read_codebooks(spark, live).shape
+        ivfpq_build_index(
+            source_df,
+            index_path,
+            n_cells=n,
+            m=int(m),
+            k=int(k),
+            id_col=id_col,
+            vec_col=vec_col,
+            seed=seed,
+            sample_mod=sample_mod,
+            keep_cols=keep_cols,
+        )
+
+    return _maintain(spark, index_path, max_imbalance, n_cells, rebuild)

@@ -641,15 +641,16 @@ def test_minhash_index_compact_preserves_results(spark, tmp_path):
     small files per band partition) must leave incremental-dedup
     results EXACTLY unchanged while reducing the file count — the
     compaction relocates rows, never changes them, and keeps the
-    band_id hive layout that prunes the probe join."""
+    band_id hive layout that prunes the probe join. One
+    ``compact_files`` over the index path compacts both sub-tables."""
     import glob
 
     from etl_mudah_spark.operators.dedup import (
         minhash_dedup_incremental,
         minhash_index_append,
         minhash_index_build,
-        minhash_index_compact,
     )
+    from etl_mudah_spark.operators.layout import compact_files
     from etl_mudah_spark.operators.manifest import manifest_resolve
 
     full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
@@ -668,12 +669,12 @@ def test_minhash_index_compact_preserves_results(spark, tmp_path):
             ).collect()
         }
 
-    def n_files():  # live versions only: compaction retains the old one
-        live = [manifest_resolve(f"{idx}/{sub}") for sub in ("bands", "shingles")]
-        return sum(len(glob.glob(f"{d}/**/*.parquet", recursive=True)) for d in live)
+    def n_files():  # live version only: compaction retains the old one
+        live = manifest_resolve(idx)
+        return len(glob.glob(f"{live}/**/*.parquet", recursive=True))
 
     before_pairs, before_files = pairset(), n_files()
-    minhash_index_compact(spark, idx, max_files=1)
+    compact_files(spark, idx, max_files=1)
     after_pairs, after_files = pairset(), n_files()
     assert after_pairs == before_pairs
     assert after_files < before_files
@@ -682,7 +683,7 @@ def test_minhash_index_compact_preserves_results(spark, tmp_path):
 def test_minhash_index_append_after_compaction_lands_in_live_version(
     spark, tmp_path
 ):
-    """Compaction publishes bands/ and shingles/ as manifest tables; a
+    """Compaction publishes the index as the next manifest version; a
     later append must land INSIDE the live version (not beside v=N/,
     where partition discovery would break and the probe would miss
     it), so the compacted index answers like an uncompacted twin."""
@@ -692,14 +693,14 @@ def test_minhash_index_append_after_compaction_lands_in_live_version(
         minhash_dedup_incremental,
         minhash_index_append,
         minhash_index_build,
-        minhash_index_compact,
     )
+    from etl_mudah_spark.operators.layout import compact_files
 
     full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
     ref, idx = str(tmp_path / "ref"), str(tmp_path / "idx")
     for p in (ref, idx):
         minhash_index_build(full_df.where(F.col("doc_id") == 0), p)
-    minhash_index_compact(spark, idx, max_files=1)
+    compact_files(spark, idx, max_files=1)
     for p in (ref, idx):  # doc 1 duplicates doc 0
         minhash_index_append(full_df.where(F.col("doc_id") == 1), p)
     probe = full_df.where(F.col("doc_id") == 2)
@@ -715,47 +716,67 @@ def test_minhash_index_append_after_compaction_lands_in_live_version(
     got = pairset(idx)
     assert got == pairset(ref)
     assert {a for a, _, _ in got} == {0, 1}
-    for sub in ("bands", "shingles"):
-        # v=1 is the build, v=2 the compaction (v=1 retained, keep=1)
-        assert sorted(os.listdir(f"{idx}/{sub}")) == [
-            "_current", "v=00000001", "v=00000002"
-        ]
+    # v=1 is the build, v=2 the compaction (v=1 retained, keep=1)
+    assert sorted(os.listdir(idx)) == ["_current", "v=00000001", "v=00000002"]
+
+
+def _minhash_answer(spark, idx):
+    from etl_mudah_spark.operators.dedup import minhash_dedup_incremental
+
+    probe = spark.createDataFrame([(10, CORPUS[2][1])], "doc_id bigint, text string")
+    return sorted(
+        (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
+        for r in minhash_dedup_incremental(
+            spark, probe, idx, threshold=0.1, include_batch_pairs=False
+        ).collect()
+    )
 
 
 def test_minhash_index_build_crash_leaves_live_index_answering(
     spark, tmp_path, publish_crash
 ):
-    """A rebuild that crashes inside either sub-table's version write
-    or before its pointer flip leaves the live index answering exactly
-    as before (shingles publish first, so old bands never meet missing
-    shingles); the next build publishes and answers like a fresh index
+    """A rebuild that crashes inside the index's version write or
+    before its pointer flip leaves the live index answering exactly as
+    before; the next build publishes and answers like a fresh index
     over the grown corpus."""
-    from etl_mudah_spark.operators.dedup import (
-        minhash_dedup_incremental,
-        minhash_index_build,
-    )
+    from etl_mudah_spark.operators.dedup import minhash_index_build
 
     full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
     grown = full_df.where(F.col("doc_id") <= 3)
     idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
     minhash_index_build(full_df.where(F.col("doc_id") <= 1), idx)
     minhash_index_build(grown, ref)
-    probe = spark.createDataFrame([(10, CORPUS[2][1])], "doc_id bigint, text string")
-
-    def answer(p):
-        return sorted(
-            (r["doc_a"], r["doc_b"], round(r["jaccard"], 6))
-            for r in minhash_dedup_incremental(
-                spark, probe, p, threshold=0.1, include_batch_pairs=False
-            ).collect()
-        )
-
-    before = answer(idx)
+    before = _minhash_answer(spark, idx)
     assert {a for a, _, _ in before} == {0, 1}
-    for sub in ("shingles", "bands"):
-        for window in ("write", "flip"):
-            with publish_crash(f"{idx}/{sub}", window):
-                minhash_index_build(grown, idx)
-            assert answer(idx) == before, (sub, window)
+    for window in ("write", "flip"):
+        with publish_crash(idx, window):
+            minhash_index_build(grown, idx)
+        assert _minhash_answer(spark, idx) == before, window
     minhash_index_build(grown, idx)
-    assert answer(idx) == answer(ref) != before
+    assert _minhash_answer(spark, idx) == _minhash_answer(spark, ref) != before
+
+
+def test_minhash_index_rebuild_over_shrunk_corpus_crash_keeps_live_answers(
+    spark, tmp_path, publish_crash
+):
+    """A rebuild over a corpus that DROPS documents, crashing in either
+    window, must leave the live index answering as before: bands and
+    shingles share one pointer, so the old bands can never meet the new
+    shingles (which lack the dropped docs and would fail every old
+    candidate's verification)."""
+    from etl_mudah_spark.operators.dedup import minhash_index_build
+
+    full_df = spark.createDataFrame(CORPUS, "doc_id bigint, text string")
+    old = full_df.where(F.col("doc_id").isin(0, 1))
+    new = full_df.where(F.col("doc_id").isin(2, 3))
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    minhash_index_build(old, idx)
+    minhash_index_build(new, ref)
+    before, after = _minhash_answer(spark, idx), _minhash_answer(spark, ref)
+    assert before and after and before != after
+    for window in ("write", "flip"):
+        with publish_crash(idx, window):
+            minhash_index_build(new, idx)
+        assert _minhash_answer(spark, idx) == before, window
+    minhash_index_build(new, idx)
+    assert _minhash_answer(spark, idx) == after

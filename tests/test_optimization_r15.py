@@ -143,3 +143,14 @@ def test_materialize_once_reliable_when_configured(spark):
         assert written, f"no reliable checkpoint files under {ckdir}"
     finally:
         spark.conf.unset(RELIABLE_DIR_CONF)
+
+
+def test_materialize_once_reliable_reuses_one_checkpoint_dir(spark):
+    # setCheckpointDir creates a fresh UUID subdir per call; repeated
+    # boundaries under one configured dir must share a single subdir
+    # instead of leaking one per call.
+    ckdir = tempfile.mkdtemp(prefix="reliable_ck_")
+    with conf_set(spark, RELIABLE_DIR_CONF, ckdir):
+        for n in (10, 11, 12):
+            assert materialize_once(spark.range(n)).count() == n
+    assert len(os.listdir(ckdir)) == 1

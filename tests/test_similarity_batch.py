@@ -403,9 +403,11 @@ def test_stream_srp_ingest_equals_one_shot_incremental(spark, tmp_path):
 def test_srp_index_compact_preserves_results(spark, tmp_path):
     """Compacting a streamed-into SRP index (build + two appends) must
     leave incremental-dedup results exactly unchanged while reducing
-    the file count."""
+    the file count; one ``compact_files`` over the index path compacts
+    both sub-tables."""
     import glob
 
+    from etl_mudah_spark.operators.layout import compact_files
     from etl_mudah_spark.operators.manifest import manifest_resolve
     from etl_mudah_spark.plans.datapipe import EMB_DIM
 
@@ -435,24 +437,36 @@ def test_srp_index_compact_preserves_results(spark, tmp_path):
             ).collect()
         }
 
-    def n_files():  # live versions only: compaction retains the old one
-        live = [manifest_resolve(f"{idx}/{sub}") for sub in ("buckets", "vectors")]
-        return sum(len(glob.glob(f"{d}/**/*.parquet", recursive=True)) for d in live)
+    def n_files():  # live version only: compaction retains the old one
+        live = manifest_resolve(idx)
+        return len(glob.glob(f"{live}/**/*.parquet", recursive=True))
 
     before_pairs, before_files = pairset(), n_files()
-    sim.srp_index_compact(spark, idx, max_files=1)
+    compact_files(spark, idx, max_files=1)
     after_pairs, after_files = pairset(), n_files()
     assert after_pairs == before_pairs and before_pairs
     assert after_files < before_files
 
 
+def _srp_answer(spark, idx, batch):
+    from etl_mudah_spark.plans.datapipe import EMB_DIM
+
+    return sorted(
+        tuple(r)
+        for r in sim.srp_dedup_incremental(
+            spark, batch, idx, dim=EMB_DIM, threshold=0.45,
+            n_planes=8, n_tables=24, include_batch_pairs=False,
+        ).collect()
+    )
+
+
 def test_srp_index_build_crash_leaves_live_index_answering(
     spark, tmp_path, publish_crash
 ):
-    """The SRP twin of the MinHash rebuild crash test: a crash in
-    either sub-table's publish, in either window, leaves the live
-    index answering as before (vectors publish first); the next build
-    publishes and answers like a fresh index over the grown corpus."""
+    """The SRP twin of the MinHash rebuild crash test: a crash in the
+    index's publish, in either window, leaves the live index answering
+    as before; the next build publishes and answers like a fresh index
+    over the grown corpus."""
     from etl_mudah_spark.plans.datapipe import EMB_DIM
 
     emb = load(spark, SF_SMOKE, "embeddings")
@@ -460,27 +474,46 @@ def test_srp_index_build_crash_leaves_live_index_answering(
     batch = emb.where(F.col("vec_id") % 2 == 1)
     idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
     params = dict(dim=EMB_DIM, n_planes=8, n_tables=24)
-
-    def answer(p):
-        return sorted(
-            tuple(r)
-            for r in sim.srp_dedup_incremental(
-                spark, batch, p, threshold=0.45, include_batch_pairs=False,
-                **params,
-            ).collect()
-        )
-
     sim.srp_index_build(grown, ref, **params)
-    want = answer(ref)
+    want = _srp_answer(spark, ref, batch)
     assert want, "known near-dup pairs exist at smoke scale"
     # the live index lacks one paired corpus vector, so the rebuild shows
     old = grown.where(F.col("vec_id") != want[0][0])
     sim.srp_index_build(old, idx, **params)
-    before = answer(idx)
-    for sub in ("vectors", "buckets"):
-        for window in ("write", "flip"):
-            with publish_crash(f"{idx}/{sub}", window):
-                sim.srp_index_build(grown, idx, **params)
-            assert answer(idx) == before, (sub, window)
+    before = _srp_answer(spark, idx, batch)
+    for window in ("write", "flip"):
+        with publish_crash(idx, window):
+            sim.srp_index_build(grown, idx, **params)
+        assert _srp_answer(spark, idx, batch) == before, window
     sim.srp_index_build(grown, idx, **params)
-    assert answer(idx) == want != before
+    assert _srp_answer(spark, idx, batch) == want != before
+
+
+def test_srp_index_rebuild_over_shrunk_corpus_crash_keeps_live_answers(
+    spark, tmp_path, publish_crash
+):
+    """A rebuild over a corpus that DROPS vectors, crashing in either
+    window, leaves the live index answering as before: buckets and
+    vectors share one pointer, so old buckets never meet new vectors
+    that lack their candidates."""
+    from etl_mudah_spark.plans.datapipe import EMB_DIM
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    old = emb.where(F.col("vec_id") % 4 == 0)
+    batch = emb.where(F.col("vec_id") % 2 == 1)
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    params = dict(dim=EMB_DIM, n_planes=8, n_tables=24)
+    sim.srp_index_build(old, idx, **params)
+    before = _srp_answer(spark, idx, batch)
+    assert before, "known near-dup pairs exist at smoke scale"
+    # the rebuild drops a paired corpus vector but keeps the others
+    new = old.where(F.col("vec_id") != before[0][0])
+    sim.srp_index_build(new, ref, **params)
+    after = _srp_answer(spark, ref, batch)
+    assert after and after != before
+    for window in ("write", "flip"):
+        with publish_crash(idx, window):
+            sim.srp_index_build(new, idx, **params)
+        assert _srp_answer(spark, idx, batch) == before, window
+    sim.srp_index_build(new, idx, **params)
+    assert _srp_answer(spark, idx, batch) == after

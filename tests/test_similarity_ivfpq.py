@@ -247,3 +247,47 @@ def test_ivfpq_maintain_recovers_interrupted_publish(
         assert manifest_versions(path) == [live, live + 1]
         assert manifest_read(spark, path).count() == n
 
+
+
+def test_ivfpq_compaction_keeps_index_sidecars(spark, emb, tmp_path):
+    """compact_files over an appended IVF-PQ index carries the live
+    version's _centroids, _codebooks and _strata into the new version:
+    the index answers identically, stratum counts are unchanged, and
+    the data file count falls."""
+    import glob
+
+    from etl_mudah_spark.operators.layout import compact_files
+
+    path = str(tmp_path / "index")
+    sim.ivfpq_build_index(
+        emb.where(F.col("vec_id") % 2 == 0), path, n_cells=8, m=8, k=16,
+        sample_mod=1, keep_cols=["label"],
+    )
+    sim.ivfpq_index_append(
+        spark, path, emb.where(F.col("vec_id") % 2 == 1), keep_cols=["label"]
+    )
+    probe = sim.probe_row(emb)
+    labels = sorted(r["label"] for r in emb.select("label").distinct().collect())
+
+    def state():
+        answers = [
+            [
+                tuple(r)
+                for r in sim.ivfpq_query_index_df(
+                    spark, emb, path, probe, k=10, n_probe=6, shortlist=100,
+                    where=where,
+                ).collect()
+            ]
+            for where in (None, F.col("label") == labels[0])
+        ]
+        strata = {lb: sim.index_stratum_count(path, {"label": lb}) for lb in labels}
+        files = glob.glob(f"{manifest_resolve(path)}/cell=*/*.parquet")
+        return answers, strata, len(files)
+
+    answers, strata, n_files = state()
+    compact_files(spark, path, max_files=1)
+    assert manifest_versions(path) == [1, 2]
+    after_answers, after_strata, after_files = state()
+    assert after_answers == answers and all(answers)
+    assert after_strata == strata
+    assert after_files < n_files
