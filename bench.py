@@ -28,6 +28,8 @@ from etl_mudah_spark.operators.merge import merge_upsert
 from etl_mudah_spark.plans import registry
 from etl_mudah_spark.session import get_spark
 
+DEFAULT_SF_DIR = "/root/testdata/sf0.1"
+
 # Median-of-N timing (round 5; was best-of-3): per-query SESSION noise
 # at sub-second magnitudes measured ±30% across rounds, which made
 # regression attribution guesswork — the median of 5 is stable to ~10%
@@ -84,86 +86,6 @@ def _lsh_cosine_production(spark, sf_dir: str):
     )
 
 
-_PREAGG_CACHE: dict[str, str] = {}
-
-
-def _prebuild_preagg(spark, sf_dir: str) -> str:
-    """Stage the Q18 per-order rollup once per staged dir (the
-    maintained layout table big_orders_preagg reads) and return its
-    path. Called EAGERLY before the x100 timing loop (ADVICE r12: the
-    lazy in-fn build landed the ~4.4 s one-off cost inside the first
-    timed rep)."""
-    import atexit
-
-    from etl_mudah_spark.functions.core import dsum2
-    from etl_mudah_spark.tables import load
-
-    rollup = _PREAGG_CACHE.get(sf_dir)
-    if rollup is None:
-        scratch = tempfile.mkdtemp(prefix="bench_preagg_")
-        atexit.register(shutil.rmtree, scratch, ignore_errors=True)
-        rollup = f"{scratch}/li_order_qty"
-        # Range-sorted by qty_sum: the HAVING filter (> 250) keeps
-        # ~1.5% of rows, so parquet row-group min/max stats skip nearly
-        # the whole rollup scan (x100: 2.24 s -> 1.85 s, r13 decomp).
-        # Free to maintain — IVM rewrites the rollup per refresh anyway.
-        (
-            load(spark, sf_dir, "lineitem")
-            .groupBy("l_orderkey")
-            .agg(dsum2("l_quantity").alias("qty_sum"))
-            .repartitionByRange(16, "qty_sum")
-            .sortWithinPartitions("qty_sum")
-            .write.mode("overwrite")
-            .parquet(rollup)
-        )
-        _PREAGG_CACHE[sf_dir] = rollup
-    return rollup
-
-
-def _big_orders_preagg_production(spark, sf_dir: str):
-    """big_orders_preagg as PRODUCTION runs it: the per-order rollup is
-    a MAINTAINED layout table (built/refreshed at write time, IVM —
-    BASELINE.md §17), so the bench builds it once per staged dir and
-    times the query against it. The registered query also caches its
-    rollup — one scratch build per (applicationId, sf_dir, lineitem
-    fingerprint), plans/starjoins.py — but its first call in any
-    session/staging still pays the build; this bench twin keeps the
-    build strictly OUTSIDE the timed reps so the series measures the
-    query, never the one-off layout cost."""
-    from pyspark.sql import functions as F
-
-    from etl_mudah_spark.tables import load
-
-    from etl_mudah_spark.operators.layout import (
-        broadcast_threshold_bytes,
-        filtered_scan_bytes_bound,
-    )
-
-    rollup = _prebuild_preagg(spark, sf_dir)
-    orders = load(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    cust = load(spark, sf_dir, "customer")
-    q = spark.read.parquet(rollup).where(F.col("qty_sum") > 250)
-    # Metadata-driven broadcast (round 15, same decision as the
-    # registered query): the range-sorted rollup's row-group stats
-    # bound the filtered side exactly; when provably under the session
-    # broadcast threshold the hint skips the orders-side shuffle write
-    # (x100: 1.91 -> 1.15 s median). At scale the bound grows with the
-    # data and the hint simply never fires.
-    bound = filtered_scan_bytes_bound(rollup, "qty_sum", 250.0)
-    if bound is not None and bound <= broadcast_threshold_bytes(spark):
-        q = F.broadcast(q)
-    return (
-        q.join(orders, q.l_orderkey == orders.o_orderkey)
-        .join(cust, orders.o_custkey == cust.c_custkey)
-        .select("c_name", "c_custkey", "o_orderkey", "o_orderdate",
-                "o_totalprice", "qty_sum")
-        .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-        .limit(20)
-    )
-
-
 # Round 5 turned the registered sketch queries into invariant harnesses
 # that ALSO run an exact verification twin — correct for the driver's
 # hash check, wrong for throughput measurement. The bench times the
@@ -172,7 +94,6 @@ def _big_orders_preagg_production(spark, sf_dir: str):
 BENCH_FNS = {
     "doc_minhash_near_dup": _minhash_production,
     "emb_cosine_near_dup_lsh": _lsh_cosine_production,
-    "big_orders_preagg": _big_orders_preagg_production,
 }
 
 # Second measured set (VERDICT r10 item 7): the 14 headliners cover the
@@ -796,86 +717,74 @@ def stage_scaled(
     return dst_dir, staged_bytes
 
 
+def stage_drop(spark, sf_dir: str, scratch: str, n_files: int):
+    """The events table re-staged as ``n_files`` parquet drop files
+    under ``scratch``, the source of :func:`hourly_event_agg`; returns
+    (drop dir, schema, row count)."""
+    from etl_mudah_spark.tables import load
+
+    events = load(spark, sf_dir, "events")
+    drop = os.path.join(scratch, "drop")
+    events.repartition(n_files).write.mode("overwrite").parquet(drop)
+    return drop, spark.read.parquet(drop).schema, events.count()
+
+
+def hourly_event_agg(spark, drop: str, schema, files_per_trigger: int):
+    """The production hourly-rollup shape (watermark + tumbling window
+    + count/sum) as a stream over the parquet drop dir ``drop``,
+    reading ``files_per_trigger`` files per micro-batch."""
+    from pyspark.sql import functions as F
+
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(drop)
+        .withWatermark("ts", "10 minutes")
+        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+        .agg(
+            F.count("*").alias("cnt"),
+            F.sum(F.col("value").cast("decimal(18,6)"))
+            .cast("double")
+            .alias("total_value"),
+        )
+    )
+
+
 def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
     """Sustained Structured-Streaming throughput (VERDICT r5 item 6):
     the events table re-staged as ``n_files`` drop files, consumed one
-    file per trigger through the production hourly-rollup shape
-    (watermark + tumbling window + count/sum, update mode) into a
-    foreachBatch noop sink. Reports end-to-end rows/sec, micro-batch
-    count/latency, and the state size (distinct window×type groups)."""
+    file per trigger through :func:`hourly_event_agg` (update mode)
+    into a foreachBatch noop sink. Reports end-to-end rows/sec,
+    micro-batch count/latency, and the state size (distinct
+    window×type groups)."""
     from pyspark.sql import functions as F
 
+    from etl_mudah_spark.streaming.pipeline import run_stream
     from etl_mudah_spark.tables import load
 
     scratch = tempfile.mkdtemp(prefix="bench_stream_")
-    drop = os.path.join(scratch, "drop")
     try:
-        events = load(spark, sf_dir, "events")
-        n_rows = events.count()
-        events.repartition(n_files).write.mode("overwrite").parquet(drop)
-        schema = spark.read.parquet(drop).schema
-        batches: list[int] = []
+        drop, schema, n_rows = stage_drop(spark, sf_dir, scratch, n_files)
 
-        def sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            batches.append(batch_id)
+        def drain(files_per_trigger: int, width: int | None) -> tuple[float, int]:
+            """Wall seconds from start() to stop() and micro-batch count."""
+            batches: list[int] = []
 
-        agg = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(drop)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum(F.col("value").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-        )
-        t0 = time.perf_counter()
-        q = agg.writeStream.outputMode("update").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        wall = time.perf_counter() - t0
+            def sink(batch_df, batch_id: int) -> None:
+                batch_df.write.mode("overwrite").format("noop").save()
+                batches.append(batch_id)
 
+            agg = hourly_event_agg(spark, drop, schema, files_per_trigger)
+            t0 = time.perf_counter()
+            run_stream(spark, agg, sink, width=width, output_mode="update")
+            return time.perf_counter() - t0, len(batches)
+
+        wall, n_batches = drain(1, None)
         # Saturation point: the same pipeline fed everything in ONE
         # trigger — separates the per-micro-batch floor (scheduling +
         # state-store round trip, what the 1-file/trigger number is
         # made of) from actual streaming compute throughput.
-        sat_batches: list[int] = []
-
-        def sat_sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            sat_batches.append(batch_id)
-
-        sat_agg = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", str(n_files))
-            .parquet(drop)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum(F.col("value").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-        )
-        t1 = time.perf_counter()
-        q2 = (
-            sat_agg.writeStream.outputMode("update")
-            .foreachBatch(sat_sink)
-            .start()
-        )
-        try:
-            q2.processAllAvailable()
-        finally:
-            q2.stop()
-        sat_wall = time.perf_counter() - t1
-
+        sat_wall, _ = drain(n_files, None)
         # State-sized partitioning (round-11 floor decomposition,
         # BASELINE.md §13): the per-trigger floor is dominated by
         # addBatch, which is dominated by ONE state-store commit file
@@ -885,44 +794,11 @@ def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
         # rule: state partitions ~ state size / executor memory, NOT
         # the batch shuffle width. Reported as separate keys so the
         # original 32-partition series stays comparable.
-        p4_batches: list[int] = []
-
-        def p4_sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            p4_batches.append(batch_id)
-
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        try:
-            p4_agg = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", "1")
-                .parquet(drop)
-                .withWatermark("ts", "10 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(
-                    F.count("*").alias("cnt"),
-                    F.sum(F.col("value").cast("decimal(18,6)"))
-                    .cast("double")
-                    .alias("total_value"),
-                )
-            )
-            t2 = time.perf_counter()
-            q3 = (
-                p4_agg.writeStream.outputMode("update")
-                .foreachBatch(p4_sink)
-                .start()
-            )
-            try:
-                q3.processAllAvailable()
-            finally:
-                q3.stop()
-            p4_wall = time.perf_counter() - t2
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        p4_wall, p4_batches = drain(1, 4)
 
         state_rows = (
-            events.select(
+            load(spark, sf_dir, "events")
+            .select(
                 F.date_trunc("hour", "ts").alias("h"), "event_type"
             )
             .distinct()
@@ -933,10 +809,10 @@ def bench_streaming(spark, sf_dir: str, n_files: int = 16) -> dict:
             "streaming_rows_per_sec_saturated": round(n_rows / sat_wall),
             "streaming_rows_per_sec_state_sized": round(n_rows / p4_wall),
             "streaming_input_rows": n_rows,
-            "streaming_batches": len(batches),
-            "streaming_batch_latency_sec": round(wall / max(1, len(batches)), 3),
+            "streaming_batches": n_batches,
+            "streaming_batch_latency_sec": round(wall / max(1, n_batches), 3),
             "streaming_batch_latency_state_sized": round(
-                p4_wall / max(1, len(p4_batches)), 3
+                p4_wall / max(1, p4_batches), 3
             ),
             "streaming_state_groups": state_rows,
         }
@@ -1072,7 +948,7 @@ def split_result(full: dict) -> tuple[dict, dict]:
 
 def main() -> None:
     global N_REPS, SLOW_SINGLE_REP_SEC
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     sf = sf_dir.rstrip("/").split("sf")[-1]
     multifile = os.environ.get("SPARK_GRAFT_MULTIFILE", "1") != "0"
     # Machine-load evidence (VERDICT r9 item 3): the per-trigger
@@ -1366,12 +1242,14 @@ def main() -> None:
                 # bench minutes at this factor (see stage_scaled)
                 doc_text_mode="suffix",
             )
-            # Build the Q18 rollup BEFORE the timing loop (ADVICE r12):
-            # lazily building inside the first timed rep charged the
-            # one-off layout cost (~4.4 s at x100) to that rep's IO
-            # average and would define the record under any
-            # single-rep policy.
-            _prebuild_preagg(spark, sc_dir)
+            # Build the registered Q18 plan once BEFORE the timing loop
+            # (ADVICE r12): plan build writes the range-sorted rollup
+            # and caches it per (application, dir, lineitem
+            # fingerprint), so the timed reps reuse it. Lazily building
+            # inside the first timed rep charged the one-off layout
+            # cost (~4.4 s at x100) to that rep's IO average and would
+            # define the record under any single-rep policy.
+            registry.REGISTRY["big_orders_preagg"].spark_fn(spark, sc_dir)
             # Median-of-3: reps=1 was measured to swing the three
             # 10s-magnitude queries 1.5-2.5x run to run (page-cache and
             # JIT state dominate a single sample even at this size), so

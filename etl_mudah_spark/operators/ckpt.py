@@ -24,7 +24,12 @@ interactive/batch-retryable work. Jobs that cannot accept a restart
 set ``spark.etl_mudah.reliableCheckpoint.dir`` to a durable
 (HDFS/object-store) path and every boundary below becomes a RELIABLE
 checkpoint: blocks are written to that storage and survive executor
-loss, at the cost of a write+read round trip per boundary.
+loss, at the cost of a write+read round trip per boundary. The
+session's ContextCleaner (``spark.cleaner.referenceTracking.
+cleanCheckpoints``, set by session.get_spark) deletes a boundary's
+checkpoint data once its DataFrame is unreachable; a session that does
+not set it keeps every boundary's files for the life of the
+application.
 """
 from __future__ import annotations
 

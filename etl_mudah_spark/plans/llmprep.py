@@ -2097,7 +2097,9 @@ def corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PARITY: old min 18.66/med 25.15 vs ckpt 18.24/24.21, old winning
     # 4/6 paired reps — storing the text-carrying rows costs what the
     # two saved recomputes save. Left unckpointed; evidence in
-    # OPTIMIZATION_r14.md and scripts/corpus_prep_ab_r14.py.
+    # OPTIMIZATION_r14.md (the probe script was deleted with the
+    # toggle it flipped; re-running the A/B means restoring the
+    # boundary as a variant timed through scripts/ab.py).
     e = dd.exact_dedup(
         q.withColumn("k", F.md5(F.substring("text", 1, 40))), ["k"], ["doc_id"]
     ).drop("k")

@@ -76,6 +76,11 @@ def get_spark(
         # the deltas. Stage summaries are small; retain enough for the
         # whole run.
         .config("spark.ui.retainedStages", "50000")
+        # Reliable checkpoints (operators/ckpt.materialize_once with
+        # spark.etl_mudah.reliableCheckpoint.dir set) write rdd-N dirs
+        # that nothing deletes unless the ContextCleaner may reclaim
+        # them once their DataFrame is unreachable. Context-start conf.
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     if SparkSession.getActiveSession() is None and "SPARK_GRAFT_MASTER" not in os.environ:
         builder = builder.master(f"local[{cores}]")

@@ -5,308 +5,224 @@ pairs-pipeline win?
 Mirrors the registered plan's stages exactly (same constants, same
 operators) but times each materialization separately with noop sinks /
 the real stage writes, fresh plans per rep (round-11 skipped-stage
-trap). The sum of stages ≈ the e2e total minus plan-analysis overlap;
-each line answers "is this stage worth a lever?".
+trap). The stages downstream of a staged write (F-I) read a copy of
+that stage written once, untimed, before the first rep, so every phase
+runs on its own in any order. The sum of stages ≈ the e2e total minus
+plan-analysis overlap; each line answers "is this stage worth a
+lever?".
 
-Usage: python scripts/corpus_prep_decomp_r15.py [--reps N] [--scratch DIR]
+Usage: python scripts/corpus_prep_decomp_r15.py [--reps N] [--factor F] [--scratch DIR]
 """
 
 from __future__ import annotations
 
-import argparse
-import os
 import shutil
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import etl_mudah_spark.plans  # noqa: F401
+from pyspark.sql import functions as F
+
+from etl_mudah_spark.operators import bpe
+from etl_mudah_spark.operators import decontam as dc
+from etl_mudah_spark.operators import dedup as dd
+from etl_mudah_spark.operators import graph as gr
+from etl_mudah_spark.operators import manifest as mfst
+from etl_mudah_spark.operators import sampling as smp
+from etl_mudah_spark.operators import text as tx
+from etl_mudah_spark.plans import datapipe as dp
+from etl_mudah_spark.plans.llmprep import (
+    _CPE_MIX_BUCKETS,
+    _CPE_NEARDUP_THRESHOLD,
+    _packing_cum,
+    BPE_FIXTURE_MERGES,
+    CORPUS_MIN_TOKENS,
+    CORPUS_MIN_TTR,
+    SHARD_TOKENS,
+)
 from etl_mudah_spark.plans.registry import REGISTRY
 from etl_mudah_spark.session import get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+class Stages:
+    """The e2e's stages over the staged dir ``sc_dir``, each built
+    afresh on every call."""
+
+    def __init__(self, spark, sc_dir: str):
+        self.spark, self.sc_dir = spark, sc_dir
+
+    def docs(self):
+        return load(self.spark, self.sc_dir, "documents").select(
+            "doc_id", "source", "text"
+        )
+
+    def quality(self):
+        return (
+            tx.quality_features(self.docs(), "text")
+            .where(
+                (F.col("n_tokens") >= CORPUS_MIN_TOKENS)
+                & (F.col("type_token_ratio") >= CORPUS_MIN_TTR)
+            )
+            .select("doc_id", "source", "text", "n_tokens")
+        )
+
+    def exact(self):
+        return dd.exact_dedup(
+            self.quality().withColumn("k", F.md5(F.substring("text", 1, 40))),
+            ["k"],
+            ["doc_id"],
+        ).drop("k")
+
+    def pairs(self):
+        return dd.ngram_jaccard_pairs(
+            self.exact(),
+            threshold=_CPE_NEARDUP_THRESHOLD,
+            max_shingle_df=dp._NGRAM_MAX_SHINGLE_DF,
+        ).select("doc_a", "doc_b")
+
+    def clusters(self):
+        return gr.duplicate_clusters(self.pairs()).select("node", "cluster_id")
+
+    def neardup(self):
+        e = self.exact()
+        clusters = self.clusters()
+        scored = clusters.join(
+            e.select(F.col("doc_id").alias("node"), "n_tokens"), "node"
+        )
+        best = (
+            scored.groupBy("cluster_id")
+            .agg(
+                F.min(
+                    F.struct((-F.col("n_tokens")).alias("_nt"), F.col("node"))
+                ).alias("_m")
+            )
+            .select(F.col("_m.node").alias("node"))
+        )
+        losers = clusters.join(best, "node", "left_anti").select(
+            F.col("node").alias("doc_id")
+        )
+        return e.join(losers, "doc_id", "left_anti")
+
+    @staticmethod
+    def spans(nd):
+        return dd.repeated_ngram_spans(
+            nd.select("doc_id", "text"),
+            n=dp.REPEATED_SPAN_N,
+            min_docs=dp.REPEATED_SPAN_MIN_DOCS,
+        )
+
+    def mixed(self, nd):
+        ex = dc.excise_spans(nd.select("doc_id", "text"), self.spans(nd))
+        clean = nd.select("doc_id", "source").join(
+            ex.select(
+                "doc_id",
+                "clean_text",
+                F.col("n_tokens_after").cast("bigint").alias("n_tok"),
+            ),
+            "doc_id",
+        )
+        budget = F.when(
+            F.substring("source", 4, 10).cast("int") % 2 == 0,
+            F.lit(dp.TOKEN_BUDGET_EVEN),
+        ).otherwise(F.lit(dp.TOKEN_BUDGET_ODD))
+        mixed = smp.token_budget_mix(
+            clean,
+            key_col="doc_id",
+            strata_col="source",
+            tokens_col="n_tok",
+            budget=budget,
+            buckets=_CPE_MIX_BUCKETS,
+        )
+        return mixed.where(F.col("_kept")).select("doc_id", "source", "clean_text")
+
+    def shard_manifest(self, kept):
+        enc = bpe.bpe_encode(kept, BPE_FIXTURE_MERGES, text_col="clean_text").select(
+            "source",
+            "doc_id",
+            F.array_join("bpe_ids", " ").alias("ids_str"),
+            F.size("bpe_ids").cast("bigint").alias("n_ids"),
+        )
+        cum = _packing_cum(self.sc_dir, enc, "n_ids")
+        packed = cum.withColumn(
+            "shard_id", F.floor((F.col("cum") - 1) / SHARD_TOKENS).cast("int")
+        )
+        payload = F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("doc_id", "ids_str"))),
+                lambda s: s["ids_str"],
+            ),
+            " ",
+        )
+        return packed.groupBy("source", "shard_id").agg(
+            F.count("*").cast("bigint").alias("n_docs"),
+            F.sum("n_ids").cast("bigint").alias("shard_tokens"),
+            F.md5(payload).alias("payload_md5"),
+        )
+
+    def accounting(self, nd, kept):
+        def n(df, name):
+            return F.broadcast(df.agg(F.count("*").cast("bigint").alias(name)))
+
+        return (
+            self.docs()
+            .agg(F.count("*").cast("bigint").alias("n_input_docs"))
+            .join(n(self.quality(), "quality_kept"))
+            .join(n(self.exact(), "exact_kept"))
+            .join(n(nd, "neardup_kept"))
+            .join(n(kept, "mix_kept"))
+        )
+
+
+def build_phases(spark, st: Stages, work: str):
+    out = tempfile.mkdtemp(dir=work)
+    nd = spark.read.parquet(f"{work}/deduped")
+    kept = spark.read.parquet(f"{work}/mixed")
+
+    def publish():
+        manifest = st.shard_manifest(kept)
+        mfst.manifest_publish(
+            f"{out}/manifest", lambda d: manifest.write.parquet(d)
+        )
+        mfst.manifest_read(spark, f"{out}/manifest").collect()
+
+    # every phase builds its plan inside the timed call: duplicate
+    # clusters and the registered e2e run jobs while they are built
+    return {
+        "A_quality_noop": st.quality,
+        "B_exact_dedup_noop": st.exact,
+        "C_pairs_noop": st.pairs,
+        "D_clusters_noop": st.clusters,
+        "E_nd_stage_write": lambda: st.neardup().write.parquet(f"{out}/deduped"),
+        "F_spans_noop": lambda: st.spans(nd),
+        "G_spans_excise_mix_write": lambda: st.mixed(nd).write.parquet(
+            f"{out}/mixed"
+        ),
+        "H_bpe_pack_manifest": publish,
+        "I_acct_noop": lambda: st.accounting(nd, kept),
+        "Z_full_e2e": lambda: REGISTRY["corpus_prep_e2e"].spark_fn(
+            spark, st.sc_dir
+        ),
+    }
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--scratch", default="/root/scratch_x10_full")
-    args = ap.parse_args()
-
+    args = ab.parser(__doc__, reps=3, factor=10).parse_args()
     spark = get_spark()
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
-
-    sc_dir = os.path.join(args.scratch, "scaled")
-    if not os.path.isdir(os.path.join(sc_dir, "documents")):
-        from bench import stage_scaled
-
-        print(f"staging full x10 into {args.scratch} ...")
-        t0 = time.time()
-        os.makedirs(args.scratch, exist_ok=True)
-        stage_scaled(spark, SF_DIR, args.scratch, factor=10)
-        print(f"staged in {time.time() - t0:.1f}s")
-    else:
-        print(f"reusing staged x10 at {sc_dir}")
-
-    from pyspark.sql import functions as F
-
-    from etl_mudah_spark.operators import text as tx
-    from etl_mudah_spark.operators import bpe
-    from etl_mudah_spark.operators import decontam as dc
-    from etl_mudah_spark.operators import dedup as dd
-    from etl_mudah_spark.operators import graph as gr
-    from etl_mudah_spark.operators import manifest as mfst
-    from etl_mudah_spark.operators import sampling as smp
-    from etl_mudah_spark.plans import datapipe as dp
-    from etl_mudah_spark.plans.llmprep import (
-        _CPE_MIX_BUCKETS,
-        _CPE_NEARDUP_THRESHOLD,
-        _packing_cum,
-        BPE_FIXTURE_MERGES,
-        CORPUS_MIN_TOKENS,
-        CORPUS_MIN_TTR,
-        SHARD_TOKENS,
-    )
-    from etl_mudah_spark.tables import load
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    def timed(tag, fn, acc, rep):
-        sc.setJobDescription(f"cpe decomp {tag} rep{rep}")
-        t0 = time.time()
-        out = fn()
-        dt = time.time() - t0
-        acc.setdefault(tag, []).append(dt)
-        print(f"  {tag}: {dt:.2f}s", flush=True)
-        return out
-
-    acc: dict[str, list[float]] = {}
-    for rep in range(args.reps):
-        print(f"rep {rep}", flush=True)
-        scratch = tempfile.mkdtemp(prefix="cpe_decomp_")
-        try:
-            # ---- fresh plans every rep ----
-            def build_q():
-                docs = load(spark, sc_dir, "documents").select(
-                    "doc_id", "source", "text"
-                )
-                return (
-                    tx.quality_features(docs, "text")
-                    .where(
-                        (F.col("n_tokens") >= CORPUS_MIN_TOKENS)
-                        & (F.col("type_token_ratio") >= CORPUS_MIN_TTR)
-                    )
-                    .select("doc_id", "source", "text", "n_tokens")
-                )
-
-            def build_e():
-                return dd.exact_dedup(
-                    build_q().withColumn(
-                        "k", F.md5(F.substring("text", 1, 40))
-                    ),
-                    ["k"],
-                    ["doc_id"],
-                ).drop("k")
-
-            timed("A_quality_noop", lambda: noop(build_q()), acc, rep)
-            timed("B_exact_dedup_noop", lambda: noop(build_e()), acc, rep)
-
-            def build_pairs():
-                return dd.ngram_jaccard_pairs(
-                    build_e(),
-                    threshold=_CPE_NEARDUP_THRESHOLD,
-                    max_shingle_df=dp._NGRAM_MAX_SHINGLE_DF,
-                ).select("doc_a", "doc_b")
-
-            timed("C_pairs_noop", lambda: noop(build_pairs()), acc, rep)
-
-            def build_clusters():
-                return gr.duplicate_clusters(build_pairs()).select(
-                    "node", "cluster_id"
-                )
-
-            timed("D_clusters_noop", lambda: noop(build_clusters()), acc, rep)
-
-            def nd_write():
-                e = build_e()
-                clusters = build_clusters()
-                scored = clusters.join(
-                    e.select(F.col("doc_id").alias("node"), "n_tokens"),
-                    "node",
-                )
-                best = (
-                    scored.groupBy("cluster_id")
-                    .agg(
-                        F.min(
-                            F.struct(
-                                (-F.col("n_tokens")).alias("_nt"),
-                                F.col("node"),
-                            )
-                        ).alias("_m")
-                    )
-                    .select(F.col("_m.node").alias("node"))
-                )
-                losers = clusters.join(best, "node", "left_anti").select(
-                    F.col("node").alias("doc_id")
-                )
-                e.join(losers, "doc_id", "left_anti").write.parquet(
-                    f"{scratch}/deduped"
-                )
-
-            timed("E_nd_stage_write", nd_write, acc, rep)
-            nd = spark.read.parquet(f"{scratch}/deduped")
-
-            def spans_noop():
-                noop(
-                    dd.repeated_ngram_spans(
-                        nd.select("doc_id", "text"),
-                        n=dp.REPEATED_SPAN_N,
-                        min_docs=dp.REPEATED_SPAN_MIN_DOCS,
-                    )
-                )
-
-            timed("F_spans_noop", spans_noop, acc, rep)
-
-            def kept_write():
-                spans = dd.repeated_ngram_spans(
-                    nd.select("doc_id", "text"),
-                    n=dp.REPEATED_SPAN_N,
-                    min_docs=dp.REPEATED_SPAN_MIN_DOCS,
-                )
-                ex = dc.excise_spans(nd.select("doc_id", "text"), spans)
-                clean = nd.select("doc_id", "source").join(
-                    ex.select(
-                        "doc_id",
-                        "clean_text",
-                        F.col("n_tokens_after")
-                        .cast("bigint")
-                        .alias("n_tok"),
-                    ),
-                    "doc_id",
-                )
-                budget = F.when(
-                    F.substring("source", 4, 10).cast("int") % 2 == 0,
-                    F.lit(dp.TOKEN_BUDGET_EVEN),
-                ).otherwise(F.lit(dp.TOKEN_BUDGET_ODD))
-                mixed = smp.token_budget_mix(
-                    clean,
-                    key_col="doc_id",
-                    strata_col="source",
-                    tokens_col="n_tok",
-                    budget=budget,
-                    buckets=_CPE_MIX_BUCKETS,
-                )
-                mixed.where(F.col("_kept")).select(
-                    "doc_id", "source", "clean_text"
-                ).write.parquet(f"{scratch}/mixed")
-
-            timed("G_spans_excise_mix_write", kept_write, acc, rep)
-            kept = spark.read.parquet(f"{scratch}/mixed")
-
-            def tail():
-                enc = bpe.bpe_encode(
-                    kept, BPE_FIXTURE_MERGES, text_col="clean_text"
-                ).select(
-                    "source",
-                    "doc_id",
-                    F.array_join("bpe_ids", " ").alias("ids_str"),
-                    F.size("bpe_ids").cast("bigint").alias("n_ids"),
-                )
-                cum = _packing_cum(sc_dir, enc, "n_ids")
-                packed = cum.withColumn(
-                    "shard_id",
-                    F.floor((F.col("cum") - 1) / SHARD_TOKENS).cast("int"),
-                )
-                payload = F.array_join(
-                    F.transform(
-                        F.array_sort(
-                            F.collect_list(F.struct("doc_id", "ids_str"))
-                        ),
-                        lambda s: s["ids_str"],
-                    ),
-                    " ",
-                )
-                manifest = packed.groupBy("source", "shard_id").agg(
-                    F.count("*").cast("bigint").alias("n_docs"),
-                    F.sum("n_ids").cast("bigint").alias("shard_tokens"),
-                    F.md5(payload).alias("payload_md5"),
-                )
-                publish_base = f"{scratch}/manifest"
-                mfst.manifest_publish(
-                    publish_base, lambda d: manifest.write.parquet(d)
-                )
-                mfst.manifest_read(spark, publish_base).collect()
-
-            timed("H_bpe_pack_manifest", tail, acc, rep)
-
-            def acct_noop():
-                docs = load(spark, sc_dir, "documents").select(
-                    "doc_id", "source", "text"
-                )
-                q = build_q()
-                e = build_e()
-                noop(
-                    docs.agg(
-                        F.count("*").cast("bigint").alias("n_input_docs")
-                    )
-                    .join(
-                        F.broadcast(
-                            q.agg(
-                                F.count("*")
-                                .cast("bigint")
-                                .alias("quality_kept")
-                            )
-                        )
-                    )
-                    .join(
-                        F.broadcast(
-                            e.agg(
-                                F.count("*")
-                                .cast("bigint")
-                                .alias("exact_kept")
-                            )
-                        )
-                    )
-                    .join(
-                        F.broadcast(
-                            nd.agg(
-                                F.count("*")
-                                .cast("bigint")
-                                .alias("neardup_kept")
-                            )
-                        )
-                    )
-                    .join(
-                        F.broadcast(
-                            kept.agg(
-                                F.count("*").cast("bigint").alias("mix_kept")
-                            )
-                        )
-                    )
-                )
-
-            timed("I_acct_noop", acct_noop, acc, rep)
-
-            def full():
-                REGISTRY["corpus_prep_e2e"].spark_fn(
-                    spark, sc_dir
-                ).write.format("noop").mode("overwrite").save()
-
-            timed("Z_full_e2e", full, acc, rep)
-        finally:
-            shutil.rmtree(scratch, ignore_errors=True)
-    sc.setJobDescription(None)
-
-    print("\n== medians ==")
-    for tag in sorted(acc):
-        ts = sorted(acc[tag])
-        med = ts[len(ts) // 2]
-        print(f"  {tag}: med {med:.2f}s  all {[round(t, 2) for t in ts]}")
+    spark.sparkContext.setLogLevel("ERROR")
+    st = Stages(spark, ab.staged(spark, args))
+    work = tempfile.mkdtemp(prefix="cpe_decomp_")
+    try:
+        st.neardup().write.parquet(f"{work}/deduped")
+        st.mixed(spark.read.parquet(f"{work}/deduped")).write.parquet(
+            f"{work}/mixed"
+        )
+        ab.run(spark, lambda: build_phases(spark, st, work), reps=args.reps)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
 
 
 if __name__ == "__main__":

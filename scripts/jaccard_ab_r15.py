@@ -14,29 +14,26 @@ Both regimes per VERDICT r14 item 4 (the x10 staging is a zero-pair
 replica-decorrelation artifact): raw sf0.1 documents (256 pairs at
 t=0.2) and the x10 staging (0 pairs).
 
-    python scripts/jaccard_ab_r15.py [factor] [n_pairs]
+    python scripts/jaccard_ab_r15.py [--reps N] [--sf-dir DIR] [--factor F]
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-import bench
 from etl_mudah_spark.operators import dedup as dd
 from etl_mudah_spark.operators.ckpt import materialize_once
 from etl_mudah_spark.plans.datapipe import _NGRAM_MAX_SHINGLE_DF
 from etl_mudah_spark.session import get_spark
 from etl_mudah_spark.tables import load
+from scripts import ab
 
 THRESHOLD = 0.2
+CHECK = ["doc_a", "doc_b", "cast(round(jaccard,6) as string)"]
 
 
 def variants(docs):
@@ -93,48 +90,21 @@ def variants(docs):
     return out
 
 
-def run_regime(spark, sf_dir, label, n_pairs):
-    docs = load(spark, sf_dir, "documents")
-    ph = variants(docs)
-    chk = lambda q: q.selectExpr(
-        "count(*) c",
-        "sum(hash(doc_a, doc_b, cast(round(jaccard,6) as string))) h",
-    ).first()
-    cd = chk(ph["D_current"])
-    for v in ("E_one_pass", "F_prune_singletons"):
-        cv = chk(ph[v])
-        assert (cd.c, cd.h) == (cv.c, cv.h), f"{label} {v} mismatch: {cv} vs {cd}"
-    print(f"[{label}] checksum gate OK ({cd.c} pairs)")
-    names = list(ph)
-    res = {n: [] for n in names}
-    for i in range(n_pairs):
-        ph = variants(load(spark, sf_dir, "documents"))
-        order = names[i % len(names):] + names[: i % len(names)]
-        for n in order:
-            spark.sparkContext.setJobDescription(f"{label} {n} rep{i}")
-            t0 = time.perf_counter()
-            ph[n].write.mode("overwrite").format("noop").save()
-            res[n].append(round(time.perf_counter() - t0, 2))
-    for n in names:
-        s = sorted(res[n])
-        print(
-            f"[{label}] {n:20s} min {s[0]:6.2f} med {statistics.median(s):6.2f} "
-            f"max {s[-1]:6.2f}  {res[n]}"
-        )
-
-
 def main():
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    n_pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
+    args = ab.parser(__doc__, reps=5, factor=10).parse_args()
     spark = get_spark("jaccard_ab_r15")
     spark.sparkContext.setLogLevel("WARN")
-    run_regime(spark, "/root/testdata/sf0.1", "sf0.1", n_pairs)
-    scratch = tempfile.mkdtemp(prefix="jacc_ab_")
-    sc_dir, _ = bench.stage_scaled(
-        spark, "/root/testdata/sf0.1", scratch, factor=factor, tables=["documents"]
-    )
-    run_regime(spark, sc_dir, f"x{factor}", n_pairs)
-    print("load:", os.getloadavg())
+    regimes = [args.sf_dir]
+    if args.factor > 1:
+        regimes.append(ab.staged(spark, args, ["documents"]))
+    for sf_dir in regimes:
+        print(f"== {sf_dir}")
+        ab.run(
+            spark,
+            lambda: variants(load(spark, sf_dir, "documents")),
+            reps=args.reps,
+            check=CHECK,
+        )
 
 
 if __name__ == "__main__":

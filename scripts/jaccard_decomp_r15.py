@@ -9,62 +9,38 @@ Phases, fresh plans per rep:
   C  candidate self-join + pair count noop
   D  full pairs (C + sizes joins + jaccard filter) noop
 
-Usage: python scripts/jaccard_decomp_r15.py [--reps N] [--scratch DIR]
+Usage: python scripts/jaccard_decomp_r15.py [--reps N] [--factor F] [--scratch DIR]
 """
 
 from __future__ import annotations
 
-import argparse
-import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import etl_mudah_spark.plans  # noqa: F401
+from pyspark.sql import functions as F
+
+from etl_mudah_spark.operators import dedup as dd
+from etl_mudah_spark.operators import text as tx
+from etl_mudah_spark.operators.ckpt import materialize_once
+from etl_mudah_spark.operators.dedup import word_shingles
+from etl_mudah_spark.plans import datapipe as dp
+from etl_mudah_spark.plans.llmprep import (
+    _CPE_NEARDUP_THRESHOLD,
+    CORPUS_MIN_TOKENS,
+    CORPUS_MIN_TTR,
+)
 from etl_mudah_spark.session import get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+MAX_DF = dp._NGRAM_MAX_SHINGLE_DF
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--scratch", default="/root/scratch_x10_full")
-    args = ap.parse_args()
-
-    spark = get_spark()
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
-    sc_dir = os.path.join(args.scratch, "scaled")
-    assert os.path.exists(
-        os.path.join(sc_dir, "documents.parquet")
-    ) or os.path.isdir(os.path.join(sc_dir, "documents")), "stage x10 first"
-
-    from pyspark.sql import functions as F
-
-    from etl_mudah_spark.operators import dedup as dd
-    from etl_mudah_spark.operators import text as tx
-    from etl_mudah_spark.operators.ckpt import materialize_once as _checkpoint
-    from etl_mudah_spark.operators.dedup import word_shingles
-    from etl_mudah_spark.plans import datapipe as dp
-    from etl_mudah_spark.plans.llmprep import (
-        _CPE_NEARDUP_THRESHOLD,
-        CORPUS_MIN_TOKENS,
-        CORPUS_MIN_TTR,
-    )
-    from etl_mudah_spark.tables import load
-
-    MAX_DF = dp._NGRAM_MAX_SHINGLE_DF
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
+def build_phases(spark, sc_dir):
     def build_e():
-        docs = load(spark, sc_dir, "documents").select(
-            "doc_id", "source", "text"
-        )
+        docs = load(spark, sc_dir, "documents").select("doc_id", "source", "text")
         q = (
             tx.quality_features(docs, "text")
             .where(
@@ -79,78 +55,59 @@ def main() -> None:
             ["doc_id"],
         ).drop("k")
 
-    def timed(tag, fn, acc, rep):
-        sc.setJobDescription(f"jac decomp {tag} rep{rep}")
-        t0 = time.time()
-        fn()
-        dt = time.time() - t0
-        acc.setdefault(tag, []).append(dt)
-        print(f"  {tag}: {dt:.2f}s", flush=True)
-
-    acc: dict[str, list[float]] = {}
-    for rep in range(args.reps):
-        print(f"rep {rep}", flush=True)
-
-        def build_sh():
-            return _checkpoint(
-                build_e().select(
-                    F.col("doc_id"),
-                    word_shingles(F.col("text"), 3).alias("_shs"),
-                )
+    def build_sh():
+        return materialize_once(
+            build_e().select(
+                F.col("doc_id"), word_shingles(F.col("text"), 3).alias("_shs")
             )
+        )
 
-        # A: the shingle pass alone (count() materializes the ckpt RDD)
-        timed("A_sh_materialize", lambda: build_sh().count(), acc, rep)
+    def build_index():
+        shingled = build_sh().select(
+            F.col("doc_id"), F.explode(F.col("_shs")).alias("sh")
+        )
+        rare = (
+            shingled.groupBy("sh")
+            .agg(F.count("*").alias("_df"))
+            .where((F.col("_df") <= MAX_DF) & (F.col("_df") >= 2))
+            .select("sh")
+        )
+        return shingled.join(rare, "sh")
 
-        def build_index(sh):
-            shingled = sh.select(
-                F.col("doc_id"), F.explode(F.col("_shs")).alias("sh")
+    def build_common():
+        index = build_index()
+        a = index.alias("a").hint("shuffle_hash")
+        b = index.alias("b").hint("shuffle_hash")
+        return (
+            a.join(
+                b,
+                (F.col("a.sh") == F.col("b.sh"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
             )
-            rare = (
-                shingled.groupBy("sh")
-                .agg(F.count("*").alias("_df"))
-                .where((F.col("_df") <= MAX_DF) & (F.col("_df") >= 2))
-                .select("sh")
+            .groupBy(
+                F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
             )
-            return shingled.join(rare, "sh")
+            .agg(F.count("*").alias("common"))
+        )
 
-        timed("B_index_noop", lambda: noop(build_index(build_sh())), acc, rep)
+    sh = build_sh()
+    return {
+        # count() materializes the checkpoint RDD
+        "A_sh_materialize": sh.count,
+        "B_index_noop": build_index(),
+        "C_common_noop": build_common(),
+        "D_full_pairs_noop": dd.ngram_jaccard_pairs(
+            build_e(), threshold=_CPE_NEARDUP_THRESHOLD, max_shingle_df=MAX_DF
+        ).select("doc_a", "doc_b"),
+    }
 
-        def build_common(sh):
-            index = build_index(sh)
-            a = index.alias("a").hint("shuffle_hash")
-            b = index.alias("b").hint("shuffle_hash")
-            return (
-                a.join(
-                    b,
-                    (F.col("a.sh") == F.col("b.sh"))
-                    & (F.col("a.doc_id") < F.col("b.doc_id")),
-                )
-                .groupBy(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-                .agg(F.count("*").alias("common"))
-            )
 
-        timed("C_common_noop", lambda: noop(build_common(build_sh())), acc, rep)
-
-        def full():
-            noop(
-                dd.ngram_jaccard_pairs(
-                    build_e(),
-                    threshold=_CPE_NEARDUP_THRESHOLD,
-                    max_shingle_df=MAX_DF,
-                ).select("doc_a", "doc_b")
-            )
-
-        timed("D_full_pairs_noop", full, acc, rep)
-    sc.setJobDescription(None)
-
-    print("\n== medians ==")
-    for tag in sorted(acc):
-        ts = sorted(acc[tag])
-        print(f"  {tag}: med {ts[len(ts) // 2]:.2f}s  all {[round(t, 2) for t in ts]}")
+def main() -> None:
+    args = ab.parser(__doc__, reps=3, factor=10).parse_args()
+    spark = get_spark()
+    spark.sparkContext.setLogLevel("ERROR")
+    sc_dir = ab.staged(spark, args, ["documents"])
+    ab.run(spark, lambda: build_phases(spark, sc_dir), reps=args.reps)
 
 
 if __name__ == "__main__":

@@ -1,54 +1,33 @@
 """Paired A/B: capped LSH near-dup, current form (D) vs single-UDF-pass
-narrow checkpoint (G). Rotated order per pair, fresh plans per rep.
+narrow checkpoint (G), both from scripts/lsh_x10_decomp_r15.py.
 
-    python scripts/lsh_ab_dg_r15.py [n_pairs]
+    python scripts/lsh_ab_dg_r15.py [--reps N] [--factor F]
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
 from etl_mudah_spark.session import get_spark
-from scripts.lsh_x10_decomp_r15 import build_phases
+from scripts import ab
+from scripts.lsh_x10_decomp_r15 import CHECK, build_phases
+
+VARIANTS = ("D_full", "G_full_narrow_ckpt")
 
 
 def main():
-    n_pairs = int(sys.argv[1]) if len(sys.argv) > 1 else 6
+    args = ab.parser(__doc__, reps=6, factor=10).parse_args()
     spark = get_spark("lsh_ab_dg_r15")
     spark.sparkContext.setLogLevel("WARN")
-    scratch = tempfile.mkdtemp(prefix="lsh_ab_")
-    sc_dir, _ = bench.stage_scaled(
-        spark, "/root/testdata/sf0.1", scratch, factor=10, tables=["embeddings"]
-    )
-    res = {"D_full": [], "G_full_narrow_ckpt": []}
-    # one discarded warm-up of each
-    for n in res:
-        build_phases(spark, sc_dir)[n].write.mode("overwrite").format("noop").save()
-    for i in range(n_pairs):
-        order = ["D_full", "G_full_narrow_ckpt"]
-        if i % 2:
-            order.reverse()
-        for n in order:
-            ph = build_phases(spark, sc_dir)
-            spark.sparkContext.setJobDescription(f"ab {n} pair{i}")
-            t0 = time.perf_counter()
-            ph[n].write.mode("overwrite").format("noop").save()
-            res[n].append(round(time.perf_counter() - t0, 2))
-        print(f"pair {i}: load {os.getloadavg()[0]:.1f} "
-              + " ".join(f"{n}={res[n][-1]}" for n in res))
-    for n, r in res.items():
-        s = sorted(r)
-        print(f"{n:22s} min {s[0]:6.2f} med {statistics.median(s):6.2f} "
-              f"max {s[-1]:6.2f}  {r}")
-    wins = sum(1 for a, b in zip(res["D_full"], res["G_full_narrow_ckpt"]) if b < a)
-    print(f"G wins {wins}/{n_pairs} pairs")
+    sc_dir = ab.staged(spark, args, ["embeddings"])
+
+    def build():
+        ph = build_phases(spark, sc_dir)
+        return {n: ph[n] for n in VARIANTS}
+
+    ab.run(spark, build, reps=args.reps, check=CHECK)
 
 
 if __name__ == "__main__":

@@ -1,60 +1,33 @@
 """Paired A/B: capped LSH near-dup, dedup-then-verify (D, current) vs
-verify-then-dedup (H). Rotated order per pair, fresh plans per rep,
-checksum gate first.
+verify-then-dedup (H), both from scripts/lsh_x10_decomp_r15.py.
 
-    python scripts/lsh_ab_dh_r15.py [n_pairs]
+    python scripts/lsh_ab_dh_r15.py [--reps N] [--factor F]
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
 from etl_mudah_spark.session import get_spark
-from scripts.lsh_x10_decomp_r15 import build_phases
+from scripts import ab
+from scripts.lsh_x10_decomp_r15 import CHECK, build_phases
 
-A, B = "D_full", "H_verify_then_dedup"
+VARIANTS = ("D_full", "H_verify_then_dedup")
 
 
 def main():
-    n_pairs = int(sys.argv[1]) if len(sys.argv) > 1 else 6
+    args = ab.parser(__doc__, reps=6, factor=10).parse_args()
     spark = get_spark("lsh_ab_dh_r15")
     spark.sparkContext.setLogLevel("WARN")
-    scratch = tempfile.mkdtemp(prefix="lsh_ab_")
-    sc_dir, _ = bench.stage_scaled(
-        spark, "/root/testdata/sf0.1", scratch, factor=10, tables=["embeddings"]
-    )
-    ph = build_phases(spark, sc_dir)
-    chk = lambda q: q.selectExpr(
-        "count(*) c", "sum(hash(id_a, id_b, cast(cosine_sim as string))) h"
-    ).first()
-    ca, cb = chk(ph[A]), chk(ph[B])
-    assert (ca.c, ca.h) == (cb.c, cb.h), f"mismatch {ca} vs {cb}"
-    print(f"checksum gate OK ({ca.c} rows)")
+    sc_dir = ab.staged(spark, args, ["embeddings"])
 
-    res = {A: [], B: []}
-    for i in range(n_pairs):
-        order = [A, B] if i % 2 == 0 else [B, A]
-        for n in order:
-            p = build_phases(spark, sc_dir)
-            spark.sparkContext.setJobDescription(f"ab {n} pair{i}")
-            t0 = time.perf_counter()
-            p[n].write.mode("overwrite").format("noop").save()
-            res[n].append(round(time.perf_counter() - t0, 2))
-        print(f"pair {i}: load {os.getloadavg()[0]:.1f} "
-              + " ".join(f"{n}={res[n][-1]}" for n in res))
-    for n, r in res.items():
-        s = sorted(r)
-        print(f"{n:22s} min {s[0]:6.2f} med {statistics.median(s):6.2f} "
-              f"max {s[-1]:6.2f}  {r}")
-    wins = sum(1 for a, b in zip(res[A], res[B]) if b < a)
-    print(f"{B} wins {wins}/{n_pairs} pairs")
+    def build():
+        ph = build_phases(spark, sc_dir)
+        return {n: ph[n] for n in VARIANTS}
+
+    ab.run(spark, build, reps=args.reps, check=CHECK)
 
 
 if __name__ == "__main__":

@@ -13,33 +13,32 @@ exchange or write the floor ruling with numbers:
   D  full query (C + vector attach + dot + filter)              -> noop
   E  full query but verify joins broadcast(base) explicitly     -> noop
   F  full query with dedup via single packed pair key           -> noop
+  G  full query over a narrow (id,tbl,bkt) lazy checkpoint      -> noop
+  H  full query, verify-then-dedup                              -> noop
 
-Variants are checksum-gated against D before timing.  Rotated
-interleave, report per-variant [min/med/max].
+E, F and G are checksum-gated against D before timing.
 
-Run:  python scripts/lsh_x10_decomp_r15.py [factor]
+Run:  python scripts/lsh_x10_decomp_r15.py [--reps N] [--factor F]
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
 
 from pyspark.sql import functions as F
 
-import bench
 from etl_mudah_spark.operators import similarity as sim
 from etl_mudah_spark.plans.datapipe import EMB_DIM
 from etl_mudah_spark.session import get_spark
 from etl_mudah_spark.tables import load
+from scripts import ab
 
 THRESHOLD = 0.45
 CAP = 64
+CHECK = ["id_a", "id_b", "cast(cosine_sim as string)"]
 
 
 def build_phases(spark, sc_dir):
@@ -167,52 +166,18 @@ def build_phases(spark, sc_dir):
 
 
 def main():
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
+    args = ab.parser(__doc__, reps=3, factor=10).parse_args()
     spark = get_spark("lsh_x10_decomp_r15")
     spark.sparkContext.setLogLevel("WARN")
-    scratch = tempfile.mkdtemp(prefix="lsh_decomp_")
-    sc_dir, nbytes = bench.stage_scaled(
-        spark, "/root/testdata/sf0.1", scratch, factor=factor,
-        tables=["embeddings"],
-    )
-    print(f"staged x{factor} embeddings at {sc_dir} ({nbytes/1e6:.1f} MB)")
+    sc_dir = ab.staged(spark, args, ["embeddings"])
     phases = build_phases(spark, sc_dir)
-
-    # correctness gate: E and F must equal D exactly
-    d = phases["D_full"]
-    chk = lambda q: q.selectExpr(
-        "count(*) c", "sum(hash(id_a, id_b, cast(cosine_sim as string))) h"
-    ).first()
-    cd = chk(d)
-    for v in ("E_full_bcast_verify", "F_full_packed_dedup", "G_full_narrow_ckpt"):
-        cv = chk(phases[v])
-        assert (cd.c, cd.h) == (cv.c, cv.h), f"{v} mismatch: {cv} vs {cd}"
-        print(f"checksum gate {v}: OK ({cd.c} rows)")
-
-    names = list(phases)
-    reps = {n: [] for n in names}
-    N = 3
-    for i in range(N):
-        # REBUILD the plans each rep: timing a reused DataFrame object
-        # re-reads its registered shuffle map outputs (skipped stages)
-        # — the round-11 measurement trap.
-        phases = build_phases(spark, sc_dir)
-        order = names[i % len(names):] + names[: i % len(names)]
-        for n in order:
-            spark.sparkContext.setJobDescription(f"decomp {n} rep{i}")
-            t0 = time.perf_counter()
-            phases[n].write.mode("overwrite").format("noop").save()
-            reps[n].append(round(time.perf_counter() - t0, 2))
-    print(f"\nload now: {os.getloadavg()}")
-    for n in names:
-        r = sorted(reps[n])
-        print(
-            f"{n:24s} min {r[0]:6.2f}  med {statistics.median(r):6.2f} "
-            f" max {r[-1]:6.2f}   {reps[n]}"
-        )
+    ab.gate({n: phases[n] for n in (
+        "D_full", "E_full_bcast_verify", "F_full_packed_dedup", "G_full_narrow_ckpt"
+    )}, CHECK)
+    ab.run(spark, lambda: build_phases(spark, sc_dir), reps=args.reps)
     # executed plan of the full form: join strategies + exchanges
     d = build_phases(spark, sc_dir)["D_full"]
-    d.write.mode("overwrite").format("noop").save()
+    ab.noop(d)
     ep = d._jdf.queryExecution().executedPlan().toString()
     for marker in (
         "SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",

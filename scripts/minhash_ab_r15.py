@@ -1,78 +1,35 @@
 """Paired A/B: minhash_near_duplicates current (D, three shingle
-passes) vs one-shingle-pass checkpointed form (E). Rotated order,
-fresh plans per rep, checksum gate first.
+passes) vs one-shingle-pass checkpointed form (E), both from
+scripts/minhash_decomp_r15.py.
 
-    python scripts/minhash_ab_r15.py [sf_dir] [factor] [n_pairs]
+    python scripts/minhash_ab_r15.py [--reps N] [--sf-dir DIR] [--factor F]
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench
 from etl_mudah_spark.session import get_spark
-from scripts import minhash_decomp_r15 as md
-from etl_mudah_spark.operators import dedup as dd
 from etl_mudah_spark.tables import load
-from pyspark.sql import functions as F
+from scripts import ab
+from scripts import minhash_decomp_r15 as md
 
-A, B = "D_full", "E_one_shingle_pass"
+VARIANTS = ("D_full", "E_one_shingle_pass")
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    factor = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    n_pairs = int(sys.argv[3]) if len(sys.argv) > 3 else 6
+    args = ab.parser(__doc__, reps=6, factor=1).parse_args()
     spark = get_spark("minhash_ab_r15")
     spark.sparkContext.setLogLevel("WARN")
-    if factor > 1:
-        scratch = tempfile.mkdtemp(prefix="minhash_ab_")
-        sf_dir, _ = bench.stage_scaled(
-            spark, sf_dir, scratch, factor=factor, tables=["documents"]
-        )
-    docs = load(spark, sf_dir, "documents")
+    docs = load(spark, ab.staged(spark, args, ["documents"]), "documents")
 
     def build():
-        d = dd.minhash_near_duplicates(
-            docs, num_hashes=md.NUM_HASHES, bands=md.BANDS, threshold=md.THRESHOLD
-        )
-        sh_ck = docs.select(
-            F.col("doc_id"), dd.word_shingles(F.col("text"), 3).alias("sh")
-        ).localCheckpoint(eager=False)
-        e = md.verify(md.cands_from_sig(md.sig_from_shingled(sh_ck)), sh_ck)
-        return {A: d, B: e}
+        ph = md.build_phases(docs)
+        return {n: ph[n] for n in VARIANTS}
 
-    ph = build()
-    chk = lambda q: q.selectExpr(
-        "count(*) c", "sum(hash(doc_a, doc_b, cast(round(jaccard,6) as string))) h"
-    ).first()
-    ca, cb = chk(ph[A]), chk(ph[B])
-    assert (ca.c, ca.h) == (cb.c, cb.h), f"mismatch {ca} vs {cb}"
-    print(f"checksum gate OK ({ca.c} rows)")
-
-    res = {A: [], B: []}
-    for i in range(n_pairs):
-        order = [A, B] if i % 2 == 0 else [B, A]
-        for n in order:
-            p = build()
-            spark.sparkContext.setJobDescription(f"ab {n} pair{i}")
-            t0 = time.perf_counter()
-            p[n].write.mode("overwrite").format("noop").save()
-            res[n].append(round(time.perf_counter() - t0, 2))
-        print(f"pair {i}: load {os.getloadavg()[0]:.1f} "
-              + " ".join(f"{n}={res[n][-1]}" for n in res))
-    for n, r in res.items():
-        s = sorted(r)
-        print(f"{n:22s} min {s[0]:6.2f} med {statistics.median(s):6.2f} "
-              f"max {s[-1]:6.2f}  {r}")
-    wins = sum(1 for a, b in zip(res[A], res[B]) if b < a)
-    print(f"{B} wins {wins}/{n_pairs} pairs")
+    ab.run(spark, build, reps=args.reps, check=md.CHECK)
 
 
 if __name__ == "__main__":

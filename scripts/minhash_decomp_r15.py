@@ -20,28 +20,25 @@ self-join), and once per verification side (a and b).  Phases:
 
 E/F are checksum-gated against D before timing.
 
-Run:  python scripts/minhash_decomp_r15.py [sf_dir] [factor]
-      factor > 1 stages a scaled documents replica first.
+Run:  python scripts/minhash_decomp_r15.py [--reps N] [--sf-dir DIR] [--factor F]
+      --factor > 1 stages a scaled documents replica first.
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-import bench
 from etl_mudah_spark.operators import dedup as dd
 from etl_mudah_spark.session import get_spark
 from etl_mudah_spark.tables import load
+from scripts import ab
 
 NUM_HASHES, BANDS, THRESHOLD = 32, 8, 0.2
+CHECK = ["doc_a", "doc_b", "cast(round(jaccard,6) as string)"]
 
 
 def sig_from_shingled(sh):
@@ -113,81 +110,46 @@ def verify(cands, sh):
     )
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    factor = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    spark = get_spark("minhash_decomp_r15")
-    spark.sparkContext.setLogLevel("WARN")
-    if factor > 1:
-        scratch = tempfile.mkdtemp(prefix="minhash_decomp_")
-        sf_dir, nbytes = bench.stage_scaled(
-            spark, sf_dir, scratch, factor=factor, tables=["documents"]
-        )
-        print(f"staged x{factor} documents ({nbytes/1e6:.1f} MB)")
-    docs = load(spark, sf_dir, "documents")
+def build_phases(docs):
+    """Every phase over ``docs``; the E/F boundaries are lazy
+    checkpoints, so call this afresh for every timed rep."""
 
     def fresh_sh():
         return docs.select(
             F.col("doc_id"), dd.word_shingles(F.col("text"), 3).alias("sh")
         )
 
-    def build():
-        d = dd.minhash_near_duplicates(
+    sh_ck = fresh_sh().localCheckpoint(eager=False)
+    sh_ck2 = fresh_sh().localCheckpoint(eager=False)
+    return {
+        "A_signatures": dd.minhash_signatures(docs, num_hashes=NUM_HASHES),
+        "B_band_buckets": dd.minhash_band_buckets(
+            docs, num_hashes=NUM_HASHES, bands=BANDS
+        ),
+        "C_candidates": dd.minhash_lsh_candidates(
+            docs, num_hashes=NUM_HASHES, bands=BANDS
+        ),
+        "D_full": dd.minhash_near_duplicates(
             docs, num_hashes=NUM_HASHES, bands=BANDS, threshold=THRESHOLD
-        )
-        sh_ck = fresh_sh().localCheckpoint(eager=False)
-        e = verify(cands_from_sig(sig_from_shingled(sh_ck)), sh_ck)
-        sh_ck2 = fresh_sh().localCheckpoint(eager=False)
-        f = verify(
-            dd.minhash_lsh_candidates(
-                docs, num_hashes=NUM_HASHES, bands=BANDS
-            ),
+        ),
+        "E_one_shingle_pass": verify(
+            cands_from_sig(sig_from_shingled(sh_ck)), sh_ck
+        ),
+        "F_shared_verify_sh": verify(
+            dd.minhash_lsh_candidates(docs, num_hashes=NUM_HASHES, bands=BANDS),
             sh_ck2,
-        )
-        return {
-            "A_signatures": dd.minhash_signatures(docs, num_hashes=NUM_HASHES),
-            "B_band_buckets": dd.minhash_band_buckets(
-                docs, num_hashes=NUM_HASHES, bands=BANDS
-            ),
-            "C_candidates": dd.minhash_lsh_candidates(
-                docs, num_hashes=NUM_HASHES, bands=BANDS
-            ),
-            "D_full": d,
-            "E_one_shingle_pass": e,
-            "F_shared_verify_sh": f,
-        }
+        ),
+    }
 
-    phases = build()
-    chk = lambda q: q.selectExpr(
-        "count(*) c", "sum(hash(doc_a, doc_b, cast(round(jaccard,6) as string))) h"
-    ).first()
-    cd = chk(phases["D_full"])
-    for v in ("E_one_shingle_pass", "F_shared_verify_sh"):
-        cv = chk(phases[v])
-        assert (cd.c, cd.h) == (cv.c, cv.h), f"{v} mismatch: {cv} vs {cd}"
-        print(f"checksum gate {v}: OK ({cd.c} rows)")
 
-    names = list(phases)
-    reps = {n: [] for n in names}
-    N = 4
-    for i in range(N):
-        # fresh plans each rep: localCheckpoint is per-call, a reused
-        # DataFrame would hit the already-materialized checkpoint and
-        # time a cache read (result caching — banned as evidence)
-        phases = build()
-        order = names[i % len(names):] + names[: i % len(names)]
-        for n in order:
-            spark.sparkContext.setJobDescription(f"minhash {n} rep{i}")
-            t0 = time.perf_counter()
-            phases[n].write.mode("overwrite").format("noop").save()
-            reps[n].append(round(time.perf_counter() - t0, 2))
-    print(f"\nload now: {os.getloadavg()}")
-    for n in names:
-        r = sorted(reps[n])
-        print(
-            f"{n:22s} min {r[0]:6.2f}  med {statistics.median(r):6.2f} "
-            f" max {r[-1]:6.2f}   {reps[n]}"
-        )
+def main():
+    args = ab.parser(__doc__, reps=4, factor=1).parse_args()
+    spark = get_spark("minhash_decomp_r15")
+    spark.sparkContext.setLogLevel("WARN")
+    docs = load(spark, ab.staged(spark, args, ["documents"]), "documents")
+    phases = build_phases(docs)
+    ab.gate({n: phases[n] for n in ("D_full", "E_one_shingle_pass", "F_shared_verify_sh")}, CHECK)
+    ab.run(spark, lambda: build_phases(docs), reps=args.reps)
 
 
 if __name__ == "__main__":

@@ -10,80 +10,66 @@ embeddings replica:
                      production loop: cost shown is ONE 10%-batch)
 
 Run SOLO. Results recorded in BASELINE.md round-10 notes.
+
+    python scripts/neardup_threeway.py [--reps N] [--factor F]
 """
 import os
 import shutil
-import statistics
 import sys
 import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-os.chdir(_ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-from etl_mudah_spark.plans import registry  # noqa: E402
-from etl_mudah_spark.session import get_spark  # noqa: E402
-from etl_mudah_spark.tables import load  # noqa: E402
-
-print("loadavg:", [round(x, 2) for x in os.getloadavg()])
-spark = get_spark("neardup-3way")
-scratch = tempfile.mkdtemp(prefix="neardup3_")
+from etl_mudah_spark.operators import similarity as sim
+from etl_mudah_spark.session import get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
 
 
-def run(label, fn, reps=3):
-    ts = []
-    for _ in range(reps):
-        t0 = time.time()
-        out = fn()
-        ts.append(time.time() - t0)
-    print(f"{label:28s} {statistics.median(ts):7.2f} s "
-          f"{[round(x, 2) for x in ts]}  result={out}", flush=True)
+def main():
+    args = ab.parser(__doc__, reps=3, factor=10).parse_args()
+    spark = get_spark("neardup-3way")
+    emb = load(spark, ab.staged(spark, args, ["embeddings"]), "embeddings")
+    print(f"embeddings: {emb.count()} vectors")
+    scratch = tempfile.mkdtemp(prefix="neardup3_")
+    try:
+        # The bench query (emb_cosine_near_dup_lsh) is NOT re-measured
+        # here: its benched cost INCLUDES the exact O(n²) all-pairs twin
+        # (the recall-invariant verification side, 17.56 s of the r9 x10
+        # record) — compare the PRODUCT paths below against that number.
+        ab.run(spark, lambda: {
+            # the product path alone: capped SRP-LSH pairing, no twin
+            "capped_srp_lsh_product": lambda: sim.cosine_near_duplicates(
+                emb, threshold=0.45, target_recall=0.95, max_tables=96, dim=64,
+            ),
+            # SemDeDup product path: cluster-scoped pairing, no twin
+            "semdedup_product": lambda: sim.semantic_dedup_pairs(
+                emb, threshold=0.45, n_cells=16,
+            ),
+        }, reps=args.reps)
+
+        # Persisted SRP index + ONE incremental batch (10% of corpus):
+        # the production daily loop — the build is an amortized
+        # one-off, the per-batch cost is what recurs.
+        idx_dir = f"{scratch}/srp_index"
+        base = emb.where(F.col("vec_id") % 10 != 0)
+        batch = emb.where(F.col("vec_id") % 10 == 0)
+        ab.run(spark, lambda: {
+            "srp_index_build_one_off": lambda: sim.srp_index_build(
+                base, idx_dir, dim=64, n_planes=8, n_tables=24
+            ),
+        }, reps=1)
+        ab.run(spark, lambda: {
+            "srp_incremental_batch10pct": lambda: sim.srp_dedup_incremental(
+                spark, batch, idx_dir, dim=64, n_planes=8, n_tables=24,
+                threshold=0.45,
+            ),
+        }, reps=args.reps)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
 
-try:
-    sc_dir, _ = bench.stage_scaled(
-        spark, "/root/testdata/sf0.1", scratch, factor=10,
-        tables=["embeddings"],
-    )
-    emb = load(spark, sc_dir, "embeddings")
-    n = emb.count()
-    print(f"x10 embeddings staged: {n} vectors")
-
-    from etl_mudah_spark.operators import similarity as sim
-
-    # The bench query (emb_cosine_near_dup_lsh) is NOT re-measured
-    # here: its benched cost INCLUDES the exact O(n²) all-pairs twin
-    # (the recall-invariant verification side, 17.56 s of the r9 x10
-    # record) — compare the PRODUCT paths below against that number.
-
-    # 1. the product path alone: capped SRP-LSH pairing, no twin
-    run("capped_srp_lsh_product", lambda: sim.cosine_near_duplicates(
-        emb, threshold=0.45, target_recall=0.95, max_tables=96, dim=64,
-    ).count())
-
-    # 2. SemDeDup product path: cluster-scoped pairing, no twin
-    run("semdedup_product", lambda: sim.semantic_dedup_pairs(
-        emb, threshold=0.45, n_cells=16,
-    ).count(), reps=1)
-
-    # 3. persisted SRP index + ONE incremental batch (10% of corpus):
-    #    the production daily loop — build is amortized one-off, the
-    #    per-batch cost is what recurs.
-    idx_dir = f"{scratch}/srp_index"
-    base = emb.where(F.col("vec_id") % 10 != 0)
-    batch = emb.where(F.col("vec_id") % 10 == 0)
-    t0 = time.time()
-    sim.srp_index_build(base, idx_dir, dim=64, n_planes=8, n_tables=24)
-    build_s = time.time() - t0
-    print(f"srp_index_build (one-off)    {build_s:7.2f} s", flush=True)
-    run("srp_incremental_batch10pct", lambda: sim.srp_dedup_incremental(
-        spark, batch, idx_dir, dim=64, n_planes=8, n_tables=24,
-        threshold=0.45,
-    ).count(), reps=1)
-finally:
-    shutil.rmtree(scratch, ignore_errors=True)
-print("loadavg end:", [round(x, 2) for x in os.getloadavg()])
+if __name__ == "__main__":
+    main()

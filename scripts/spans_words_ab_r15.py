@@ -5,126 +5,85 @@ passes, one per consumer) vs a words-array materialize-once boundary
 The boundary stores ~1x text bytes (the token array), unlike the
 rejected 13x grams variant. Candidate win = one regex-split pass over
 the corpus; candidate loss = RDD block write+read of the token arrays.
-Checksum-gated byte-identical first; rotated within-rep order; fresh
-plans per rep. Input = the e2e's `nd` stage output shape at the x10
-staging (the operator's real call site).
+Checksum-gated first; rotated order; fresh plans per rep. Input = the
+e2e's `nd` stage output shape at the x10 staging (the operator's real
+call site).
 
-Usage: python scripts/spans_words_ab_r15.py [--reps N] [--scratch DIR]
+Usage: python scripts/spans_words_ab_r15.py [--reps N] [--factor F] [--scratch DIR]
 """
 
 from __future__ import annotations
 
-import argparse
-import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-import etl_mudah_spark.plans  # noqa: F401
+from pyspark.sql import functions as F
+
+from etl_mudah_spark.operators import dedup as dd
+from etl_mudah_spark.operators.ckpt import materialize_once
+from etl_mudah_spark.operators.decontam import positions_to_spans
+from etl_mudah_spark.operators.dedup import WHITESPACE_RE
+from etl_mudah_spark.plans import datapipe as dp
 from etl_mudah_spark.session import get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
+
+N = dp.REPEATED_SPAN_N
+MIN_DOCS = dp.REPEATED_SPAN_MIN_DOCS
+
+
+def words_once(corpus):
+    # split ONCE into a materialized token array; both consumers
+    # build the gram sequence from the stored array.
+    w = materialize_once(
+        corpus.select(
+            "doc_id",
+            F.split(F.trim(F.col("text")), WHITESPACE_RE).alias("_w"),
+        )
+    )
+    wb = F.col("_w")
+    idx = F.sequence(F.lit(1), F.size(wb) - (N - 1))
+    grams = F.when(
+        F.size(wb) >= N,
+        F.transform(idx, lambda i: F.concat_ws(" ", F.slice(wb, i, N))),
+    ).otherwise(F.array().cast("array<string>"))
+    pos = w.select(
+        "doc_id", F.posexplode(grams).alias("pos0", "gram")
+    ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
+    repeated = (
+        pos.hint("shuffle_hash")
+        .groupBy("gram")
+        .agg(F.count_distinct(F.col("doc_id")).alias("_nd"))
+        .where(F.col("_nd") >= MIN_DOCS)
+        .select("gram")
+    )
+    hits = pos.hint("shuffle_hash").join(
+        repeated.hint("shuffle_hash"), "gram", "left_semi"
+    )
+    return positions_to_spans(hits, id_col="doc_id", n=N)
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=3)
-    ap.add_argument("--scratch", default="/root/scratch_x10_full")
-    args = ap.parse_args()
-
+    args = ab.parser(__doc__, reps=3, factor=10).parse_args()
     spark = get_spark()
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
-    sc_dir = os.path.join(args.scratch, "scaled")
-    assert os.path.exists(os.path.join(sc_dir, "documents.parquet")), (
-        "stage x10 first"
+    spark.sparkContext.setLogLevel("ERROR")
+    sc_dir = ab.staged(spark, args, ["documents"])
+
+    def build():
+        corpus = load(spark, sc_dir, "documents").select("doc_id", "text")
+        return {
+            "old": dd.repeated_ngram_spans(corpus, n=N, min_docs=MIN_DOCS),
+            "new": words_once(corpus),
+        }
+
+    ab.run(
+        spark,
+        build,
+        reps=args.reps,
+        check=["doc_id", "span_id", "span_start", "span_end", "n_matched_grams"],
     )
-
-    from pyspark.sql import functions as F
-
-    from etl_mudah_spark.operators import dedup as dd
-    from etl_mudah_spark.operators.ckpt import materialize_once
-    from etl_mudah_spark.operators.decontam import positions_to_spans
-    from etl_mudah_spark.operators.dedup import WHITESPACE_RE
-    from etl_mudah_spark.plans import datapipe as dp
-    from etl_mudah_spark.tables import load
-
-    N = dp.REPEATED_SPAN_N
-    MIN_DOCS = dp.REPEATED_SPAN_MIN_DOCS
-
-    def corpus():
-        return load(spark, sc_dir, "documents").select("doc_id", "text")
-
-    def old():
-        return dd.repeated_ngram_spans(
-            corpus(), n=N, min_docs=MIN_DOCS
-        )
-
-    def new():
-        # split ONCE into a materialized token array; both consumers
-        # build the gram sequence from the stored array.
-        w = materialize_once(
-            corpus().select(
-                "doc_id",
-                F.split(F.trim(F.col("text")), WHITESPACE_RE).alias("_w"),
-            )
-        )
-        wb = F.col("_w")
-        idx = F.sequence(F.lit(1), F.size(wb) - (N - 1))
-        grams = F.when(
-            F.size(wb) >= N,
-            F.transform(idx, lambda i: F.concat_ws(" ", F.slice(wb, i, N))),
-        ).otherwise(F.array().cast("array<string>"))
-        pos = w.select(
-            "doc_id", F.posexplode(grams).alias("pos0", "gram")
-        ).select("doc_id", (F.col("pos0") + 1).alias("pos"), "gram")
-        repeated = (
-            pos.hint("shuffle_hash")
-            .groupBy("gram")
-            .agg(F.count_distinct(F.col("doc_id")).alias("_nd"))
-            .where(F.col("_nd") >= MIN_DOCS)
-            .select("gram")
-        )
-        hits = pos.hint("shuffle_hash").join(
-            repeated.hint("shuffle_hash"), "gram", "left_semi"
-        )
-        return positions_to_spans(hits, id_col="doc_id", n=N)
-
-    def checksum(df):
-        row = df.agg(
-            F.count("*").alias("n"),
-            F.expr(
-                "bit_xor(xxhash64(doc_id, span_id, span_start, span_end, n_matched_grams))"
-            ).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    print("checksum gate ...", flush=True)
-    co, cn = checksum(old()), checksum(new())
-    print(f"  old {co}  new {cn}", flush=True)
-    assert co == cn, "VARIANTS DIFFER — do not time"
-
-    def noop(df):
-        df.write.format("noop").mode("overwrite").save()
-
-    acc: dict[str, list[float]] = {}
-    for rep in range(args.reps):
-        pair = (("old", old), ("new", new)) if rep % 2 == 0 else (
-            ("new", new),
-            ("old", old),
-        )
-        for tag, fn in pair:
-            sc.setJobDescription(f"spans ab {tag} rep{rep}")
-            t0 = time.time()
-            noop(fn())
-            dt = time.time() - t0
-            acc.setdefault(tag, []).append(dt)
-            print(f"  {tag} rep{rep}: {dt:.2f}s", flush=True)
-    sc.setJobDescription(None)
-
-    for tag, ts in acc.items():
-        ts = sorted(ts)
-        print(f"{tag}: med {ts[len(ts) // 2]:.2f}s  all {[round(t, 2) for t in ts]}")
 
 
 if __name__ == "__main__":

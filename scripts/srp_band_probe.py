@@ -13,7 +13,6 @@ import sys
 import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
 
 from etl_mudah_spark.session import get_spark  # noqa: E402
 import bench  # noqa: E402
@@ -22,6 +21,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
+    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
     spark = get_spark()
     scratch = tempfile.mkdtemp(prefix="srp_probe_")
     try:

@@ -13,79 +13,93 @@ into
     walCommit      offset log fsync
     commitOffsets  commit log fsync
 plus stateOperators[*].commitTimeMs (state-store checkpoint inside
-addBatch). Run once with the default HDFSBackedStateStoreProvider and
-once with RocksDBStateStoreProvider, same drop dir, fresh checkpoints.
+addBatch). The bench's floor pipeline (bench.hourly_event_agg) runs
+under the default HDFSBackedStateStoreProvider and under
+RocksDBStateStoreProvider, same drop dir, fresh checkpoints per run.
 
-Run SOLO; loadavg is printed for attribution. Results recorded in
-BASELINE.md (round-11 notes).
+Run SOLO. Results recorded in BASELINE.md (round-11 notes).
+
+    python scripts/stream_floor_decomp.py [--reps N] [--sf-dir DIR]
 """
+from __future__ import annotations
+
 import json
 import os
 import shutil
-import statistics
 import sys
 import tempfile
+import threading
 import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_mudah_spark.session import get_spark  # noqa: E402
-from etl_mudah_spark.tables import load  # noqa: E402
+from pyspark.sql.streaming import StreamingQueryListener
 
-from pyspark.sql import functions as F  # noqa: E402
+import bench
+from etl_mudah_spark.session import get_spark
+from etl_mudah_spark.streaming import pipeline
+from scripts import ab
 
 N_FILES = 16
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-
-print("loadavg at start:", [round(x, 2) for x in os.getloadavg()])
-spark = get_spark("stream-floor-decomp")
-sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-scratch = tempfile.mkdtemp(prefix="stream_floor_")
-drop = os.path.join(scratch, "drop")
+_STATE = "org.apache.spark.sql.execution.streaming.state."
+PROVIDERS = {
+    "hdfs": _STATE + "HDFSBackedStateStoreProvider",
+    "rocksdb": _STATE + "RocksDBStateStoreProvider",
+}
 
 
-def run_variant(label: str, provider: str | None) -> dict:
-    if provider:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", provider
+def floor_drain(spark, drop, schema, provider, log, width=None):
+    """A variant: one 1-file-per-trigger drain of the bench's hourly
+    rollup into a noop sink under state-store ``provider``; appends
+    (micro-batch count, run id) of every drain to ``log``."""
+
+    def drain():
+        ids = []
+
+        def sink(batch_df, batch_id):
+            ab.noop(batch_df)
+            ids.append(batch_id)
+
+        pipeline.run_stream(
+            spark,
+            bench.hourly_event_agg(spark, drop, schema, 1),
+            sink,
+            width=width,
+            output_mode="update",
         )
-    else:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    schema = spark.read.parquet(drop).schema
-    agg = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(drop)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,6)"))
-            .cast("double")
-            .alias("total_value"),
-        )
+        log.append((len(ids), str(pipeline.LAST_PROGRESS["runId"])))
+
+    return ab.with_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": provider}, drain
     )
-    t0 = time.perf_counter()
-    q = (
-        agg.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda df, _i: df.write.mode("overwrite").format("noop").save()
-        )
-        .option("checkpointLocation", os.path.join(scratch, f"ckpt_{label}"))
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        progress = [json.loads(p.json) for p in q.recentProgress]
-    finally:
-        q.stop()
-    wall = time.perf_counter() - t0
-    rows = sum(p.get("numInputRows", 0) for p in progress)
+
+
+class _Progress(StreamingQueryListener):
+    """Every progress event, and the run ids that have terminated."""
+
+    def __init__(self):
+        self.events: list[dict] = []
+        self.ended: set[str] = set()
+        self.lock = threading.Lock()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        with self.lock:
+            self.events.append(json.loads(event.progress.json))
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        with self.lock:
+            self.ended.add(str(event.runId))
+
+
+def durations(progress: list[dict]) -> dict[str, float]:
+    """Median seconds per durationMs component (plus the state-store
+    commit) over the batches that read input."""
     comp: dict[str, list[float]] = {}
     for p in progress:
         if p.get("numInputRows", 0) == 0:
@@ -96,37 +110,49 @@ def run_variant(label: str, provider: str | None) -> dict:
             comp.setdefault("state.commit", []).append(
                 so.get("commitTimeMs", 0) / 1000.0
             )
-            comp.setdefault("state.rowsUpdated", []).append(
-                so.get("numRowsUpdated", 0)
-            )
-    med = {k: round(statistics.median(v), 3) for k, v in comp.items()}
-    n_batches = sum(1 for p in progress if p.get("numInputRows", 0) > 0)
-    out = {
-        "label": label,
-        "wall_sec": round(wall, 2),
-        "batches": n_batches,
-        "rows_per_sec": round(rows / wall),
-        "per_batch_sec": round(wall / max(1, n_batches), 3),
-        "median_durations_sec": med,
-    }
-    print(json.dumps(out, indent=2), flush=True)
-    return out
+    return {k: round(ab.stats(v)[1], 3) for k, v in comp.items()}
 
 
-try:
-    events = load(spark, sf_dir, "events")
-    events.repartition(N_FILES).write.mode("overwrite").parquet(drop)
-    # warm the noop sink + codegen once
-    spark.read.parquet(drop).limit(10).write.mode("overwrite").format(
-        "noop"
-    ).save()
-    results = [
-        run_variant("hdfs_default", None),
-        run_variant("rocksdb", ROCKSDB),
-        # repeat the default to bracket drift
-        run_variant("hdfs_default_rep2", None),
-    ]
-finally:
-    spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    shutil.rmtree(scratch, ignore_errors=True)
-print("loadavg at end:", [round(x, 2) for x in os.getloadavg()])
+def main():
+    args = ab.parser(__doc__, reps=2).parse_args()
+    spark = get_spark("stream-floor-decomp")
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    scratch = tempfile.mkdtemp(prefix="stream_floor_")
+    try:
+        drop, schema, n_rows = bench.stage_drop(spark, args.sf_dir, scratch, N_FILES)
+        logs: dict[str, list] = {t: [] for t in PROVIDERS}
+        walls = ab.run(spark, lambda: {
+            t: floor_drain(spark, drop, schema, p, logs[t])
+            for t, p in PROVIDERS.items()
+        }, reps=args.reps)
+        deadline = time.monotonic() + 30
+        want = {run_id for log in logs.values() for _, run_id in log}
+        while not want <= listener.ended:
+            if time.monotonic() > deadline:
+                raise RuntimeError(
+                    f"{len(want - listener.ended)} of {len(want)} streams "
+                    "reported no termination within 30 s; their progress "
+                    "events are incomplete"
+                )
+            time.sleep(0.2)
+        for tag, log in logs.items():
+            ids = {run_id for _, run_id in log}
+            progress = [e for e in listener.events if e.get("runId") in ids]
+            n_batches = sum(1 for p in progress if p.get("numInputRows", 0) > 0)
+            wall = ab.stats(walls[tag])[1]
+            print(json.dumps({
+                "label": tag,
+                "median_wall_sec": wall,
+                "batches_per_run": n_batches / len(ids),
+                "rows_per_sec": round(n_rows / wall),
+                "per_batch_sec": round(wall * len(ids) / max(1, n_batches), 3),
+                "median_durations_sec": durations(progress),
+            }, indent=2), flush=True)
+    finally:
+        spark.streams.removeListener(listener)
+        shutil.rmtree(scratch, ignore_errors=True)
+
+
+if __name__ == "__main__":
+    main()

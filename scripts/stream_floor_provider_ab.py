@@ -10,120 +10,54 @@ more, not less. This probe answers it empirically: the exact
 bench_streaming floor pipeline (16 drop files, 1/trigger, watermark +
 tumbling window + count/sum, update mode, foreachBatch noop), run
 alternately under the HDFS and RocksDB providers in one session
-(provider is read per-query at stream start), reps interleaved.
+(provider is read per-query at stream start), reps rotated.
 
-Usage: python scripts/stream_floor_provider_ab.py [--reps N] [--parts P]
+Usage: python scripts/stream_floor_provider_ab.py [--reps N] [--parts P] [--files F]
 """
 
 from __future__ import annotations
 
-import argparse
-import os
 import shutil
 import sys
 import tempfile
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import functions as F
-
+import bench
 from etl_mudah_spark.session import get_spark
-from etl_mudah_spark.tables import load
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-ROCKSDB = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-HDFS = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "HDFSBackedStateStoreProvider"
-)
+from scripts import ab
+from scripts.stream_floor_decomp import PROVIDERS, floor_drain
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=3)
+    ap = ab.parser(__doc__, reps=3)
     ap.add_argument("--parts", type=int, default=None,
-                    help="override spark.sql.shuffle.partitions for the "
-                    "stream (default: leave the session's 32)")
+                    help="state width of the stream (default: the "
+                    "session's shuffle width)")
     ap.add_argument("--files", type=int, default=16)
     args = ap.parse_args()
 
     spark = get_spark()
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
-
+    spark.sparkContext.setLogLevel("ERROR")
     scratch = tempfile.mkdtemp(prefix="floor_provider_ab_")
-    drop = os.path.join(scratch, "drop")
-    events = load(spark, SF_DIR, "events")
-    n_rows = events.count()
-    events.repartition(args.files).write.mode("overwrite").parquet(drop)
-    schema = spark.read.parquet(drop).schema
-
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    if args.parts:
-        spark.conf.set("spark.sql.shuffle.partitions", str(args.parts))
-
-    def one_run(provider: str, rep: int) -> tuple[float, int]:
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass", provider
-        )
-        batches: list[int] = []
-
-        def sink(batch_df, batch_id: int) -> None:
-            batch_df.write.mode("overwrite").format("noop").save()
-            batches.append(batch_id)
-
-        agg = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(drop)
-            .withWatermark("ts", "10 minutes")
-            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-            .agg(
-                F.count("*").alias("cnt"),
-                F.sum(F.col("value").cast("decimal(18,6)"))
-                .cast("double")
-                .alias("total_value"),
-            )
-        )
-        t0 = time.perf_counter()
-        q = agg.writeStream.outputMode("update").foreachBatch(sink).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        return time.perf_counter() - t0, len(batches)
-
-    tags = {"hdfs": HDFS, "rocksdb": ROCKSDB}
-    walls: dict[str, list[float]] = {t: [] for t in tags}
     try:
-        order = list(tags)
-        for rep in range(args.reps):
-            rot = order[rep % 2:] + order[: rep % 2]
-            for tag in rot:
-                wall, nb = one_run(tags[tag], rep)
-                walls[tag].append(wall)
-                print(
-                    f"  {tag} rep{rep}: {wall:.2f}s wall, {nb} batches, "
-                    f"{round(n_rows / wall)} rows/s, "
-                    f"{wall / max(1, nb):.3f} s/batch",
-                    flush=True,
-                )
+        drop, schema, n_rows = bench.stage_drop(spark, args.sf_dir, scratch, args.files)
+        logs: dict[str, list] = {t: [] for t in PROVIDERS}
+        walls = ab.run(spark, lambda: {
+            t: floor_drain(spark, drop, schema, p, logs[t], width=args.parts)
+            for t, p in PROVIDERS.items()
+        }, reps=args.reps)
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
         shutil.rmtree(scratch, ignore_errors=True)
 
+    width = args.parts or spark.conf.get("spark.sql.shuffle.partitions")
     for tag, ts in walls.items():
-        s = sorted(ts)
+        med = ab.stats(ts)[1]
+        nb = ab.stats(n for n, _ in logs[tag])[1]
         print(
-            f"FLOOR {tag} (parts={args.parts or prev_parts}): "
-            f"min {s[0]:.2f} med {s[len(s) // 2]:.2f} wall; rows/s at med "
-            f"{round(n_rows / s[len(s) // 2])}; all {[round(t, 2) for t in ts]}"
+            f"FLOOR {tag} (parts={width}): rows/s at med {round(n_rows / med)}; "
+            f"{med / max(1, nb):.3f} s/batch over {nb} batches"
         )
 
 

@@ -4,27 +4,23 @@ vs tf + wgt boundaries (B). wgt (tf x idf) feeds three consumers
 re-runs the dfreq aggregation + idf join. A second materialize-once on
 wgt would make those one pass.
 
-    python scripts/tfidf_wgt_ab_r15.py [factor] [n_pairs]
+    python scripts/tfidf_wgt_ab_r15.py [--reps N] [--sf-dir DIR] [--factor F]
 """
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
-import bench
 from etl_mudah_spark.operators import dedup as dd
 from etl_mudah_spark.operators.ckpt import materialize_once
 from etl_mudah_spark.operators.dedup import word_ngrams
 from etl_mudah_spark.session import get_spark
 from etl_mudah_spark.tables import load
+from scripts import ab
 
 PARAMS = dict(term_n=2, threshold=0.5, min_df=2, max_df=60)
 
@@ -81,48 +77,19 @@ def tfidf_wgt_ckpt(df, id_col="doc_id", text_col="text", term_n=2,
 
 
 def main():
-    factor = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    n_pairs = int(sys.argv[2]) if len(sys.argv) > 2 else 6
+    args = ab.parser(__doc__, reps=6, factor=10).parse_args()
     spark = get_spark("tfidf_wgt_ab_r15")
     spark.sparkContext.setLogLevel("WARN")
-    sf_dir = "/root/testdata/sf0.1"
-    if factor > 1:
-        scratch = tempfile.mkdtemp(prefix="tfidf_ab_")
-        sf_dir, _ = bench.stage_scaled(
-            spark, sf_dir, scratch, factor=factor, tables=["documents"]
-        )
-    docs = load(spark, sf_dir, "documents")
-
-    def build():
-        return {
+    docs = load(spark, ab.staged(spark, args, ["documents"]), "documents")
+    ab.run(
+        spark,
+        lambda: {
             "A_tf_ckpt": dd.tfidf_cosine_pairs(docs, **PARAMS),
             "B_tf_wgt_ckpt": tfidf_wgt_ckpt(docs, **PARAMS),
-        }
-
-    ph = build()
-    chk = lambda q: q.selectExpr(
-        "count(*) c", "sum(hash(doc_a, doc_b, cast(round(cosine,6) as string))) h"
-    ).first()
-    ca, cb = chk(ph["A_tf_ckpt"]), chk(ph["B_tf_wgt_ckpt"])
-    assert (ca.c, ca.h) == (cb.c, cb.h), f"mismatch {ca} vs {cb}"
-    print(f"checksum gate OK ({ca.c} pairs)")
-    res = {"A_tf_ckpt": [], "B_tf_wgt_ckpt": []}
-    for i in range(n_pairs):
-        names = list(res) if i % 2 == 0 else list(res)[::-1]
-        for n in names:
-            p = build()
-            spark.sparkContext.setJobDescription(f"tfidf {n} pair{i}")
-            t0 = time.perf_counter()
-            p[n].write.mode("overwrite").format("noop").save()
-            res[n].append(round(time.perf_counter() - t0, 2))
-        print(f"pair {i}: load {os.getloadavg()[0]:.1f} "
-              + " ".join(f"{n}={res[n][-1]}" for n in res))
-    for n, r in res.items():
-        s = sorted(r)
-        print(f"{n:14s} min {s[0]:6.2f} med {statistics.median(s):6.2f} "
-              f"max {s[-1]:6.2f}  {r}")
-    wins = sum(1 for a, b in zip(res["A_tf_ckpt"], res["B_tf_wgt_ckpt"]) if b < a)
-    print(f"B wins {wins}/{n_pairs} pairs")
+        },
+        reps=args.reps,
+        check=["doc_a", "doc_b", "cast(round(cosine,6) as string)"],
+    )
 
 
 if __name__ == "__main__":

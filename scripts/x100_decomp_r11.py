@@ -1,67 +1,41 @@
 """Round-11 continuation of the x100 pure-scan decomposition
 (VERDICT r10 item 3): the factorized pricing_summary runs ~2.0 s at
 x100 vs the 0.78 s groupBy(flag,status).count() floor — where does the
-other ~1.2 s go? Candidate attributions, each measured median-of-3 on
-the same staged replica:
+other ~1.2 s go? Candidate attributions, each timed on the same staged
+replica:
 
   scan_count         3-col scan + 2-key count           (r10 floor)
   decode_doubles     7-col scan, plain double sums      (decode cost)
   factorized         the registered plan                (baseline)
   fact_packed_dt     (d,t) packed into ONE int key      (hash-map probe cost)
   fact_offheap       factorized + off-heap column vectors (decode path)
-  fact_nocodegenfb   factorized + codegen fallback off  (sanity)
 
 plus big_orders' remaining gap (4.61 s vs DuckDB 1.44):
 
   bo_current         dsum2(l_quantity) per order (registered)
   bo_longticks       sum(bigint ticks) per order, /100 at the end
   bo_agg_only        the groupBy+HAVING alone (no join/sort)
-  bo_join_only       joins from a precomputed q (sizes the join side)
 
-Run SOLO; loadavg printed. Results -> BASELINE.md round-11 notes.
+Run SOLO. Results -> BASELINE.md round-11 notes.
+
+    python scripts/x100_decomp_r11.py [--reps N] [--sf-dir DIR] [--factor F]
 """
 import os
-import shutil
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402
-from etl_mudah_spark.session import get_spark, default_parallelism  # noqa: E402
-from etl_mudah_spark.tables import load  # noqa: E402
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
+import bench
+from etl_mudah_spark.session import default_parallelism, get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
 
-FACTOR = int(os.environ.get("DECOMP_FACTOR", "100"))
-REPS = 3
 CUTOFF = "1999-09-02"
-
-print("loadavg at start:", [round(x, 2) for x in os.getloadavg()])
-spark = get_spark("x100-decomp-r11")
-sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-scratch = tempfile.mkdtemp(prefix="decomp_r11_")
-
-
-def run(label, mk):
-    """``mk`` must BUILD the DataFrame (or result) fresh per rep:
-    re-collecting one DataFrame object reuses its registered shuffle
-    map outputs (skipped stages), which fakes sub-100ms 'queries'."""
-    ts = []
-    for _ in range(REPS):
-        t0 = time.time()
-        r = mk()
-        if hasattr(r, "collect"):
-            r.collect()
-        ts.append(time.time() - t0)
-    med = statistics.median(ts)
-    print(f"{label:22s} {med:7.2f} s  (reps: {[round(x,2) for x in ts]})",
-          flush=True)
-    return med
+X100_LAYOUT = dict(
+    target_bytes=64 * 1024 * 1024, cap=64, row_group_bytes=16 * 1024 * 1024
+)
 
 
 def factorized(li, key_cols, d2, t2):
@@ -88,35 +62,15 @@ def factorized(li, key_cols, d2, t2):
     )
 
 
-try:
-    sc_dir, sc_bytes = bench.stage_scaled(
-        spark, sf_dir, scratch, factor=FACTOR,
-        tables=["lineitem", "orders", "customer"],
-        target_bytes=64 * 1024 * 1024, cap=64,
-        row_group_bytes=16 * 1024 * 1024,
-    )
-    print(f"staged x{FACTOR}: {sc_bytes/1e9:.2f} GB at {sc_dir}")
-    li = load(spark, sc_dir, "lineitem")
-    base = li.where(F.col("l_shipdate") <= CUTOFF).groupBy(
+def build_phases(spark, sc_dir):
+    def li():
+        return load(spark, sc_dir, "lineitem")
+
+    base = li().where(F.col("l_shipdate") <= CUTOFF).groupBy(
         "l_returnflag", "l_linestatus"
     )
-    base.count().collect()  # warm
-
-    def mk_base():
-        return load(spark, sc_dir, "lineitem").where(
-            F.col("l_shipdate") <= CUTOFF
-        ).groupBy("l_returnflag", "l_linestatus")
-
-    run("scan_count", lambda: mk_base().count())
-    run("decode_doubles", lambda: mk_base().agg(
-        F.sum("l_quantity"), F.sum("l_extendedprice"), F.sum("l_discount"),
-        F.sum("l_tax"), F.count("*")))
-
     d2 = F.col("l_discount").cast("decimal(4,2)")
     t2 = F.col("l_tax").cast("decimal(4,2)")
-    run("factorized", lambda: factorized(
-        load(spark, sc_dir, "lineitem"), ["l_discount", "l_tax"], d2, t2))
-
     # packed single-int (d,t) key: round(d*100)*256 + round(t*100) —
     # injective for 2-dp values in [0, 2.55]; derive d/t back exactly.
     dt = (F.round(F.col("l_discount") * 100).cast("int") * 256
@@ -125,25 +79,11 @@ try:
            / F.lit(100).cast("decimal(4,0)")).cast("decimal(4,2)")
     t2p = ((F.col("dt") % 256).cast("decimal(4,0)")
            / F.lit(100).cast("decimal(4,0)")).cast("decimal(4,2)")
-    run("fact_packed_dt", lambda: factorized(
-        load(spark, sc_dir, "lineitem").withColumn("dt", dt), ["dt"],
-        d2p, t2p))
-
-    spark.conf.set("spark.sql.columnVector.offheap.enabled", "true")
-    run("fact_offheap", lambda: factorized(
-        load(spark, sc_dir, "lineitem"), ["l_discount", "l_tax"], d2, t2))
-    spark.conf.set("spark.sql.columnVector.offheap.enabled", "false")
-
-    ddb = bench.run_duckdb(sc_dir, ["pricing_summary"], default_parallelism())
-    print(f"duckdb pricing_summary {ddb['pricing_summary']:7.2f} s")
-
-    # ---- big_orders ----
     orders = load(spark, sc_dir, "orders")
     cust = load(spark, sc_dir, "customer")
 
     def bo(qty_sum_expr, post=None):
-        q = (load(spark, sc_dir, "lineitem").groupBy("l_orderkey")
-             .agg(qty_sum_expr.alias("qty_sum")))
+        q = li().groupBy("l_orderkey").agg(qty_sum_expr.alias("qty_sum"))
         q = post(q) if post else q.where(F.col("qty_sum") > 250)
         return (q.join(orders, q.l_orderkey == orders.o_orderkey)
                 .join(cust, orders.o_custkey == cust.c_custkey)
@@ -152,23 +92,41 @@ try:
                 .orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
                 .limit(20))
 
-    run("bo_current", lambda: bo(
-        F.sum(F.col("l_quantity").cast("decimal(8,2)")).cast("double")))
-    run("bo_longticks", lambda: bo(
-        F.sum(F.round(F.col("l_quantity") * 100).cast("long")),
-        post=lambda q: q.where(F.col("qty_sum") > 25000).withColumn(
-            "qty_sum", (F.col("qty_sum") / 100).cast("double"))))
+    return {
+        "scan_count": base.count(),
+        "decode_doubles": base.agg(
+            F.sum("l_quantity"), F.sum("l_extendedprice"), F.sum("l_discount"),
+            F.sum("l_tax"), F.count("*")),
+        "factorized": factorized(li(), ["l_discount", "l_tax"], d2, t2),
+        "fact_packed_dt": factorized(li().withColumn("dt", dt), ["dt"], d2p, t2p),
+        "fact_offheap": ab.with_conf(
+            spark, {"spark.sql.columnVector.offheap.enabled": "true"},
+            factorized(li(), ["l_discount", "l_tax"], d2, t2)),
+        "bo_current": bo(
+            F.sum(F.col("l_quantity").cast("decimal(8,2)")).cast("double")),
+        "bo_longticks": bo(
+            F.sum(F.round(F.col("l_quantity") * 100).cast("long")),
+            post=lambda q: q.where(F.col("qty_sum") > 25000).withColumn(
+                "qty_sum", (F.col("qty_sum") / 100).cast("double"))),
+        "bo_agg_only": li().groupBy("l_orderkey")
+        .agg(F.sum(F.col("l_quantity").cast("decimal(8,2)"))
+             .cast("double").alias("qty_sum"))
+        .where(F.col("qty_sum") > 250),
+    }
 
-    def agg_only():
-        (load(spark, sc_dir, "lineitem").groupBy("l_orderkey")
-         .agg(F.sum(F.col("l_quantity").cast("decimal(8,2)"))
-              .cast("double").alias("qty_sum"))
-         .where(F.col("qty_sum") > 250)
-         .write.mode("overwrite").format("noop").save())
 
-    run("bo_agg_only", agg_only)
-    ddb2 = bench.run_duckdb(sc_dir, ["big_orders"], default_parallelism())
-    print(f"duckdb big_orders      {ddb2['big_orders']:7.2f} s")
-finally:
-    shutil.rmtree(scratch, ignore_errors=True)
-print("loadavg at end:", [round(x, 2) for x in os.getloadavg()])
+def main():
+    args = ab.parser(__doc__, reps=3, factor=100).parse_args()
+    spark = get_spark("x100-decomp-r11")
+    sc_dir = ab.staged(
+        spark, args, ["lineitem", "orders", "customer"], **X100_LAYOUT
+    )
+    ab.run(spark, lambda: build_phases(spark, sc_dir), reps=args.reps)
+    ddb = bench.run_duckdb(
+        sc_dir, ["pricing_summary", "big_orders"], default_parallelism()
+    )
+    print(f"duckdb: {ddb}")
+
+
+if __name__ == "__main__":
+    main()

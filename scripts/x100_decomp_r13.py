@@ -3,11 +3,13 @@
 big_orders_preagg (item 3, "finish to <=2x in-series"):
   a. read the ACTUAL x100 plan of the preagg query — are both joins
      broadcast after AQE, or does the orders side go sort-merge?
-  b. baseline timing (rollup prebuilt untimed, as the bench runs it);
+  b. baseline timing (the registered rollup, built untimed, as the
+     bench runs it);
   c. lever: rollup written SORTED by qty_sum — parquet row-group
      min/max stats turn the HAVING filter into a near-total row-group
      skip (zone maps; the sort is free at refresh time because IVM
-     rewrites the rollup per version anyway);
+     rewrites the rollup per version anyway; adopted since, so the
+     registered rollup is already sorted);
   d. lever: orders pre-projected to the 4 consumed columns before the
      join (tests whether scan-side pruning already does this);
   e. DuckDB-from-raw twin for the ratio.
@@ -19,46 +21,30 @@ from-scratch rebuild for the refresh-vs-rebuild note.
 doc_shard_pack_global x100 (item 6): first read of the shuffle-bound
 doc-tier series + its DuckDB twin.
 
-Run SOLO; results go to BASELINE.md round-13 notes. Methodology: fresh
-DataFrame per rep (never re-collect the same object — shuffle reuse),
-median-of-3.
+Run SOLO; results go to BASELINE.md round-13 notes.
+
+    python scripts/x100_decomp_r13.py [--reps N] [--sf-dir DIR] [--factor F]
 """
 import os
 import shutil
-import statistics
 import sys
 import tempfile
-import time
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
-os.chdir(_ROOT)
 
-import bench  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-from etl_mudah_spark.session import get_spark  # noqa: E402
-from etl_mudah_spark.tables import load  # noqa: E402
-
-print("loadavg:", [round(x, 2) for x in os.getloadavg()], flush=True)
-spark = get_spark("x100-r13")
-scratch = tempfile.mkdtemp(prefix="x100r13_")
-spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+import bench
+from etl_mudah_spark.plans import registry
+from etl_mudah_spark.plans.starjoins import _q18_rollup
+from etl_mudah_spark.session import default_parallelism, get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
+from scripts.x100_decomp_r11 import X100_LAYOUT
 
 
-def timed(label, fn, reps=3):
-    ts = []
-    out = None
-    for _ in range(reps):
-        t0 = time.perf_counter()
-        out = fn()
-        ts.append(round(time.perf_counter() - t0, 3))
-    print(f"{label:46s} med {statistics.median(ts):7.3f} s  {ts}  -> {out}",
-          flush=True)
-    return statistics.median(ts)
-
-
-def q18_from_rollup(rollup_path, orders, cust):
+def q18_from_rollup(spark, rollup_path, orders, cust):
     q = spark.read.parquet(rollup_path).where(F.col("qty_sum") > 250)
     return (
         q.join(orders, q.l_orderkey == orders.o_orderkey)
@@ -70,87 +56,81 @@ def q18_from_rollup(rollup_path, orders, cust):
     )
 
 
-try:
-    sc_dir, sc_bytes = bench.stage_scaled(
-        spark, "/root/testdata/sf0.1", scratch, factor=100,
-        tables=["customer", "orders", "lineitem", "documents"],
-        target_bytes=64 * 1024 * 1024, cap=64,
-        row_group_bytes=16 * 1024 * 1024,
+def main():
+    args = ab.parser(__doc__, reps=3, factor=100).parse_args()
+    os.chdir(_ROOT)
+    spark = get_spark("x100-r13")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    sc_dir = ab.staged(
+        spark, args, ["customer", "orders", "lineitem", "documents"],
+        **X100_LAYOUT,
     )
-    print(f"staged x100: {sc_bytes/1e9:.2f} GB", flush=True)
+    scratch = tempfile.mkdtemp(prefix="x100r13_")
+    try:
+        # ---- rollup variants (built untimed) ----
+        rollup_df, rollup = _q18_rollup(spark, sc_dir)
+        n_surv = rollup_df.where(F.col("qty_sum") > 250).count()
+        print(f"rollup rows {rollup_df.count():,}; survivors(>250) {n_surv:,}",
+              flush=True)
+        sorted_rollup = f"{scratch}/rollup_sorted"
+        (
+            rollup_df.repartitionByRange(16, "qty_sum")
+            .sortWithinPartitions("qty_sum")
+            .write.parquet(sorted_rollup)
+        )
 
-    # ---- rollup variants (built untimed) ----
-    rollup = bench._prebuild_preagg(spark, sc_dir)
-    n_rollup = spark.read.parquet(rollup).count()
-    n_surv = (
-        spark.read.parquet(rollup).where(F.col("qty_sum") > 250).count()
-    )
-    print(f"rollup rows {n_rollup:,}; survivors(>250) {n_surv:,}", flush=True)
+        def orders():
+            return load(spark, sc_dir, "orders")
 
-    sorted_rollup = f"{scratch}/rollup_sorted"
-    (
-        spark.read.parquet(rollup)
-        .repartitionByRange(16, "qty_sum")
-        .sortWithinPartitions("qty_sum")
-        .write.parquet(sorted_rollup)
-    )
+        def cust():
+            return load(spark, sc_dir, "customer")
 
-    orders = load(spark, sc_dir, "orders")
-    cust = load(spark, sc_dir, "customer")
-    orders_proj = orders.select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
+        # ---- (a) the actual plan, post-AQE ----
+        df = q18_from_rollup(spark, rollup, orders(), cust())
+        ab.noop(df)  # materialize so AQE finalizes
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        print("x100 preagg plan join/exchange lines:", flush=True)
+        for ln in plan.splitlines():
+            if "Join" in ln or "Exchange" in ln:
+                print("   ", ln.strip()[:110], flush=True)
 
-    # ---- (a) the actual plan, post-AQE ----
-    df = q18_from_rollup(rollup, orders, cust)
-    df.collect()  # materialize so AQE finalizes
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    joins = [ln.strip()[:110] for ln in plan.splitlines()
-             if "Join" in ln or "Exchange" in ln]
-    print("x100 preagg plan join/exchange lines:", flush=True)
-    for ln in joins:
-        print("   ", ln, flush=True)
+        # ---- (b,c,d) + doc_shard_pack_global at x100 ----
+        pack_fn = registry.REGISTRY["doc_shard_pack_global"].spark_fn
+        ab.run(spark, lambda: {
+            "preagg_baseline": q18_from_rollup(spark, rollup, orders(), cust()),
+            "preagg_sorted_rollup": q18_from_rollup(
+                spark, sorted_rollup, orders(), cust()),
+            "preagg_sorted_orders_projected": q18_from_rollup(
+                spark, sorted_rollup,
+                orders().select(
+                    "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
+                cust()),
+            # the registered plan: build timed, as the bench times it
+            "doc_shard_pack_global": lambda: pack_fn(spark, sc_dir),
+        }, reps=args.reps)
 
-    # ---- (b,c,d) timings, fresh plans per rep ----
-    timed("preagg baseline",
-          lambda: q18_from_rollup(rollup, load(spark, sc_dir, "orders"),
-                                  load(spark, sc_dir, "customer")).collect()
-          and None)
-    timed("preagg sorted-rollup (zone-map skip)",
-          lambda: q18_from_rollup(sorted_rollup,
-                                  load(spark, sc_dir, "orders"),
-                                  load(spark, sc_dir, "customer")).collect()
-          and None)
-    timed("preagg sorted + orders pre-projected",
-          lambda: q18_from_rollup(
-              sorted_rollup,
-              load(spark, sc_dir, "orders").select(
-                  "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"),
-              load(spark, sc_dir, "customer")).collect() and None)
+        # ---- (e) DuckDB twins ----
+        ddb = bench.run_duckdb(
+            sc_dir, ["big_orders", "big_orders_preagg", "doc_shard_pack_global"],
+            default_parallelism(),
+        )
+        print("duckdb-from-raw:", ddb, flush=True)
 
-    # ---- (e) DuckDB twins ----
-    ddb = bench.run_duckdb(
-        sc_dir, ["big_orders", "big_orders_preagg", "doc_shard_pack_global"],
-        32,
-    )
-    print("duckdb-from-raw:", ddb, flush=True)
+        # ---- IVM refresh (bench fn, min-of-2 + warm) vs full rebuild ----
+        ab.run(spark, lambda: {
+            "q18_ivm_refresh": lambda: bench.bench_q18_ivm_refresh(spark, sc_dir),
+            "q18_rollup_full_rebuild_write": lambda: (
+                load(spark, sc_dir, "lineitem")
+                .groupBy("l_orderkey")
+                .agg(F.count("*").alias("cnt"),
+                     F.sum(F.coalesce(F.col("l_quantity"), F.lit(0)))
+                     .alias("qty_sum"))
+                .write.mode("overwrite").parquet(f"{scratch}/rebuild")
+            ),
+        }, reps=1)
+    finally:
+        shutil.rmtree(scratch, ignore_errors=True)
 
-    # ---- IVM refresh + rebuild ----
-    t = timed("q18 ivm refresh (bench fn, min-of-2+warm)",
-              lambda: bench.bench_q18_ivm_refresh(spark, sc_dir), reps=1)
-    timed("q18 rollup full rebuild (write)",
-          lambda: load(spark, sc_dir, "lineitem")
-          .groupBy("l_orderkey")
-          .agg(F.count("*").alias("cnt"),
-               F.sum(F.coalesce(F.col("l_quantity"), F.lit(0))).alias("qty_sum"))
-          .write.mode("overwrite").parquet(f"{scratch}/rebuild")
-          or None)
 
-    # ---- doc_shard_pack_global at x100 ----
-    from etl_mudah_spark.plans import registry
-    fn = registry.REGISTRY["doc_shard_pack_global"].spark_fn
-    timed("doc_shard_pack_global x100",
-          lambda: fn(spark, sc_dir).collect() and None)
-finally:
-    shutil.rmtree(scratch, ignore_errors=True)
-    print("loadavg end:", [round(x, 2) for x in os.getloadavg()], flush=True)
+if __name__ == "__main__":
+    main()

@@ -1,28 +1,26 @@
 """Round-14 (cont.) same-epoch A/B at the x100 data-proportional
-documents staging: doc_shard_pack_global OLD (hex _ok + size(split))
-vs TOK (hex _ok + regexp_count token count) vs NEW (binary _ok +
-regexp_count) — attributes the two levers separately — plus a
-projection-only micro A/B of the token-count forms, and a checksum
-equality gate between OLD and NEW results.
+documents staging: doc_shard_pack_global OLD (hex _ok + size(split),
+inlined) vs TOK (hex _ok + regexp_count token count) vs NEW (the
+registered plan, which kept OLD's forms after round 14 rejected the
+binary _ok and regexp_count levers), plus a projection-only micro A/B
+of the token-count forms, all checksum-gated first.
 
 Staging replicates bench.py's x100 documents point exactly (factor
-min(2000, max(100, round(100*li/doc))), 64 MB files, 16 MB row groups,
-doc_text_mode="suffix"). Stage dir persists under --scratch for reuse.
+min(2000, max(F, round(F*li/doc))), 64 MB files, 16 MB row groups,
+doc_text_mode="suffix"). Pass --scratch to keep the staging for reuse.
 
-Usage: python scripts/x100_pack_ab_r14.py [--reps N] [--scratch DIR]
+Usage: python scripts/x100_pack_ab_r14.py [--reps N] [--factor F] [--scratch DIR] [--skip-micro]
 """
 
 from __future__ import annotations
 
-import argparse
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 import etl_mudah_spark.plans  # noqa: F401
@@ -32,177 +30,100 @@ from etl_mudah_spark.plans.llmprep import SHARD_TOKENS
 from etl_mudah_spark.plans.registry import REGISTRY
 from etl_mudah_spark.session import get_spark
 from etl_mudah_spark.tables import load
+from scripts import ab
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+def regexp_count() -> Column:
+    """The rejected token count, inlined (tx.token_count stayed
+    size(split) after the rejection, so routing through it would
+    vacuously time the current form — ADVICE r14)."""
+    return F.regexp_count(F.trim(F.col("text")), F.lit(tx.WHITESPACE_RE)) + 1
+
+
+def _pack_global_hex(spark, sc_dir: str, n_tok: Column) -> DataFrame:
+    """The pre-change registered plan, inlined with the token count
+    ``n_tok``: 32-char hex _ok sort key, same lazy-checkpoint
+    boundary."""
+    docs = load(spark, sc_dir, "documents").select(
+        "doc_id", "source", n_tok.cast("bigint").alias("n_tok")
+    )
+    ok = F.md5(F.col("doc_id").cast("string"))
+    cum = smp.bucketed_running_sum(
+        docs.withColumn("_ok", ok).localCheckpoint(eager=False),
+        F.substring("_ok", 1, 2),
+        [F.col("_ok"), F.col("doc_id")],
+        F.col("n_tok"),
+        "cum",
+    )
+    return (
+        cum.withColumn(
+            "shard_id", F.floor((F.col("cum") - 1) / SHARD_TOKENS).cast("int")
+        )
+        .groupBy("shard_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum("n_tok").alias("shard_tokens"),
+            F.countDistinct("source").alias("n_sources"),
+            F.sum("doc_id").alias("sum_doc_id"),
+        )
+        .orderBy("shard_id")
+    )
 
 
 def pack_global_old(spark, sc_dir: str) -> DataFrame:
-    """The pre-change registered plan, inlined: 32-char hex _ok sort
-    key, size(split) token count, same lazy-checkpoint boundary."""
-    docs = load(spark, sc_dir, "documents").select(
-        "doc_id",
-        "source",
-        F.size(tx.words("text")).cast("bigint").alias("n_tok"),
-    )
-    ok = F.md5(F.col("doc_id").cast("string"))
-    cum = smp.bucketed_running_sum(
-        docs.withColumn("_ok", ok).localCheckpoint(eager=False),
-        F.substring("_ok", 1, 2),
-        [F.col("_ok"), F.col("doc_id")],
-        F.col("n_tok"),
-        "cum",
-    )
-    return (
-        cum.withColumn(
-            "shard_id", F.floor((F.col("cum") - 1) / SHARD_TOKENS).cast("int")
-        )
-        .groupBy("shard_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tok").alias("shard_tokens"),
-            F.countDistinct("source").alias("n_sources"),
-            F.sum("doc_id").alias("sum_doc_id"),
-        )
-        .orderBy("shard_id")
-    )
+    return _pack_global_hex(spark, sc_dir, F.size(tx.words("text")))
 
 
 def pack_global_tok(spark, sc_dir: str) -> DataFrame:
-    """Token-count lever only: the REJECTED regexp_count form, inlined
-    (tx.token_count stayed size(split) after the rejection, so routing
-    through it would vacuously time the current form — ADVICE r14),
-    hex _ok kept."""
-    docs = load(spark, sc_dir, "documents").select(
-        "doc_id",
-        "source",
-        (F.regexp_count(F.trim(F.col("text")), F.lit(tx.WHITESPACE_RE)) + 1)
-        .cast("bigint")
-        .alias("n_tok"),
-    )
-    ok = F.md5(F.col("doc_id").cast("string"))
-    cum = smp.bucketed_running_sum(
-        docs.withColumn("_ok", ok).localCheckpoint(eager=False),
-        F.substring("_ok", 1, 2),
-        [F.col("_ok"), F.col("doc_id")],
-        F.col("n_tok"),
-        "cum",
-    )
-    return (
-        cum.withColumn(
-            "shard_id", F.floor((F.col("cum") - 1) / SHARD_TOKENS).cast("int")
-        )
-        .groupBy("shard_id")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_tok").alias("shard_tokens"),
-            F.countDistinct("source").alias("n_sources"),
-            F.sum("doc_id").alias("sum_doc_id"),
-        )
-        .orderBy("shard_id")
-    )
-
-
-def noop(df: DataFrame) -> None:
-    df.write.format("noop").mode("overwrite").save()
+    """Token-count lever only: the rejected regexp_count form, hex _ok
+    kept."""
+    return _pack_global_hex(spark, sc_dir, regexp_count())
 
 
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--reps", type=int, default=4)
-    ap.add_argument("--scratch", default="/root/scratch_x100_docs")
+    ap = ab.parser(__doc__, reps=4, factor=100)
     ap.add_argument("--skip-micro", action="store_true")
     args = ap.parse_args()
-
     spark = get_spark()
-    sc = spark.sparkContext
-    sc.setLogLevel("ERROR")
+    spark.sparkContext.setLogLevel("ERROR")
 
-    sc_dir = os.path.join(args.scratch, "scaled")
-    if not os.path.isdir(os.path.join(sc_dir, "documents")):
-        from bench import stage_scaled
-
-        li_b = os.path.getsize(os.path.join(SF_DIR, "lineitem.parquet"))
-        doc_b = os.path.getsize(os.path.join(SF_DIR, "documents.parquet"))
-        doc_factor = min(2000, max(100, round(100 * li_b / doc_b)))
-        print(f"staging documents x{doc_factor} into {args.scratch} ...")
-        t0 = time.time()
-        os.makedirs(args.scratch, exist_ok=True)
-        stage_scaled(
-            spark,
-            SF_DIR,
-            args.scratch,
-            factor=doc_factor,
-            tables=["documents"],
-            target_bytes=64 * 1024 * 1024,
-            cap=64,
-            row_group_bytes=16 * 1024 * 1024,
-            doc_text_mode="suffix",
-        )
-        print(f"staged in {time.time() - t0:.1f}s")
-    else:
-        print(f"reusing staged docs at {sc_dir}")
-
-    # checksum equality gate: OLD and NEW must agree row for row
-    old_rows = pack_global_old(spark, sc_dir).limit(5).collect()
-    del old_rows  # warm-up: primes the plan/scan path before the full-collect gate below
-    a = [tuple(r) for r in pack_global_old(spark, sc_dir).collect()]
-    b = [tuple(r) for r in REGISTRY["doc_shard_pack_global"].spark_fn(spark, sc_dir).collect()]
-    c = [tuple(r) for r in pack_global_tok(spark, sc_dir).collect()]
-    assert a == b == c, (
-        f"RESULT MISMATCH old={len(a)} new={len(b)} tok={len(c)} "
-        f"first_diff={next(((x, y) for x, y in zip(a, b) if x != y), None)}"
+    li_b = os.path.getsize(os.path.join(args.sf_dir, "lineitem.parquet"))
+    doc_b = os.path.getsize(os.path.join(args.sf_dir, "documents.parquet"))
+    sc_dir = ab.staged(
+        spark,
+        args,
+        ["documents"],
+        factor=min(2000, max(args.factor, round(args.factor * li_b / doc_b))),
+        target_bytes=64 * 1024 * 1024,
+        cap=64,
+        row_group_bytes=16 * 1024 * 1024,
+        doc_text_mode="suffix",
     )
-    print(f"checksum gate OK: {len(a)} shards identical across variants")
 
     if not args.skip_micro:
-        docs = load(spark, sc_dir, "documents")
-        forms = {
-            "micro-size-split": docs.select(
-                F.size(F.split(F.trim("text"), tx.WHITESPACE_RE)).alias("n")
-            ),
-            # the rejected form, inlined (tx.token_count stayed
-            # size(split) after the rejection — ADVICE r14)
-            "micro-regexp-count": docs.select(
-                (F.regexp_count(F.trim(F.col("text")), F.lit(tx.WHITESPACE_RE)) + 1)
-                .alias("n")
-            ),
-        }
-        micro: dict[str, list[float]] = {k: [] for k in forms}
-        for rep in range(3):
-            for name, df in forms.items():
-                sc.setJobDescription(f"{name} rep{rep}")
-                t0 = time.time()
-                noop(df)
-                micro[name].append(time.time() - t0)
-        sc.setJobDescription(None)
-        for name, ts in micro.items():
-            print(f"{name}: {[round(t, 2) for t in ts]}")
 
-    variants = {
-        "old": lambda: pack_global_old(spark, sc_dir),
-        "tok": lambda: pack_global_tok(spark, sc_dir),
-        "new": lambda: REGISTRY["doc_shard_pack_global"].spark_fn(spark, sc_dir),
-    }
-    times: dict[str, list[float]] = {k: [] for k in variants}
-    order = list(variants)
-    for rep in range(args.reps):
-        # rotate the within-rep order so no variant systematically pays
-        # the round's cold cost (page cache, GC, executor churn)
-        rot = order[rep % len(order):] + order[: rep % len(order)]
-        for name in rot:
-            fn = variants[name]
-            sc.setJobDescription(f"pack_global {name} rep{rep}")
-            t0 = time.time()
-            noop(fn())
-            times[name].append(time.time() - t0)
-            print(f"  pack_global {name} rep{rep}: {times[name][-1]:.2f}s", flush=True)
-    sc.setJobDescription(None)
-    for name, ts in times.items():
-        s = sorted(ts)
-        print(
-            f"pack_global {name}: min {s[0]:.2f} med {s[len(s) // 2]:.2f} "
-            f"all {[round(t, 2) for t in ts]}"
-        )
+        def micro():
+            docs = load(spark, sc_dir, "documents")
+            return {
+                "micro-size-split": docs.select(
+                    F.size(F.split(F.trim("text"), tx.WHITESPACE_RE)).alias("n")
+                ),
+                "micro-regexp-count": docs.select(regexp_count().alias("n")),
+            }
+
+        ab.run(spark, micro, reps=3, check=["n"])
+
+    ab.run(
+        spark,
+        # plan builds timed, as the bench times the registered plan
+        lambda: {
+            "old": lambda: pack_global_old(spark, sc_dir),
+            "tok": lambda: pack_global_tok(spark, sc_dir),
+            "new": lambda: REGISTRY["doc_shard_pack_global"].spark_fn(spark, sc_dir),
+        },
+        reps=args.reps,
+        check=["shard_id", "n_docs", "shard_tokens", "n_sources", "sum_doc_id"],
+    )
 
 
 if __name__ == "__main__":

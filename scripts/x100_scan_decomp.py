@@ -7,7 +7,7 @@ per-row DECIMAL(18,6) casts + decimal sums in every dsum (DuckDB sums
 decimals as native int128) and vectorized-reader batch configuration.
 
 This script stages the x100 lineitem replica exactly as bench.py does
-(64 MB files, 16 MB row groups) and measures median-of-3 for:
+(64 MB files, 16 MB row groups) and times:
 
   scan_count      groupBy(flag, status).count()            — scan+agg floor
   double_sums     all 8 aggregates as plain double sums     — no decimal
@@ -17,33 +17,33 @@ This script stages the x100 lineitem replica exactly as bench.py does
   duckdb          the oracle twin (decimal lattice), 32 threads
 
 plus a filter-off variant of decimal_current to size the timestamp
-predicate. Run SOLO — loadavg is printed for attribution.
+predicate. Run SOLO.
+
+    python scripts/x100_scan_decomp.py [--reps N] [--sf-dir DIR] [--factor F]
 """
 import os
-import shutil
-import statistics
 import sys
-import tempfile
-import time
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, _ROOT)
-os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import bench  # noqa: E402
-from etl_mudah_spark.session import get_spark  # noqa: E402
-from etl_mudah_spark.tables import load  # noqa: E402
+import duckdb
+from pyspark.sql import functions as F
 
-from pyspark.sql import functions as F  # noqa: E402
+import bench
+from etl_mudah_spark.operators.manifest import manifest_resolve
+from etl_mudah_spark.session import default_parallelism, get_spark
+from etl_mudah_spark.tables import load
+from scripts import ab
+from scripts.x100_decomp_r11 import CUTOFF, X100_LAYOUT
 
-FACTOR = int(os.environ.get("DECOMP_FACTOR", "100"))
-REPS = 3
-CUTOFF = "1999-09-02"
-
-print("loadavg at start:", [round(x, 2) for x in os.getloadavg()])
-spark = get_spark("x100-decomp")
-sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-scratch = tempfile.mkdtemp(prefix="decomp_x100_")
+DUCKDB_DOUBLE_SUMS = """
+SELECT l_returnflag, l_linestatus, SUM(l_quantity), SUM(l_extendedprice),
+       SUM(l_extendedprice*(1-l_discount)),
+       SUM(l_extendedprice*(1-l_discount)*(1+l_tax)),
+       AVG(l_quantity), AVG(l_extendedprice), AVG(l_discount), COUNT(*)
+FROM lineitem WHERE l_shipdate <= TIMESTAMP '1999-09-02'
+GROUP BY l_returnflag, l_linestatus
+"""
 
 
 def agg_exprs(kind: str):
@@ -71,70 +71,44 @@ def agg_exprs(kind: str):
     ]
 
 
-def run(label, fn):
-    ts = []
-    for _ in range(REPS):
-        t0 = time.time()
-        fn()
-        ts.append(time.time() - t0)
-    med = statistics.median(ts)
-    print(f"{label:24s} {med:7.2f} s  (reps: {[round(x,2) for x in ts]})",
-          flush=True)
-    return med
-
-
-try:
-    sc_dir, sc_bytes = bench.stage_scaled(
-        spark, sf_dir, scratch, factor=FACTOR,
-        tables=["lineitem"], target_bytes=64 * 1024 * 1024, cap=64,
-        row_group_bytes=16 * 1024 * 1024,
-    )
-    print(f"staged x{FACTOR} lineitem: {sc_bytes/1e9:.2f} GB at {sc_dir}")
-
+def build_phases(spark, sc_dir, con):
     li = load(spark, sc_dir, "lineitem")
     base = li.where(F.col("l_shipdate") <= CUTOFF).groupBy(
         "l_returnflag", "l_linestatus"
     )
-    nofilter = li.groupBy("l_returnflag", "l_linestatus")
+    return {
+        "scan_count": base.count(),
+        "double_sums": base.agg(*agg_exprs("double")),
+        "long_sums": base.agg(*agg_exprs("long")),
+        "decimal_current": base.agg(*agg_exprs("decimal")),
+        "decimal_nofilter": li.groupBy("l_returnflag", "l_linestatus").agg(
+            *agg_exprs("decimal")
+        ),
+        "decimal_batch16k": ab.with_conf(
+            spark, {"spark.sql.parquet.columnarReaderBatchSize": "16384"},
+            base.agg(*agg_exprs("decimal")),
+        ),
+        "decimal_no2level": ab.with_conf(
+            spark, {"spark.sql.codegen.aggregate.map.twolevel.enabled": "false"},
+            base.agg(*agg_exprs("decimal")),
+        ),
+        "duckdb_double_sums": lambda: con.execute(DUCKDB_DOUBLE_SUMS).fetchall(),
+    }
 
-    # warm: footer caches + codegen
-    base.count().collect()
 
-    run("scan_count", lambda: base.count().collect())
-    run("double_sums", lambda: base.agg(*agg_exprs("double")).collect())
-    run("long_sums", lambda: base.agg(*agg_exprs("long")).collect())
-    run("decimal_current", lambda: base.agg(*agg_exprs("decimal")).collect())
-    run("decimal_nofilter",
-        lambda: nofilter.agg(*agg_exprs("decimal")).collect())
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "16384")
-    run("decimal_batch16k", lambda: base.agg(*agg_exprs("decimal")).collect())
-    spark.conf.set("spark.sql.parquet.columnarReaderBatchSize", "4096")
-    spark.conf.set("spark.sql.codegen.aggregate.map.twolevel.enabled", "false")
-    run("decimal_no2level", lambda: base.agg(*agg_exprs("decimal")).collect())
-    spark.conf.unset("spark.sql.codegen.aggregate.map.twolevel.enabled")
-
-    from etl_mudah_spark.session import default_parallelism
-    ddb = bench.run_duckdb(sc_dir, ["pricing_summary"], default_parallelism())
-    print(f"duckdb pricing_summary   {ddb['pricing_summary']:7.2f} s")
-    # DuckDB variants: double sums vs its decimal lattice
-    import duckdb
+def main():
+    args = ab.parser(__doc__, reps=3, factor=100).parse_args()
+    spark = get_spark("x100-decomp")
+    sc_dir = ab.staged(spark, args, ["lineitem"], **X100_LAYOUT)
     con = duckdb.connect()
     con.execute(f"SET threads TO {default_parallelism()}")
-    li_path = (
-        f"{sc_dir}/lineitem/*.parquet"
-        if os.path.isdir(f"{sc_dir}/lineitem")
-        else f"{sc_dir}/lineitem.parquet"
-    )
+    li = manifest_resolve(os.path.join(sc_dir, "lineitem.parquet"))
+    li_path = li if os.path.isfile(li) else f"{li}/*.parquet"
     con.execute(f"CREATE VIEW lineitem AS SELECT * FROM '{li_path}'")
-    dq = """
-    SELECT l_returnflag, l_linestatus, SUM(l_quantity), SUM(l_extendedprice),
-           SUM(l_extendedprice*(1-l_discount)),
-           SUM(l_extendedprice*(1-l_discount)*(1+l_tax)),
-           AVG(l_quantity), AVG(l_extendedprice), AVG(l_discount), COUNT(*)
-    FROM lineitem WHERE l_shipdate <= TIMESTAMP '1999-09-02'
-    GROUP BY l_returnflag, l_linestatus
-    """
-    run("duckdb_double_sums", lambda: con.execute(dq).fetchall())
-finally:
-    shutil.rmtree(scratch, ignore_errors=True)
-print("loadavg at end:", [round(x, 2) for x in os.getloadavg()])
+    ab.run(spark, lambda: build_phases(spark, sc_dir, con), reps=args.reps)
+    ddb = bench.run_duckdb(sc_dir, ["pricing_summary"], default_parallelism())
+    print(f"duckdb pricing_summary {ddb['pricing_summary']:7.2f} s")
+
+
+if __name__ == "__main__":
+    main()

@@ -8,9 +8,11 @@ reliable-checkpoint escape hatch (the 100 TB fault-tolerance knob).
 
 from __future__ import annotations
 
+import gc
 import glob
 import os
 import tempfile
+import time
 
 from pyspark.sql import functions as F
 
@@ -154,3 +156,24 @@ def test_materialize_once_reliable_reuses_one_checkpoint_dir(spark):
         for n in (10, 11, 12):
             assert materialize_once(spark.range(n)).count() == n
     assert len(os.listdir(ckdir)) == 1
+
+
+def test_materialize_once_reliable_checkpoints_are_cleaned(spark):
+    # The session's ContextCleaner deletes a reliable boundary's rdd-N
+    # dir once its DataFrame is unreachable; without
+    # spark.cleaner.referenceTracking.cleanCheckpoints every boundary
+    # stays on disk for the life of the application.
+    ckdir = tempfile.mkdtemp(prefix="reliable_ck_")
+    with conf_set(spark, RELIABLE_DIR_CONF, ckdir):
+        for n in range(5):
+            assert materialize_once(spark.range(10 + n)).count() == 10 + n
+
+    def left():
+        return glob.glob(os.path.join(ckdir, "*", "rdd-*"))
+
+    deadline = time.monotonic() + 60
+    while left() and time.monotonic() < deadline:
+        gc.collect()
+        spark._jvm.System.gc()
+        time.sleep(0.5)
+    assert left() == []

@@ -1,8 +1,9 @@
 """One streaming runner: streaming/pipeline.run_stream is the only place
-the engine starts a Structured Streaming query or writes the session's
-shuffle width (besides session.py, which sizes the session). The
-structural pins fail the moment a second start/drain skeleton or a
-scattered width save/restore comes back; the parametrized test holds
+the engine, bench.py and the measurement scripts start a Structured
+Streaming query or write the session's shuffle width (besides
+session.py, which sizes the session). The structural pins fail the
+moment a second start/drain skeleton or a scattered width save/restore
+comes back; the parametrized test holds
 every streaming entry point that takes ``state_partitions`` to "the
 stream runs at its state width, the session keeps its own"."""
 
@@ -19,16 +20,23 @@ import pytest
 from etl_mudah_spark.streaming import ingest, pipeline
 from tests.conftest import SF_SMOKE, conf_set
 
-PKG = Path(__file__).resolve().parent.parent / "etl_mudah_spark"
-RUNNER = ("streaming/pipeline.py", "run_stream")
+ROOT = Path(__file__).resolve().parent.parent
+RUNNER = ("etl_mudah_spark/streaming/pipeline.py", "run_stream")
+SESSION = "etl_mudah_spark/session.py"
 WIDTH = "spark.sql.shuffle.partitions"
 
 
 def _code_nodes():
-    """(relative path, enclosing top-level function or None, node) for
-    every AST node of the package."""
-    for path in sorted(PKG.rglob("*.py")):
-        rel = str(path.relative_to(PKG))
+    """(path relative to the repo, enclosing top-level function or
+    None, node) for every AST node of the package, bench.py and
+    scripts/."""
+    paths = [
+        *sorted((ROOT / "etl_mudah_spark").rglob("*.py")),
+        ROOT / "bench.py",
+        *sorted((ROOT / "scripts").glob("*.py")),
+    ]
+    for path in paths:
+        rel = str(path.relative_to(ROOT))
         tree = ast.parse(path.read_text(), filename=str(path))
         for top in tree.body:
             fn = top.name if isinstance(top, ast.FunctionDef) else None
@@ -60,7 +68,7 @@ def test_only_the_runner_and_session_write_the_shuffle_width():
             or (isinstance(node.args[0], ast.Name) and node.args[0].id == "_SHUFFLE_WIDTH")
         )
         and (rel, fn) != RUNNER
-        and rel != "session.py"
+        and rel != SESSION
     ]
     assert hits == []
 
