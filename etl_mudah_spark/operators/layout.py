@@ -317,7 +317,11 @@ def compact_files(
     import os
     import shutil
 
-    from etl_mudah_spark.operators.manifest import manifest_publish, manifest_resolve
+    from etl_mudah_spark.operators.manifest import (
+        manifest_files,
+        manifest_publish,
+        manifest_resolve,
+    )
 
     if zorder_by and sort_within_by:
         raise ValueError(
@@ -384,13 +388,8 @@ def compact_files(
             if d.startswith("_") and d != "_zonemap" and os.path.isdir(src):
                 shutil.copytree(src, os.path.join(new_dir, d))
 
-    new_dir = manifest_publish(path, write)
-    return sum(
-        1
-        for _, _, fs in os.walk(new_dir)
-        for f in fs
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
+    manifest_publish(path, write)
+    return len(manifest_files(path))
 
 
 def filtered_scan_bytes_bound(path: str, col: str, gt: float) -> int | None:
@@ -416,19 +415,11 @@ def filtered_scan_bytes_bound(path: str, col: str, gt: float) -> int | None:
     (e.g. 100 TB Q18: ~1.5% of orders is GBs), the bound says so and
     no broadcast hint is applied.
     """
-    import os
-
     import pyarrow.parquet as pq
 
-    from etl_mudah_spark.operators.manifest import manifest_resolve
+    from etl_mudah_spark.operators.manifest import manifest_files
 
-    data_path = manifest_resolve(path)
-    files = [
-        os.path.join(root, f)
-        for root, _, fs in os.walk(data_path)
-        for f in fs
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    ]
+    files = manifest_files(path)
     if not files:
         return None
     total = 0
@@ -469,17 +460,9 @@ def count_data_files(path: str) -> int:
     """Visible data files under ``path`` (manifest-aware: counts the
     LIVE version when the directory is manifest-published), the metric
     :func:`compact_maintain` acts on."""
-    import os
+    from etl_mudah_spark.operators.manifest import manifest_files
 
-    from etl_mudah_spark.operators.manifest import manifest_resolve
-
-    data_path = manifest_resolve(path)
-    return sum(
-        1
-        for _, _, fs in os.walk(data_path)
-        for f in fs
-        if not f.startswith(("_", "."))
-    )
+    return len(manifest_files(path))
 
 
 def compact_maintain(

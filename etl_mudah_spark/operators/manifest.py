@@ -69,6 +69,26 @@ def manifest_resolve(base: str) -> str:
     return manifest_current(base) or base
 
 
+def manifest_files(base: str) -> list[str]:
+    """The data files of the live version (of ``base`` itself when
+    unpublished; a single-file table is its own list), sorted, by
+    Spark's hidden-file rule: no file or directory whose name starts
+    with ``_`` or ``.`` — ``_SUCCESS``, ``.crc`` checksums,
+    ``_temporary``, an index's ``_centroids`` sidecar. The catalog's
+    footer schema and row counts, the layout's footer bounds and file
+    counts all list a table's files here."""
+    root = manifest_resolve(base)
+    if os.path.isfile(root):
+        return [root]
+    files = []
+    for dp, dirs, fs in os.walk(root):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        files.extend(
+            os.path.join(dp, f) for f in sorted(fs) if not f.startswith(("_", "."))
+        )
+    return files
+
+
 def manifest_publish(
     base: str,
     write: Callable[[str], None],

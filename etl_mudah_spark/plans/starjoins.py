@@ -312,18 +312,12 @@ def _lineitem_fingerprint(sf_dir: str) -> tuple:
     which is the cheap side of that trade."""
     import os
 
-    from etl_mudah_spark.operators.manifest import manifest_resolve
+    from etl_mudah_spark.operators.manifest import manifest_files
 
-    path = manifest_resolve(os.path.join(sf_dir, "lineitem.parquet"))
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if not f.startswith((".", "_"))
-        ]
-    else:
-        files = [path]
-    stats = [os.stat(f) for f in files]
+    stats = [
+        os.stat(f)
+        for f in manifest_files(os.path.join(sf_dir, "lineitem.parquet"))
+    ]
     return (
         len(stats),
         sum(s.st_size for s in stats),

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from etl_mudah_spark.session import default_parallelism
-from etl_mudah_spark.tables import normalize_ts, read_raw_events
+from etl_mudah_spark.tables import normalize_ts, read_parquet, read_raw_events
 
 EVENTS_SCHEMA_TEMPLATE = (
     "event_id bigint, ts {ts}, user_id bigint, event_type string, "
@@ -99,11 +99,12 @@ def run_stream(
 
 
 def _read_or_empty(spark: SparkSession, path: str, schema) -> DataFrame:
-    """Lazy read of the parquet a stream's batches appended to, or an
-    empty frame of ``schema`` when no batch wrote any."""
+    """Lazy read of the parquet a stream's batches appended to (schema
+    from its footer, no Spark job), or an empty frame of ``schema`` when
+    no batch wrote any."""
     if not os.path.exists(path):
         return spark.createDataFrame([], schema)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def state_partitions_for(
@@ -131,12 +132,12 @@ def state_partitions_for(
 def events_raw_schema(spark: SparkSession, events_path: str) -> tuple[str, str]:
     """Streaming reads need a declared schema, but the testdata's
     ``ts`` physical encoding varies by generation (see
-    tables.read_raw_events). Batch-read the footer once (driver-side,
-    metadata only) and return ``(schema_ddl, ts_dtype)`` matching the
-    file. Pins the session to UTC while here: every streaming reader
-    funnels through this, and the NTZ→LTZ normalization (plus window
-    bucketing downstream) must not depend on the host timezone — same
-    discipline as tables.load."""
+    tables.read_raw_events). Read the footer once (driver-side
+    pyarrow, no Spark job) and return ``(schema_ddl, ts_dtype)``
+    matching the file. Pins the session to UTC while here: every
+    streaming reader funnels through this, and the NTZ→LTZ
+    normalization (plus window bucketing downstream) must not depend
+    on the host timezone — same discipline as tables.load."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ts_dtype = read_raw_events(spark, events_path)[1]
     return EVENTS_SCHEMA_TEMPLATE.format(ts=ts_dtype), ts_dtype
@@ -441,7 +442,7 @@ def stream_cms_counters(
             depth,
         )
         if latest["path"] is not None:
-            prev = batch_df.sparkSession.read.parquet(latest["path"])
+            prev = read_parquet(batch_df.sparkSession, latest["path"])
             batch_counters = cms_merge_counters(prev, batch_counters, group_cols)
         batch_counters.write.mode("overwrite").parquet(out)
         latest["path"] = out
@@ -474,7 +475,7 @@ def stream_cms_counters(
             StructField("cnt", LongType()),
         ]
         return spark.createDataFrame([], StructType(fields))
-    return spark.read.parquet(latest["path"])
+    return read_parquet(spark, latest["path"])
 
 
 def stream_value_drift_bins(

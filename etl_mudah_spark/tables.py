@@ -1,22 +1,36 @@
 """Table catalog over the driver's parquet star schema.
 
-Loads are plain ``spark.read.parquet`` — Catalyst gets full pushdown
-(PushedFilters / ReadSchema reach the parquet scan). A table that
-compaction republished (operators/manifest.py) is read through its
-live version dir, resolved here once per load. Helpers mark the
-dimension tables that should broadcast in joins at any scale: region
-(5 rows), nation (25), supplier (small) are broadcast-safe even at
-100 TB fact scale because dimension cardinality grows ~log(sf).
+A load runs no Spark job. ``spark.read.parquet(path)`` without a
+schema launches one just to read a footer; here the driver reads the
+footer of the first data file of the table (``manifest_files``) with
+pyarrow and hands the schema to ``spark.read.schema(s).parquet(path)``.
+The schema is the one Spark's own inference gives: the Spark row
+metadata a Spark writer leaves in the footer when present, else the
+footer's parquet types (``isAdjustedToUTC=false`` timestamps are
+``timestamp_ntz`` under ``spark.sql.parquet.inferTimestampNTZ.enabled``,
+NANOS timestamps ``bigint`` as nanosAsLong reads them, INT96
+``timestamp``). Catalyst still gets full pushdown (PushedFilters /
+ReadSchema reach the parquet scan). A table that compaction
+republished (operators/manifest.py) is read through its live version
+dir, resolved here once per load. Helpers mark the dimension tables
+that should broadcast in joins at any scale: region (5 rows), nation
+(25), supplier (small) are broadcast-safe even at 100 TB fact scale
+because dimension cardinality grows ~log(sf).
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
-from etl_mudah_spark.operators.manifest import manifest_resolve
+from etl_mudah_spark.operators.manifest import manifest_files, manifest_resolve
 
 TABLES = (
     "region",
@@ -37,6 +51,9 @@ BROADCAST_DIMS = frozenset({"region", "nation", "supplier"})
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Key under which Spark's parquet writer stores the Spark schema JSON.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
@@ -52,7 +69,41 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df, ts_dtype = read_raw_events(spark, _path(sf_dir, name))
         return normalize_ts(df, ts_dtype)
-    return spark.read.parquet(_path(sf_dir, name))
+    return read_parquet(spark, _path(sf_dir, name))
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema taken from a footer
+    (:func:`_footer_schema`): the same DataFrame, no Spark job."""
+    return spark.read.schema(_footer_schema(spark, path)).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's parquet inference gives ``path``, read on the
+    driver from the footer of its first data file. Spark infers from one
+    file too (``mergeSchema`` off): the Spark row metadata when the file
+    has it, else its converter over the parquet types, which this maps
+    through Arrow."""
+    files = manifest_files(path)
+    if not files:
+        raise FileNotFoundError(f"no parquet data file under {path!r}")
+    md = pq.read_metadata(files[0])
+    row_metadata = (md.metadata or {}).get(_SPARK_ROW_METADATA)
+    if row_metadata is not None:
+        return StructType.fromJson(json.loads(row_metadata))
+    arrow = md.schema.to_arrow_schema()
+    physical = {
+        md.schema.column(i).path: md.schema.column(i).physical_type
+        for i in range(md.num_columns)
+    }
+    for i, field in enumerate(arrow):
+        if pa.types.is_timestamp(field.type) and field.type.unit == "ns":
+            # INT96 is a legacy instant; INT64 NANOS reads as nanosAsLong
+            int96 = physical[field.name] == "INT96"
+            ns = pa.timestamp("us", "UTC") if int96 else pa.int64()
+            arrow = arrow.set(i, field.with_type(ns))
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return from_arrow_schema(arrow, prefer_timestamp_ntz=ntz)
 
 
 def read_raw_events(
@@ -66,8 +117,9 @@ def read_raw_events(
     ``timestamp``. :func:`normalize_ts` maps the raw column to the
     session type; batch loads and stream sources share both halves."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    return df, dict(df.dtypes).get("ts")
+    schema = _footer_schema(spark, path)
+    ts = schema["ts"].dataType.simpleString() if "ts" in schema.names else None
+    return spark.read.schema(schema).parquet(path), ts
 
 
 def normalize_ts(df: DataFrame, ts_dtype: str | None) -> DataFrame:
@@ -96,11 +148,10 @@ def table_num_rows(sf_dir: str, name: str) -> int:
     their plan just to size a shortlist/sample modulus). Footer counts
     are the same numbers ``df.count()`` would return, at metadata cost:
     O(files) driver reads even at 100 TB, no executor work."""
-    import pyarrow.dataset as ds
-
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return ds.dataset(_path(sf_dir, name), format="parquet").count_rows()
+    files = manifest_files(_path(sf_dir, name))
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -18,12 +18,13 @@ exchange or write the floor ruling with numbers:
 
 E, F and G are checksum-gated against D before timing.
 
-Run:  python scripts/lsh_x10_decomp_r15.py [--reps N] [--factor F]
+Run:  python scripts/lsh_x10_decomp_r15.py [--reps N] [--factor F] [--plan-out FILE]
 """
 from __future__ import annotations
 
 import os
 import sys
+import tempfile
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _ROOT)
@@ -166,7 +167,14 @@ def build_phases(spark, sc_dir):
 
 
 def main():
-    args = ab.parser(__doc__, reps=3, factor=10).parse_args()
+    ap = ab.parser(__doc__, reps=3, factor=10)
+    ap.add_argument(
+        "--plan-out", default=None,
+        help="write the executed plan of D here (default: a file in a "
+        "temp dir; plans/r15/lsh_x10_executed_D.txt is the committed "
+        "x10 capture and is never rewritten)",
+    )
+    args = ap.parse_args()
     spark = get_spark("lsh_x10_decomp_r15")
     spark.sparkContext.setLogLevel("WARN")
     sc_dir = ab.staged(spark, args, ["embeddings"])
@@ -184,8 +192,9 @@ def main():
         "Exchange", "ArrowEvalPython", "AQEShuffleRead",
     ):
         print(f"executed D: {marker} x{ep.count(marker)}")
-    out = os.path.join(_ROOT, "plans", "r15", "lsh_x10_executed_D.txt")
-    os.makedirs(os.path.dirname(out), exist_ok=True)
+    out = args.plan_out or os.path.join(
+        tempfile.mkdtemp(prefix="lsh_x10_plan_"), "lsh_x10_executed_D.txt"
+    )
     with open(out, "w") as fh:
         fh.write(ep)
     print(f"executed plan -> {out}")
