@@ -24,6 +24,7 @@ from etl_mudah_spark.operators import sampling as smp
 from etl_mudah_spark.operators import similarity as sim
 from etl_mudah_spark.operators import text as tx
 from etl_mudah_spark.plans.registry import register
+from etl_mudah_spark.session import scratch_dir
 from etl_mudah_spark.tables import load, table_num_rows
 
 _WORDS_SQL = r"string_split_regex(trim(text), '\s+')"
@@ -312,17 +313,12 @@ def doc_stream_curation_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole streamed ledger is SQL-reproducible — the oracle
     recomputes every outcome from scratch and the driver
     hash-verifies the per-(source, outcome) accounting."""
-    import atexit
-    import shutil
-    import tempfile
-
     from etl_mudah_spark.streaming.ingest import stream_doc_curation_gate
 
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", "text", "source"
     )
-    scratch = tempfile.mkdtemp(prefix="gate_stream_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("doc_stream_curation_gate", sf_dir)
     # bootstrap an empty accepted-key index
     spark.createDataFrame([], "k string").write.parquet(f"{scratch}/keys")
     # 3 ascending doc_id shards, written SEQUENTIALLY so file-source
@@ -1611,13 +1607,8 @@ def doc_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the pairs the incremental path is responsible for; df-capped
     twin) plus a boolean asserting the index join recovers >= 80% of
     them (measured 19/19 at sf0.01)."""
-    import atexit
-    import shutil
-    import tempfile
-
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    scratch = tempfile.mkdtemp(prefix="mh_index_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("doc_minhash_incremental", sf_dir)
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     batch = docs.where(F.col("doc_id") % 2 == 1)
     dd.minhash_index_build(corpus, scratch)
@@ -1665,15 +1656,10 @@ def doc_stream_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     is codegen-heavy and recompiles per micro-batch, so the registered
     smoke keeps the per-batch fixed cost low; batch count is a harness
     parameter, not a semantic one."""
-    import atexit
-    import shutil
-    import tempfile
-
     from etl_mudah_spark.streaming.ingest import stream_minhash_dedup_ingest
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    scratch = tempfile.mkdtemp(prefix="mh_stream_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("doc_stream_minhash_ingest", sf_dir)
     corpus = docs.where(F.col("doc_id") % 2 == 0)
     batch = docs.where(F.col("doc_id") % 2 == 1)
     idx = f"{scratch}/idx"
@@ -2782,14 +2768,9 @@ def ann_filtered_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``recall_ok`` asserting the indexed path recovered >=
     {ANN_IDX_MIN_HITS_AT_10} of them (floors measured across sf dirs —
     see constant above)."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
     probe = sim.probe_row(emb)
-    scratch = tempfile.mkdtemp(prefix="ivf_index_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("ann_filtered_indexed", sf_dir)
     sim.ivf_build_index(emb, scratch, n_cells=16)
     approx = sim.ivf_query_index_df(
         spark,
@@ -2833,15 +2814,10 @@ def ann_ivfpq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (DuckDB twin) with ``recall_ok`` at the shared indexed floor
     (measured hits@10 with n_probe=10: 9 / 9 / 8 at
     sf0.001/0.01/0.1)."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
     probe = sim.probe_row(emb)
     n = table_num_rows(sf_dir, "embeddings")  # footer metadata, no job
-    scratch = tempfile.mkdtemp(prefix="ivfpq_index_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("ann_ivfpq_filtered_topk", sf_dir)
     sim.ivfpq_build_index(
         emb,
         scratch,
@@ -2912,16 +2888,11 @@ def emb_srp_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same (b, t) the one-shot LSH query auto-tunes to. Orientation
     is normalized (least/greatest + distinct) because an overlapping
     ingest can reach a pair in both directions."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 10 != 0)
     batch = emb.where(F.col("vec_id") % 10 == 0)
     b, t = sim.srp_params(SRP_INCR_THRESHOLD, 0.95, max_tables=96)
-    scratch = tempfile.mkdtemp(prefix="srp_incr_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("emb_srp_incremental_dedup", sf_dir)
     sim.srp_index_build(
         base, scratch, dim=EMB_DIM, n_planes=b, n_tables=t
     )
@@ -2988,18 +2959,13 @@ def emb_stream_srp_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity_batch.py), so the same recall-vs-exact
     oracle verifies it. 4 micro-batches here; batch count is a
     harness parameter, not a semantic one."""
-    import atexit
-    import shutil
-    import tempfile
-
     from etl_mudah_spark.streaming.ingest import stream_srp_dedup_ingest
 
     emb = load(spark, sf_dir, "embeddings")
     base = emb.where(F.col("vec_id") % 10 != 0)
     batch = emb.where(F.col("vec_id") % 10 == 0)
     b, t = sim.srp_params(SRP_INCR_THRESHOLD, 0.95, max_tables=96)
-    scratch = tempfile.mkdtemp(prefix="srp_stream_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("emb_stream_srp_ingest", sf_dir)
     idx = f"{scratch}/idx"
     sim.srp_index_build(base, idx, dim=EMB_DIM, n_planes=b, n_tables=t)
     # 4 deterministic range shards = 4 micro-batches (maxFilesPerTrigger=1)
@@ -3153,17 +3119,12 @@ def ann_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     comes from parquet footer metadata (tables.table_num_rows), not a
     Spark count() — the only actions this constructor triggers are the
     index builds themselves (VERDICT r10 items 5/6)."""
-    import atexit
-    import shutil
-    import tempfile
     from functools import reduce
 
     emb = load(spark, sf_dir, "embeddings")
     n = table_num_rows(sf_dir, "embeddings")
-    ivf_dir = tempfile.mkdtemp(prefix="recall_ivf_")
-    pq_dir = tempfile.mkdtemp(prefix="recall_ivfpq_")
-    for d in (ivf_dir, pq_dir):
-        atexit.register(shutil.rmtree, d, ignore_errors=True)
+    scratch = scratch_dir("ann_recall_at_k", sf_dir)
+    ivf_dir, pq_dir = f"{scratch}/ivf", f"{scratch}/ivfpq"
     sim.ivf_build_index(emb, ivf_dir, n_cells=16)
     sim.ivfpq_build_index(
         emb, pq_dir, n_cells=16, m=8, k=64, sample_mod=max(1, n // 8192)
@@ -3289,10 +3250,6 @@ def ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     and ``maintain_noop`` (same-distribution appends keep the
     occupancy ratio under the bound, so the policy correctly does NOT
     rebuild — drift detection, not drift paranoia)."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
     # Corpus size from parquet footer metadata — no Spark count() while
     # constructing the plan (VERDICT r10 item 6). The base-slice size
@@ -3300,8 +3257,7 @@ def ann_ivfpq_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     # PQ sampler already relies on (pq_train_codebooks docstring):
     # |vec_id % 5 == 0| = ceil(n/5).
     n = table_num_rows(sf_dir, "embeddings")
-    scratch = tempfile.mkdtemp(prefix="ivfpq_maint_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("ann_ivfpq_maintained", sf_dir)
     base = emb.where(F.col("vec_id") % 5 != 0)
     batch = emb.where(F.col("vec_id") % 5 == 0)
     nb = n - (n + 4) // 5
@@ -3430,15 +3386,10 @@ def ann_pq_filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver rows: exact filtered top-10 (DuckDB twin) + ``recall_ok``
     floor {ANN_PQ_IDX_MIN_HITS_AT_10}/10 (measured 10/10 across sf
     dirs — see constant above)."""
-    import atexit
-    import shutil
-    import tempfile
-
     emb = load(spark, sf_dir, "embeddings")
     probe = sim.probe_row(emb)
     n = table_num_rows(sf_dir, "embeddings")  # footer metadata, no job
-    scratch = tempfile.mkdtemp(prefix="pq_index_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("ann_pq_filtered_topk", sf_dir)
     sim.pq_build_index(
         emb, scratch, m=8, k=64, keep_cols=["label"],
         sample_mod=max(1, n // 8192),

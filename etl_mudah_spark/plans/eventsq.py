@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from etl_mudah_spark.functions.core import dsum, oracle_dsum
 from etl_mudah_spark.plans.registry import register
+from etl_mudah_spark.session import scratch_dir
 from etl_mudah_spark.streaming.pipeline import (
     stream_dedup_events,
     stream_enrich_events,
@@ -353,15 +354,10 @@ def events_daily_users_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (recomputed from events — verification harness, not the scale
     path) plus ``hll_ok`` asserting the rolled-up estimate lands within
     HLL_REL_ERR of it."""
-    import atexit
-    import shutil
-    import tempfile
-
     from etl_mudah_spark.operators import rollup as ru
 
     events = load(spark, sf_dir, "events")
-    scratch = tempfile.mkdtemp(prefix="hll_rollup_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("events_daily_users_rollup", sf_dir)
     ru.build_sketch_table(events, scratch, grain="hour")
     daily = ru.rollup_distinct(spark, scratch, grain="day")
     return _daily_rollup_invariant(daily, events)

@@ -42,7 +42,8 @@ from etl_mudah_spark.operators.ckpt import materialize_once as _materialize_once
 from etl_mudah_spark.operators import text as tx
 from etl_mudah_spark.operators.similarity import as_double
 from etl_mudah_spark.plans.registry import register
-from etl_mudah_spark.tables import load, table_num_rows
+from etl_mudah_spark.session import scratch_dir
+from etl_mudah_spark.tables import load, read_parquet, table_num_rows
 
 _WORDS_SQL = r"string_split_regex(trim(text), '\s+')"
 
@@ -2055,10 +2056,6 @@ def corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     table is PUBLISHED via operators/manifest.py (atomic version-dir
     flip) and read back — what a downstream loader would read is what
     the oracle verifies."""
-    import atexit
-    import shutil
-    import tempfile
-
     from etl_mudah_spark.operators import bpe
     from etl_mudah_spark.operators import decontam as dc
     from etl_mudah_spark.operators import dedup as dd
@@ -2066,8 +2063,7 @@ def corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_mudah_spark.operators import manifest as mfst
     from etl_mudah_spark.plans import datapipe as dp
 
-    scratch = tempfile.mkdtemp(prefix="corpus_prep_")
-    atexit.register(shutil.rmtree, scratch, ignore_errors=True)
+    scratch = scratch_dir("corpus_prep_e2e", sf_dir)
 
     def stage(df: DataFrame, name: str) -> DataFrame:
         """Materialize a stage boundary: write the stage output, read
@@ -2079,7 +2075,7 @@ def corpus_prep_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
         ~20 s staged at sf0.01 for identical results)."""
         path = f"{scratch}/{name}"
         df.write.parquet(path)
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
 
     docs = load(spark, sf_dir, "documents").select("doc_id", "source", "text")
     q = (

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from etl_mudah_spark.functions.core import dsum, oracle_dsum
 from etl_mudah_spark.operators import sketch as sk
 from etl_mudah_spark.plans.registry import register
+from etl_mudah_spark.session import scratch_dir
 from etl_mudah_spark.tables import load
 
 
@@ -572,10 +573,8 @@ def lineitem_zone_pruned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries' scratch builds); production would stage once and serve
     many range queries off the sidecar.
     """
-    import tempfile
-
     li = load(spark, sf_dir, "lineitem")
-    scratch = tempfile.mkdtemp(prefix="zonemap_") + "/lineitem"
+    scratch = scratch_dir("lineitem_zone_pruned_revenue", sf_dir) + "/lineitem"
     from etl_mudah_spark.operators import layout as ly
 
     ly.write_range_clustered(li, scratch, "l_shipdate", n_files=16)

@@ -12,13 +12,30 @@ is correct on local[N] test runs and on a large cluster:
 The reference app has no session concept — its "engine config" is
 scattered across a Postgres connection and Streamlit caches
 (reference: streamlit/utils/data_loader.py:6-15). Here it is explicit.
+
+It also owns the engine's scratch space (:func:`scratch_dir`): every
+dir a builder stages into (stream drains, index builds, rollups, layout
+stagings) lives under ONE driver-local root per process, made by
+``tempfile.mkdtemp(prefix="etl_mudah_")`` on first use and removed at
+interpreter exit. A builder's new scratch replaces its previous one: a
+returned DataFrame that reads scratch stays valid until the next call
+by the same owner over the same source dir.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
 from pyspark.sql import SparkSession
+
+_SCRATCH_LOCK = threading.Lock()
+_SCRATCH_ROOT: str | None = None
+# (owner, sf_dir) -> the dir scratch_dir last returned for it
+_SCRATCH_DIRS: dict[tuple[str, str], str] = {}
 
 
 def default_parallelism() -> int:
@@ -91,3 +108,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def scratch_dir(owner: str, sf_dir: str) -> str:
+    """A fresh, empty dir for ``owner`` over ``sf_dir`` under the
+    process's scratch root (made on first call, removed at interpreter
+    exit), after removing the dir this ``(owner, sf_dir)`` got last.
+
+    Lifetime rule: a DataFrame that lazily reads scratch stays valid
+    until the next call by the same owner over the same ``sf_dir``, so
+    collect or write it before asking its builder again. The owner is
+    the public builder or registered query that returns the DataFrame;
+    two owners, or one owner over two source dirs, never invalidate
+    each other's results.
+    """
+    global _SCRATCH_ROOT
+    with _SCRATCH_LOCK:
+        if _SCRATCH_ROOT is None:
+            _SCRATCH_ROOT = tempfile.mkdtemp(prefix="etl_mudah_")
+            atexit.register(shutil.rmtree, _SCRATCH_ROOT, ignore_errors=True)
+        prev = _SCRATCH_DIRS.pop((owner, sf_dir), None)
+        if prev is not None:
+            shutil.rmtree(prev, ignore_errors=True)
+        path = tempfile.mkdtemp(prefix=f"{owner}_", dir=_SCRATCH_ROOT)
+        _SCRATCH_DIRS[(owner, sf_dir)] = path
+        return path

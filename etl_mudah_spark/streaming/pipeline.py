@@ -19,19 +19,17 @@ different source — that is the point of Structured Streaming).
 
 from __future__ import annotations
 
-import atexit
 import contextlib
 import datetime
 import glob
 import os
 import shutil
-import tempfile
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_mudah_spark.session import default_parallelism
+from etl_mudah_spark.session import default_parallelism, scratch_dir
 from etl_mudah_spark.tables import normalize_ts, read_parquet, read_raw_events
 
 EVENTS_SCHEMA_TEMPLATE = (
@@ -143,10 +141,17 @@ def events_raw_schema(spark: SparkSession, events_path: str) -> tuple[str, str]:
     return EVENTS_SCHEMA_TEMPLATE.format(ts=ts_dtype), ts_dtype
 
 
-def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> DataFrame:
+def _drain(
+    stream_df: DataFrame,
+    spark: SparkSession,
+    mode: str,
+    scratch: str,
+    state_partitions: int | None = None,
+) -> DataFrame:
     """Run a bounded stream to completion, staging micro-batch output to
-    parquet via ``foreachBatch``, and return a lazy batch read of the
-    staged files.
+    parquet under ``scratch`` (the calling builder's :func:`scratch_dir`)
+    via ``foreachBatch``, and return a lazy batch read of the staged
+    files.
 
     This is the scale-safe hand-off from a finished stream to batch
     consumers: the driver only ever holds a path — output lands as
@@ -154,27 +159,11 @@ def drain_to_parquet(stream_df: DataFrame, spark: SparkSession, mode: str) -> Da
     ``collect`` is O(result) driver memory, which for e.g. sessionization
     output is O(users × sessions)). ``complete`` mode overwrites the
     staging dir each micro-batch (last batch = full result); ``append``
-    mode accumulates per-batch files. The state width is the core count
-    (:func:`_drain` takes a builder's ``state_partitions``).
-    """
-    return _drain(stream_df, spark, mode)
-
-
-def _drain(
-    stream_df: DataFrame,
-    spark: SparkSession,
-    mode: str,
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """:func:`drain_to_parquet` at the event-stream builders' state
-    width: ``state_partitions`` (size it to state volume — see
-    :func:`state_partitions_for`, the measured §13 rule worth 2.4x on
-    the per-trigger floor at dashboard-sized state) or the core count."""
-    out_dir = tempfile.mkdtemp(prefix="stream_stage_")
-    # The returned DataFrame lazily references these files, so they must
-    # outlive this call; reclaim them at interpreter exit instead.
-    atexit.register(shutil.rmtree, out_dir, ignore_errors=True)
-    path = os.path.join(out_dir, "result")
+    mode accumulates per-batch files. ``state_partitions`` is the state
+    width (size it to state volume — see :func:`state_partitions_for`,
+    the measured §13 rule worth 2.4x on the per-trigger floor at
+    dashboard-sized state); default the core count."""
+    path = os.path.join(scratch, "result")
     write_mode = "overwrite" if mode == "complete" else "append"
 
     def sink(batch_df: DataFrame, _batch_id: int) -> None:
@@ -192,7 +181,7 @@ def _drain(
 
 @contextlib.contextmanager
 def _sentinel_stream(
-    spark: SparkSession, sf_dir: str, prefix: str
+    spark: SparkSession, sf_dir: str, scratch: str
 ) -> Iterator[DataFrame]:
     """The events stream followed by two far-future sentinel files, one
     file per trigger, ``ts`` normalized. Stateful queries that emit
@@ -203,11 +192,13 @@ def _sentinel_stream(
     strictly increasing mtimes; they are written in the SAME ts
     encoding as the source file so one declared stream schema covers
     all staged files, and carry ``user_id = _SENTINEL_USER``. The
-    staging dir is removed when the block exits, so drain inside it."""
+    staging dir under the caller's ``scratch`` is removed when the
+    block exits, so drain inside it."""
     ddl, ts_dtype = events_raw_schema(
         spark, os.path.join(sf_dir, "events.parquet")
     )
-    staging = tempfile.mkdtemp(prefix=prefix)
+    staging = os.path.join(scratch, "events")
+    os.makedirs(staging)
     try:
         dst = os.path.join(staging, "000_events.parquet")
         shutil.copyfile(os.path.join(sf_dir, "events.parquet"), dst)
@@ -278,7 +269,8 @@ def stream_hourly_event_counts(
         )
         .select(F.col("w.start").alias("hour_start"), "event_type", "cnt", "total_value")
     )
-    return _drain(agg, spark, "complete", state_partitions)
+    scratch = scratch_dir("stream_hourly_event_counts", sf_dir)
+    return _drain(agg, spark, "complete", scratch, state_partitions)
 
 
 def stream_dedup_events(
@@ -291,7 +283,8 @@ def stream_dedup_events(
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark(["event_id"])
     )
-    result = _drain(deduped, spark, "append", state_partitions)
+    scratch = scratch_dir("stream_dedup_events", sf_dir)
+    result = _drain(deduped, spark, "append", scratch, state_partitions)
     return result.groupBy("event_type").agg(F.count("*").alias("cnt"))
 
 
@@ -329,7 +322,8 @@ def stream_view_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
     )
-    result = _drain(joined, spark, "append")
+    scratch = scratch_dir("stream_view_purchase_join", sf_dir)
+    result = _drain(joined, spark, "append", scratch)
     # one row per attributed (view, purchase) pair -> distinct purchases
     # per user (a purchase may match several prior views)
     return (
@@ -365,7 +359,7 @@ def stream_enrich_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
     )
-    return _drain(agg, spark, "complete")
+    return _drain(agg, spark, "complete", scratch_dir("stream_enrich_events", sf_dir))
 
 
 def stream_hourly_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -385,7 +379,8 @@ def stream_hourly_user_sketches(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("events"),
         )
     )
-    return _drain(agg, spark, "complete")
+    scratch = scratch_dir("stream_hourly_user_sketches", sf_dir)
+    return _drain(agg, spark, "complete", scratch)
 
 
 def stream_cms_counters(
@@ -420,8 +415,7 @@ def stream_cms_counters(
         cms_merge_counters,
     )
 
-    state_root = tempfile.mkdtemp(prefix="stream_cms_")
-    atexit.register(shutil.rmtree, state_root, ignore_errors=True)
+    state_root = scratch_dir("stream_cms_counters", sf_dir)
     latest: dict[str, str | None] = {"path": None}
 
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -501,13 +495,15 @@ def stream_value_drift_bins(
     """
     from etl_mudah_spark.operators.drift import psi_from_counts
 
-    wide = _stream_side_bin_counts(spark, sf_dir, split_ts, lo, width, n_bins)
+    scratch = scratch_dir("stream_value_drift_bins", sf_dir)
+    wide = _stream_side_bin_counts(spark, sf_dir, scratch, split_ts, lo, width, n_bins)
     return psi_from_counts(wide, n_bins)
 
 
 def _stream_side_bin_counts(
     spark: SparkSession,
     sf_dir: str,
+    scratch: str,
     split_ts: str,
     lo: float,
     width: float,
@@ -516,7 +512,8 @@ def _stream_side_bin_counts(
     """The shared streaming drift front end: run the event stream into
     (side, bin) running counts — constant-size complete-mode state —
     and drain them to the wide ``(bin, ref_cnt, cur_cnt)`` relation
-    both drift finishers (PSI terms, binned KS) consume."""
+    both drift finishers (PSI terms, binned KS) consume. ``scratch`` is
+    the public caller's: one front end, two owners."""
     from etl_mudah_spark.operators.drift import fixed_bin
 
     split = F.lit(split_ts).cast("timestamp")
@@ -531,7 +528,7 @@ def _stream_side_bin_counts(
         )
         .agg(F.count("*").alias("cnt"))
     )
-    counts = _drain(binned, spark, "complete")
+    counts = _drain(binned, spark, "complete", scratch)
     return (
         counts.groupBy("bin")
         .agg(
@@ -562,7 +559,8 @@ def stream_value_ks_binned(
     events_value_ks_drift reports the unbinned exact statistic)."""
     from etl_mudah_spark.operators.drift import ks_binned_from_counts
 
-    wide = _stream_side_bin_counts(spark, sf_dir, split_ts, lo, width, n_bins)
+    scratch = scratch_dir("stream_value_ks_binned", sf_dir)
+    wide = _stream_side_bin_counts(spark, sf_dir, scratch, split_ts, lo, width, n_bins)
     return ks_binned_from_counts(wide, n_bins)
 
 
@@ -594,7 +592,8 @@ def stream_value_quantile_sketch(
         )
         .agg(F.count("*").cast("bigint").alias("cnt"))
     )
-    counters = _drain(binned, spark, "complete")
+    scratch = scratch_dir("stream_value_quantile_sketch", sf_dir)
+    counters = _drain(binned, spark, "complete", scratch)
     return histogram_quantiles(
         counters, lo=lo, width=width, quantiles=((1, 2), (19, 20), (99, 100))
     )
@@ -617,7 +616,8 @@ def stream_sliding_5min_counts(
     watermark past every real window, and land in windows 10+ days
     away from the data, which the caller filters by a literal cutoff.
     """
-    with _sentinel_stream(spark, sf_dir, "sliding_peak_") as raw:
+    scratch = scratch_dir("stream_sliding_5min_counts", sf_dir)
+    with _sentinel_stream(spark, sf_dir, scratch) as raw:
         agg = (
             raw.where(F.col("ts").isNotNull())
             .withWatermark("ts", "10 minutes")
@@ -629,4 +629,4 @@ def stream_sliding_5min_counts(
                 "n_events",
             )
         )
-        return _drain(agg, spark, "append", state_partitions)
+        return _drain(agg, spark, "append", scratch, state_partitions)

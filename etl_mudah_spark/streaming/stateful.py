@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from etl_mudah_spark.session import scratch_dir
 from etl_mudah_spark.streaming.pipeline import (
     _SENTINEL_USER,
     _drain,
@@ -124,7 +125,8 @@ def stream_sessionize_native(
     directly, keeping the output identical to the stateful operator
     and the batch lag-window oracle.
     """
-    with _sentinel_stream(spark, sf_dir, "sessionize_native_") as raw:
+    scratch = scratch_dir("stream_sessionize_native", sf_dir)
+    with _sentinel_stream(spark, sf_dir, scratch) as raw:
         sessions = (
             raw.withWatermark("ts", "0 seconds")
             .groupBy("user_id", F.session_window("ts", f"{gap_minutes} minutes"))
@@ -135,7 +137,7 @@ def stream_sessionize_native(
             )
             .select("user_id", "session_start", "session_end", "n_events")
         )
-        out = _drain(sessions, spark, "append")
+        out = _drain(sessions, spark, "append", scratch)
     return out.where(F.col("user_id") != _SENTINEL_USER)
 
 
@@ -145,7 +147,8 @@ def stream_sessionize_stateful(
     """Per-session rows (user_id, session_start, session_end, n_events)
     computed by a stateful streaming query; equals the batch lag-window
     sessionization on the same data."""
-    with _sentinel_stream(spark, sf_dir, "sessionize_") as raw:
+    scratch = scratch_dir("stream_sessionize_stateful", sf_dir)
+    with _sentinel_stream(spark, sf_dir, scratch) as raw:
         sessions = (
             raw.withWatermark("ts", "0 seconds")
             .groupBy("user_id")
@@ -160,7 +163,7 @@ def stream_sessionize_stateful(
         # Stage to parquet (executor-parallel) and return a lazy read:
         # session output is O(users × sessions) — collecting it through
         # the driver is the one thing this path must never do at scale.
-        out = _drain(sessions, spark, "append")
+        out = _drain(sessions, spark, "append", scratch)
     return out.where(F.col("user_id") != _SENTINEL_USER)
 
 
@@ -186,7 +189,8 @@ def stream_unconverted_views(
     from one side would stall it; sentinel rows join only each other
     (same user, same ts) and are dropped by the final user filter.
     """
-    with _sentinel_stream(spark, sf_dir, "unconverted_") as raw:
+    scratch = scratch_dir("stream_unconverted_views", sf_dir)
+    with _sentinel_stream(spark, sf_dir, scratch) as raw:
         views = (
             raw.where(F.col("event_type").isin("view", "sentinel"))
             .select(
@@ -226,7 +230,7 @@ def stream_unconverted_views(
         # state flush (observed as undercounted users when both
         # filters ran pre-drain).
         unconverted = joined.where(F.col("p_id").isNull())
-        result = _drain(unconverted, spark, "append")
+        result = _drain(unconverted, spark, "append", scratch)
     return (
         result.where(F.col("v_user") != _SENTINEL_USER)
         .groupBy(F.col("v_user").alias("user_id"))

@@ -171,8 +171,8 @@ def main():
     ap.add_argument(
         "--plan-out", default=None,
         help="write the executed plan of D here (default: a file in a "
-        "temp dir; plans/r15/lsh_x10_executed_D.txt is the committed "
-        "x10 capture and is never rewritten)",
+        "temp dir; the x10 capture BASELINE.md section 27 cites is kept "
+        "in git history and is never rewritten)",
     )
     args = ap.parse_args()
     spark = get_spark("lsh_x10_decomp_r15")

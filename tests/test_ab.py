@@ -11,6 +11,7 @@ from __future__ import annotations
 import ast
 import importlib
 import os
+import re
 import sys
 from pathlib import Path
 
@@ -18,7 +19,8 @@ import pytest
 
 from scripts import ab
 
-SCRIPTS = sorted((Path(__file__).resolve().parent.parent / "scripts").glob("*.py"))
+REPO = Path(__file__).resolve().parent.parent
+SCRIPTS = sorted((REPO / "scripts").glob("*.py"))
 TIMERS = {("time", "perf_counter"), ("time", "time"), ("statistics", "median")}
 # progress timers, not measurements
 TIMER_ALLOWED = {
@@ -51,6 +53,26 @@ def test_only_ab_times_reps():
         for hit in _timer_uses(path)
     ]
     assert hits == []
+
+
+def _names_plans_path(text: str) -> bool:
+    """A path under the repo-root ``plans/`` (the package's
+    ``etl_mudah_spark/plans/`` is not one)."""
+    return text == "plans" or re.search(r"(?<![\w/.])plans/", text) is not None
+
+
+def test_no_script_names_a_path_under_plans():
+    hits = [
+        f"{path.name}:{node.lineno}"
+        for path in [*SCRIPTS, REPO / "bench.py"]
+        for node in ast.walk(ast.parse(path.read_text(), filename=str(path)))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and _names_plans_path(node.value)
+    ]
+    assert hits == []
+    assert _names_plans_path("plans/r15/x.txt")
+    assert not _names_plans_path("etl_mudah_spark/plans/datapipe.py")
 
 
 def test_gate_names_every_variant_on_mismatch(spark):

@@ -413,15 +413,20 @@ def test_big_orders_preagg_reuses_rollup_scratch(spark):
     maintained layout table — repeated invocation in one session must
     reuse one scratch rollup, not leak a dir per call."""
     import glob
-    import tempfile
+    import os
 
-    pat = tempfile.gettempdir() + "/preagg_q18_*"
+    from etl_mudah_spark import session
+
+    def owned():
+        root = session._SCRATCH_ROOT or ""
+        return set(glob.glob(os.path.join(root, "big_orders_preagg_*")))
+
     fn = registry.REGISTRY["big_orders_preagg"].spark_fn
-    before = set(glob.glob(pat))
+    before = owned()
     r1 = fn(spark, SF_SMOKE).collect()
-    mid = set(glob.glob(pat)) - before
+    mid = owned() - before
     r2 = fn(spark, SF_SMOKE).collect()
-    after = set(glob.glob(pat)) - before
+    after = owned() - before
     # <= 1: an earlier test in the same session may already have
     # populated the per-(application, sf_dir) cache — then BOTH calls
     # reuse it and stage nothing, which is exactly the contract.
@@ -448,6 +453,7 @@ def test_q18_rollup_cache_invalidates_on_restage(spark, tmp_path):
     fn = registry.REGISTRY["big_orders_preagg"].spark_fn
     r1 = fn(spark, sf).collect()
     fp1 = sj._lineitem_fingerprint(sf)
+    _, stale = sj._q18_rollup(spark, sf)
 
     # restage: halve lineitem in place (same path, new content)
     li = spark.read.parquet(f"{sf}/lineitem.parquet")
@@ -462,3 +468,7 @@ def test_q18_rollup_cache_invalidates_on_restage(spark, tmp_path):
     want = registry.REGISTRY["big_orders"].spark_fn(spark, sf).collect()
     assert r2 == want
     assert r1 != r2, "halved lineitem must change the top-20"
+    _, fresh = sj._q18_rollup(spark, sf)
+    assert fresh != stale and not os.path.exists(stale), (
+        "the rebuild must remove the stale rollup"
+    )
